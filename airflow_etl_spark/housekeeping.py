@@ -148,8 +148,7 @@ def data_housekeeping_dag(
         )
         prev = "rebase_matviews"
     tasks.append(Task("end", depends_on=[prev]))
-    kw = {"sleep_fn": sleep_fn} if sleep_fn else {}
-    return DagRunner(DATA_DAG_ID, tasks, **kw)
+    return DagRunner(DATA_DAG_ID, tasks, sleep_fn=sleep_fn)
 
 
 MOR_DAG_ID = "07__housekeeping__mor_deletes"
@@ -190,8 +189,7 @@ def mor_maintenance_dag(
         Task(MOR_TASK_ID, fn=fold_all, depends_on=["start"], retries=1),
         Task("end", depends_on=[MOR_TASK_ID]),
     ]
-    kw = {"sleep_fn": sleep_fn} if sleep_fn else {}
-    return DagRunner(MOR_DAG_ID, tasks, **kw)
+    return DagRunner(MOR_DAG_ID, tasks, sleep_fn=sleep_fn)
 
 
 UNUSED_DAG_ID = "06__housekeeping__unused"
@@ -251,8 +249,7 @@ def unused_file_dag(
         Task("execute_gc", fn=execute_gc, depends_on=["plan_gc"]),
         Task("end", depends_on=["execute_gc"]),
     ]
-    kw = {"sleep_fn": sleep_fn} if sleep_fn else {}
-    return DagRunner(UNUSED_DAG_ID, tasks, **kw)
+    return DagRunner(UNUSED_DAG_ID, tasks, sleep_fn=sleep_fn)
 
 
 def metadata_housekeeping_dag(
@@ -295,5 +292,4 @@ def metadata_housekeeping_dag(
             trigger_rule="all_done",
         ),
     ]
-    kw = {"sleep_fn": sleep_fn} if sleep_fn else {}
-    return DagRunner(META_DAG_ID, tasks, **kw)
+    return DagRunner(META_DAG_ID, tasks, sleep_fn=sleep_fn)

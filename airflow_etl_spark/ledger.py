@@ -76,6 +76,35 @@ def _arrow_table(rows: list[tuple], schema: str):
     return pa.Table.from_arrays(arrays, schema=pa.schema(fields))
 
 
+def _pick_next_date(dates: DataFrame) -> str | None:
+    """The queue-pick query (utlis/etl_manager.py:48-53: WHERE
+    holiday_flag = 0 AND status IS NULL ORDER BY etl_date LIMIT 1)."""
+    picked = first_by(
+        dates.filter((F.col("holiday_flag") == 0) & F.col("status").isNull()),
+        ["etl_date"],
+    ).collect()
+    return picked[0].etl_date if picked else None
+
+
+def _commit_date_status(
+    dates: DataFrame, path: str, etl_date: str, status: str
+) -> None:
+    """UPDATE etl_dates SET status, current_date_flag
+    (utlis/etl_manager.py:319-337). The caller holds the table flock."""
+    from .sources import txn
+
+    is_date = F.col("etl_date") == etl_date
+    out = dates.withColumn(
+        "status", F.when(is_date, F.lit(status)).otherwise(F.col("status"))
+    ).withColumn(
+        "current_date_flag", F.when(is_date, F.lit(1)).otherwise(F.lit(0))
+    )
+    # keep_versions=4 on hot control tables: claim/mark commits can land
+    # in quick succession from a second driver, and a reader pinned to an
+    # older manifest must still find its files
+    txn._commit_locked(out, path, keep_versions=4)
+
+
 class Ledger:
     """Parquet-backed control tables under `warehouse_dir`."""
 
@@ -141,15 +170,9 @@ class Ledger:
         )
 
     def next_etl_date(self) -> str | None:
-        """Earliest non-holiday, not-yet-processed date
-        (utlis/etl_manager.py:48-53: WHERE holiday_flag = 0 AND status IS
-        NULL ORDER BY etl_date LIMIT 1)."""
-        df = self.read("etl_dates", ETL_DATES_SCHEMA)
-        picked = first_by(
-            df.filter((F.col("holiday_flag") == 0) & F.col("status").isNull()),
-            ["etl_date"],
-        ).collect()
-        return picked[0].etl_date if picked else None
+        """Earliest non-holiday, not-yet-processed date (read only; see
+        claim_next_date to take it)."""
+        return _pick_next_date(self.read("etl_dates", ETL_DATES_SCHEMA))
 
     def claim_next_date(self) -> str | None:
         """Atomically pick the next unprocessed date AND mark it 'running'
@@ -164,35 +187,13 @@ class Ledger:
             if not txn.table_exists(path):
                 return None
             df = txn.read(self.spark, path)
-            picked = first_by(
-                df.filter(
-                    (F.col("holiday_flag") == 0) & F.col("status").isNull()
-                ),
-                ["etl_date"],
-            ).collect()
-            if not picked:
-                return None
-            etl_date = picked[0].etl_date
-            out = df.withColumn(
-                "status",
-                F.when(
-                    F.col("etl_date") == etl_date, F.lit("running")
-                ).otherwise(F.col("status")),
-            ).withColumn(
-                "current_date_flag",
-                F.when(F.col("etl_date") == etl_date, F.lit(1)).otherwise(
-                    F.lit(0)
-                ),
-            )
-            # keep_versions=4 on hot control tables: claim/mark commits can
-            # land in quick succession from a second driver, and a reader
-            # pinned to an older manifest must still find its files
-            txn._commit_locked(out, path, keep_versions=4)
+            etl_date = _pick_next_date(df)
+            if etl_date is not None:
+                _commit_date_status(df, path, etl_date, "running")
             return etl_date
 
     def mark_date(self, etl_date: str, status: str) -> None:
-        """UPDATE etl_dates SET status, current_date_flag
-        (utlis/etl_manager.py:319-337).
+        """Set one date's status and make it the current date.
 
         The whole read→transform→commit holds the table flock: two driver
         PROCESSES marking different dates would otherwise interleave
@@ -207,16 +208,7 @@ class Ledger:
                 if txn.table_exists(path)
                 else self.spark.createDataFrame([], ETL_DATES_SCHEMA)
             )
-            out = df.withColumn(
-                "status",
-                F.when(F.col("etl_date") == etl_date, F.lit(status)).otherwise(
-                    F.col("status")
-                ),
-            ).withColumn(
-                "current_date_flag",
-                F.when(F.col("etl_date") == etl_date, F.lit(1)).otherwise(F.lit(0)),
-            )
-            txn._commit_locked(out, path, keep_versions=4)
+            _commit_date_status(df, path, etl_date, status)
 
     # -- run protocol ------------------------------------------------------
     def start_run(

@@ -30,10 +30,9 @@ from pyspark.sql import SparkSession, functions as F
 from . import vault
 from .ledger import Ledger
 from .operators import drift
-from .operators.core import anti_new
 from .operators.checks import PipelineStateError
 from .sources import parquet_table_exists, read_table, safe_overwrite
-from .workflow import DagRunner, RunContext, Task
+from .workflow import DagRunner, RunContext, Task, all_green
 
 
 @dataclass
@@ -99,14 +98,12 @@ class Pipeline:
         satellite_buckets: int = 32,
         catalog=None,
     ):
-        import time as _time
-
         self.spark = spark
         self.warehouse = warehouse_dir
         self.sources = sources
         self.multi = multi
         self.sf_dir = sf_dir
-        self._sleep_fn = sleep_fn or _time.sleep  # injectable for tests (C8)
+        self._sleep_fn = sleep_fn  # injectable for tests (C8); None = time.sleep
         # satellite_buckets > 0 → copy-on-write satellites partitioned (in
         # manifest metadata, txn.replace_partitions) by a key-hash bucket:
         # a load rewrites ONLY partitions containing new/changed/retired
@@ -142,6 +139,11 @@ class Pipeline:
     def _read(self, schema: str, table: str):
         return read_table(self.spark, self._tpath(schema, table))
 
+    def _source(self, table: str):
+        """A live source table. Read fresh on every call: sf_dir moves per
+        date and sources are rewritten in place."""
+        return self.spark.read.parquet(f"{self.sf_dir}/{table}.parquet")
+
     def _checkpoint(self, run_id: str, name: str, schema: str,
                     source_name: str, etl_date: str) -> None:
         """Per-model checkpoint row (checkpoint_etlpipeline_dbt_metadata,
@@ -163,9 +165,10 @@ class Pipeline:
         downstream reader's date filter works unchanged."""
         from .sources import txn
 
-        df = self.spark.read.parquet(f"{self.sf_dir}/{table}.parquet")
-        out = df.withColumn("etl_date", F.lit(etl_date)).withColumn(
-            "record_source", F.lit(source.name)
+        out = (
+            self._source(table)
+            .withColumn("etl_date", F.lit(etl_date))
+            .withColumn("record_source", F.lit(source.name))
         )
         stage_path = self._tpath("staging", f"{source.name}__{table}")
         txn.replace_partitions(
@@ -191,11 +194,7 @@ class Pipeline:
     ) -> bool:
         reg_path = self._tpath("operational_metadata", "schema_registry")
         live_parts = [
-            drift.schema_df(
-                self.spark,
-                self.spark.read.parquet(f"{self.sf_dir}/{t}.parquet"),
-                f"{source.name}__{t}",
-            )
+            drift.schema_df(self.spark, self._source(t), f"{source.name}__{t}")
             for t in source.tables
         ]
         live = live_parts[0]
@@ -204,29 +203,32 @@ class Pipeline:
 
         from .sources import txn
 
-        if not self._exists("operational_metadata", "schema_registry"):
-            # first run: register, no drift (lock already held by caller)
-            txn._commit_locked(live, reg_path)
-            return False
-        all_registered = read_table(self.spark, reg_path)
+        # a missing registry (first run) reads as an empty one
+        all_registered = (
+            read_table(self.spark, reg_path)
+            if self._exists("operational_metadata", "schema_registry")
+            else live.limit(0)
+        )
         registered = all_registered.filter(
             F.col("table_name").startswith(f"{source.name}__")
         )
         if registered.limit(1).count() == 0:
-            # THIS source's first sighting (another source created the
-            # registry): register, no drift — the first-run short-circuit
-            # is per-source, not global, or every source after the first
-            # gets full false drift on day one
+            # THIS source's first sighting: register, no drift (lock
+            # already held by caller) — the short-circuit is per-source,
+            # not global, or every source after the first gets full false
+            # drift on day one
             txn._commit_locked(all_registered.unionByName(live), reg_path)
             return False
         detail = drift.drift_detail(live, registered, run_id, source.name, etl_date)
         n = detail.count()
         if n:
-            detail.write.mode("append").parquet(
-                self._tpath("operational_metadata", "schemadrift_tablechangedetail")
+            txn.append(
+                detail,
+                self._tpath("operational_metadata", "schemadrift_tablechangedetail"),
             )
-            drift.drift_flags(detail).write.mode("append").parquet(
-                self._tpath("operational_metadata", "schemadrift_tablechange")
+            txn.append(
+                drift.drift_flags(detail),
+                self._tpath("operational_metadata", "schemadrift_tablechange"),
             )
             # fold the observed schema into the registry so the drift is
             # reported once (this run) and the next run compares against the
@@ -239,40 +241,29 @@ class Pipeline:
         return n > 0
 
     # -- vault -------------------------------------------------------------
-    def _load_hub_delta(self, hub_name: str, staged, business_keys,
-                        entity: str, etl_date: str, record_source: str) -> None:
-        """Insert-new-keys-only hub/link load as an O(delta) atomic append:
-        the new manifest references the existing snapshot's files and only
-        the anti-joined new rows are written (txn.append_files) — a hub at
-        100 TB must never be rewritten to add a day's keys. First load
-        commits the initial snapshot."""
+    def _append_new_keys(self, table: str, load, *args) -> None:
+        """Insert-only hub/link load as an O(delta) atomic append:
+        `load(existing, *args)` (vault.load_hub / vault.load_link) returns
+        the rows to add, and the new manifest references the existing
+        snapshot's files plus only those rows (txn.append_files) — a hub at
+        100 TB must never be rewritten to add a day's keys. On a missing
+        table the append commits the initial snapshot."""
         from .sources import txn
 
-        path = self._tpath("raw_vault", hub_name)
-        if self._exists("raw_vault", hub_name):
-            hub = self._read("raw_vault", hub_name)
-            snap = vault.hub_snapshot(
-                staged, business_keys, entity, etl_date, record_source
-            )
-            delta = anti_new(
-                snap, hub, [f"{entity}_hash_key"], broadcast_right=False
-            )
-            txn.append_files(delta, path)
-        else:
-            safe_overwrite(
-                vault.load_hub(
-                    None, staged, business_keys, entity, etl_date, record_source
-                ),
-                path,
-            )
+        existing = (
+            self._read("raw_vault", table)
+            if self._exists("raw_vault", table)
+            else None
+        )
+        txn.append_files(load(existing, *args), self._tpath("raw_vault", table))
 
     def load_entity(self, source: SourceConfig, ent: EntityConfig, etl_date: str):
         staged = self._read("staging", f"{source.name}__{ent.table}").filter(
             F.col("etl_date") == etl_date
         )
-        self._load_hub_delta(
-            f"hub_{ent.name}", staged, ent.business_keys, ent.name, etl_date,
-            source.name,
+        self._append_new_keys(
+            f"hub_{ent.name}", vault.load_hub, staged, ent.business_keys,
+            ent.name, etl_date, source.name,
         )
 
         sat_name = f"satellite_{ent.name}"
@@ -355,36 +346,14 @@ class Pipeline:
         ).withColumn("__bucket", bucket_of)
         txn.replace_partitions(new_sub, path, "__bucket")
 
-    def _load_link_delta(self, link_name: str, staged, lk: LinkConfig,
-                         etl_date: str, record_source: str) -> None:
-        from .sources import txn
-
-        path = self._tpath("raw_vault", link_name)
-        if self._exists("raw_vault", link_name):
-            link = self._read("raw_vault", link_name)
-            snap = vault.link_snapshot(
-                staged, lk.left_keys, lk.right_keys, lk.name,
-                lk.left_entity, lk.right_entity, etl_date, record_source,
-            )
-            delta = anti_new(
-                snap, link, [f"{lk.name}_hash_key"], broadcast_right=False
-            )
-            txn.append_files(delta, path)
-        else:
-            safe_overwrite(
-                vault.load_link(
-                    None, staged, lk.left_keys, lk.right_keys, lk.name,
-                    lk.left_entity, lk.right_entity, etl_date, record_source,
-                ),
-                path,
-            )
-
     def load_link(self, source: SourceConfig, lk: LinkConfig, etl_date: str):
         staged = self._read("staging", f"{source.name}__{lk.table}").filter(
             F.col("etl_date") == etl_date
         )
-        self._load_link_delta(
-            f"link_{lk.name}", staged, lk, etl_date, source.name
+        self._append_new_keys(
+            f"link_{lk.name}", vault.load_link, staged, lk.left_keys,
+            lk.right_keys, lk.name, lk.left_entity, lk.right_entity,
+            etl_date, source.name,
         )
 
     def _staged_union(self, table: str, source_names: list[str], etl_date: str):
@@ -408,15 +377,17 @@ class Pipeline:
         several sources (first load's record_source wins, reference hub
         grain)."""
         staged = self._staged_union(ent.table, self.multi.sources, etl_date)
-        self._load_hub_delta(
-            f"hub_{ent.name}", staged, ent.business_keys, ent.name, etl_date,
-            "multi_sources",
+        self._append_new_keys(
+            f"hub_{ent.name}", vault.load_hub, staged, ent.business_keys,
+            ent.name, etl_date, "multi_sources",
         )
 
     def load_multi_link(self, lk: LinkConfig, etl_date: str) -> None:
         staged = self._staged_union(lk.table, self.multi.sources, etl_date)
-        self._load_link_delta(
-            f"link_{lk.name}", staged, lk, etl_date, "multi_sources"
+        self._append_new_keys(
+            f"link_{lk.name}", vault.load_link, staged, lk.left_keys,
+            lk.right_keys, lk.name, lk.left_entity, lk.right_entity,
+            etl_date, "multi_sources",
         )
 
     # -- DAG assembly ------------------------------------------------------
@@ -537,36 +508,39 @@ class Pipeline:
             tasks.append(Task(tid, fn=run_lk, depends_on=["start"], retries=1))
             model_tasks.append(tid)
         tasks.append(Task("end", depends_on=model_tasks or ["start"]))
-        return DagRunner("03__multi_source__datavault", tasks)
+        return DagRunner(
+            "03__multi_source__datavault", tasks, sleep_fn=self._sleep_fn
+        )
 
     # -- root --------------------------------------------------------------
-    def _run_source(self, source: SourceConfig, etl_date: str) -> tuple[dict, bool]:
-        """One source's staging→vault chain (a root-DAG TaskGroup, C2).
+    def _run_group(self, name: str, dags: dict[str, DagRunner],
+                   etl_date: str) -> tuple[dict, bool]:
+        """One ledger-wrapped chain of DAGs under a single run_id (a
+        root-DAG TaskGroup, C2): a source's staging → vault, or the
+        multi-source vault. Returns ({key: statuses}, all green).
 
-        The vault DAG runs ONLY if staging went green (the root trigger's
-        allowed_states=['success']): loading the vault over a failed
-        staging's stale/missing partition would retire every satellite row
-        for the date AND record a success that resume-skip then honors."""
-        run_id = self.ledger.start_run(source.name, etl_date, "master")
-        st1 = self.staging_dag(source).run(
-            self.ledger, source.name, etl_date, run_id=run_id, created_by="group"
-        )
-        staging_ok = all(s in ("success", "skipped") for s in st1.values())
-        if staging_ok:
-            st2 = self.vault_dag(source).run(
-                self.ledger, source.name, etl_date, run_id=run_id,
-                created_by="group",
-            )
-        else:
-            st2 = {"__vault__": "upstream_failed"}
-        src_ok = staging_ok and all(
-            s in ("success", "skipped") for s in st2.values()
-        )
+        Each DAG runs ONLY if every earlier one went green (the root
+        trigger's allowed_states=['success']): loading the vault over a
+        failed staging's stale/missing partition would retire every
+        satellite row for the date AND record a success that resume-skip
+        then honors. A DAG not run reports `{"__<key>__":
+        "upstream_failed"}`."""
+        run_id = self.ledger.start_run(name, etl_date, "master")
+        out: dict = {}
+        ok = True
+        for key, dag in dags.items():
+            if ok:
+                out[key] = dag.run(
+                    self.ledger, name, etl_date, run_id=run_id,
+                    created_by="group",
+                )
+                ok = all_green(out[key])
+            else:
+                out[key] = {f"__{key}__": "upstream_failed"}
         self.ledger.finish_run(
-            run_id, source.name, etl_date, "success" if src_ok else "failed",
-            "master",
+            run_id, name, etl_date, "success" if ok else "failed", "master"
         )
-        return {"staging": st1, "vault": st2}, src_ok
+        return out, ok
 
     def run(self, etl_date: str | None = None, max_workers: int = 1) -> dict:
         """One root run: the reference's 00__etlpipeline__root lifecycle
@@ -587,65 +561,47 @@ class Pipeline:
         else:
             self.ledger.mark_date(etl_date, "running")
 
-        results: dict = {}
-        ok = True
+        def run_source(source: SourceConfig) -> tuple[dict, bool]:
+            dags = {"staging": self.staging_dag(source),
+                    "vault": self.vault_dag(source)}
+            return self._run_group(source.name, dags, etl_date)
+
         try:
             if max_workers <= 1:
-                for source in self.sources:
-                    results[source.name], src_ok = self._run_source(source, etl_date)
-                    ok = ok and src_ok
+                outcomes = [run_source(s) for s in self.sources]
             else:
                 from concurrent.futures import ThreadPoolExecutor
 
                 with ThreadPoolExecutor(max_workers=max_workers) as pool:
-                    futs = {
-                        source.name: pool.submit(self._run_source, source, etl_date)
-                        for source in self.sources
-                    }
-                    for name, fut in futs.items():
-                        results[name], src_ok = fut.result()
-                        ok = ok and src_ok
+                    outcomes = list(pool.map(run_source, self.sources))
         except Exception:
             # an unexpected failure (ledger IO, a worker raising) must not
             # leave the date stuck at 'running' — the queue only picks
             # status-NULL dates, so a stuck date becomes a silent gap day
             self.ledger.mark_date(etl_date, "failed")
             raise
+        results = {s.name: r for s, (r, _) in zip(self.sources, outcomes)}
+        ok = all(src_ok for _, src_ok in outcomes)
 
         # multi-source models run only when every per-source DAG is green
         # (root TriggerDagRunOperator with allowed_states=['success'], C1)
         if self.multi and ok:
-            run_id = self.ledger.start_run("multi_sources", etl_date, "master")
-            st = self.multi_source_dag().run(
-                self.ledger, "multi_sources", etl_date, run_id=run_id,
-                created_by="group",
+            results["multi_sources"], ok = self._run_group(
+                "multi_sources", {"datavault": self.multi_source_dag()},
+                etl_date,
             )
-            multi_ok = all(s in ("success", "skipped") for s in st.values())
-            self.ledger.finish_run(
-                run_id, "multi_sources", etl_date,
-                "success" if multi_ok else "failed", "master",
-            )
-            results["multi_sources"] = {"datavault": st}
-            ok = ok and multi_ok
 
-        # check_records (root.py:55-60, trigger_rule all_done): staged row
-        # counts must reconcile with the source tables for this date
-        if ok:
-            recon = self.check_records(etl_date)
-            bad = recon.filter(F.col("is_matched") == 0).limit(1).collect()
-            if bad:
-                ok = False
-        # r11 (VERDICT r10 #8): the Merkle CONTENT gate is the standing
-        # default, not just a registry demo — row counts can match while
-        # values rot (a truncated load re-run, a codec bug, bit rot on a
+        # The one post-load gate: Merkle CONTENT reconciliation (r11,
+        # VERDICT r10 #8). It subsumes the reference's row-count
+        # check_records (root.py:55-60): each side's per-bucket summary
+        # carries n_rows, so a dropped or duplicated row is a differing
+        # bucket — and it also catches values rotting under matching
+        # counts (a truncated load re-run, a codec bug, bit rot on a
         # replica). Per (source, table): both sides collapse map-side to
         # n_buckets (count, fingerprint-sum) partials; equal summaries
         # prove content equal with ZERO row-grain exchange, so at 100 TB
         # a healthy load pays two narrow scans and a 256-row join.
-        if ok:
-            bad_content = self.check_content(etl_date).limit(1).collect()
-            if bad_content:
-                ok = False
+        ok = ok and not self.check_content(etl_date).limit(1).collect()
 
         self.ledger.mark_date(etl_date, "success" if ok else "failed")
         if ok and self.catalog is not None:
@@ -662,7 +618,9 @@ class Pipeline:
 
     def check_records(self, etl_date: str):
         """Row-count reconciliation (§5 #1): every (source, table) staged
-        partition for this date vs the source table it was loaded from."""
+        partition for this date vs the source table it was loaded from.
+        Not a gate of run(): check_content compares per-bucket row counts
+        too, so it catches every mismatch this one does."""
         from .operators import checks
 
         src_tables: dict = {}
@@ -670,9 +628,7 @@ class Pipeline:
         for source in self.sources:
             for t in source.tables:
                 name = f"{source.name}__{t}"
-                src_tables[name] = self.spark.read.parquet(
-                    f"{self.sf_dir}/{t}.parquet"
-                )
+                src_tables[name] = self._source(t)
                 tgt_tables[name] = self._read("staging", name).filter(
                     F.col("etl_date") == etl_date
                 )
@@ -682,9 +638,8 @@ class Pipeline:
 
     def check_content(self, etl_date: str):
         """Merkle-bucket CONTENT reconciliation of every staged partition
-        against its source table (operators/recon — the check_records
-        row-count gate's strong sibling, promoted to the standing
-        post-load gate in r11): each side fingerprints rows (60-bit md5
+        against its source table (operators/recon — run()'s one post-load
+        gate, a superset of the check_records row-count test): each side fingerprints rows (60-bit md5
         over the canonical full-row string, identical Spark expressions
         both sides) and collapses to per-bucket (n_rows, fp_sum)
         summaries map-side. Returns the differing (table, bucket) rows —
@@ -696,9 +651,7 @@ class Pipeline:
         for source in self.sources:
             for t in source.tables:
                 name = f"{source.name}__{t}"
-                src_df = self.spark.read.parquet(
-                    f"{self.sf_dir}/{t}.parquet"
-                )
+                src_df = self._source(t)
                 tgt_df = self._read("staging", name).filter(
                     F.col("etl_date") == etl_date
                 )

@@ -967,16 +967,16 @@ def _publish(
     sort_order: dict | None = None,
 ) -> str:
     ver = _next_version(path, fs)
+    parent_m: dict = {}
+    if parent:
+        try:
+            parent_m = _load_manifest(path, parent, fs)
+        except FileNotFoundError:  # pragma: no cover - racing GC
+            pass
     # sequence numbers order data files vs equality-delete files (the
     # Iceberg v2 rule: a delete applies only to rows whose data file has a
     # LOWER sequence) — every entry added by THIS commit gets the next seq
-    parent_seq = 0
-    if parent:
-        try:
-            parent_seq = _load_manifest(path, parent, fs).get("seq", 0)
-        except FileNotFoundError:  # pragma: no cover - racing GC
-            parent_seq = 0
-    seq = parent_seq + 1
+    seq = parent_m.get("seq", 0) + 1
     for e in entries:
         e.setdefault("seq", seq)
     deletes = list(deletes or [])
@@ -986,15 +986,9 @@ def _publish(
     # forced strictly above the parent's so same-microsecond commits
     # still resolve deterministically (Iceberg keeps snapshot timestamps
     # monotonic per table for the same reason)
-    committed_at = int(time.time() * 1_000_000)
-    if parent:
-        try:
-            parent_at = _load_manifest(path, parent, fs).get(
-                "committed_at", 0
-            )
-            committed_at = max(committed_at, parent_at + 1)
-        except FileNotFoundError:  # pragma: no cover - racing GC
-            pass
+    committed_at = max(
+        int(time.time() * 1_000_000), parent_m.get("committed_at", 0) + 1
+    )
     manifest = {
         "version": ver,
         "parent": parent,
@@ -1517,8 +1511,7 @@ def replace_partitions(
     fs = fs or _fs_for(path)
     with table_lock(path, fs):
         ver = _read_pointer(path, fs)
-        parent_files: list[dict] = []
-        parent_schema = None
+        m: dict = {}
         if ver is not None:
             m = _load_manifest(path, ver, fs)
             if m.get("partition_by") not in (None, partition_by):
@@ -1526,8 +1519,6 @@ def replace_partitions(
                     f"table at {path} is partitioned by {m['partition_by']}, "
                     f"not {partition_by}"
                 )
-            parent_files = m["files"]
-            parent_schema = m.get("schema")
             keep_column = m.get("partition_in_data", keep_column)
         elif _has_plain_files(path, fs):
             raise ValueError(
@@ -1538,19 +1529,17 @@ def replace_partitions(
             df, path, fs, partition_by=partition_by, keep_column=keep_column
         )
         replaced = {e["partition"] for e in entries}
-        kept = [e for e in parent_files if e.get("partition") not in replaced]
+        kept = [
+            e for e in m.get("files", []) if e.get("partition") not in replaced
+        ]
         file_schema = df.schema if keep_column else df.drop(partition_by).schema
         schema_json = _merged_schema_json(
-            parent_schema, file_schema, merge_schema=merge_schema
+            m.get("schema"), file_schema, merge_schema=merge_schema
         )
-        deletes = sort_order = None
-        if ver is not None:
-            pm = _load_manifest(path, ver, fs)
-            deletes, sort_order = pm.get("deletes"), pm.get("sort_order")
         return _publish(
             path, kept + entries, schema_json, partition_by, fs,
             keep_versions, ver, partition_in_data=keep_column,
-            deletes=deletes, sort_order=sort_order,
+            deletes=m.get("deletes"), sort_order=m.get("sort_order"),
         )
 
 

@@ -10,8 +10,9 @@ utlis/etl_manager.py:894,1231):
 - satellite_<entity>(entity_hash_key, <attrs…>, load_date, load_end_date,
   record_source)  [SCD2]
 
-Loads are incremental and idempotent: hubs/links insert only *new* hash keys
-(anti-join, J3); satellites apply SCD2 via operators.scd2. At scale each
+Loads are incremental and idempotent: hubs/links are insert-only — their
+loaders return just the rows to append (the *new* hash keys, anti-join J3);
+satellites apply SCD2 via operators.scd2. At scale each
 loader is one shuffle on the hash key — the key is uniformly distributed by
 construction (sha2), so no skew.
 """
@@ -55,12 +56,13 @@ def load_hub(
     load_date,
     record_source: str,
 ) -> DataFrame:
-    """Insert-new-keys-only hub load. `hub=None` → initial load."""
+    """Insert-only hub load: the rows to APPEND to `hub` — the whole
+    snapshot on the initial load (`hub=None`), else only the keys `hub`
+    lacks."""
     snap = hub_snapshot(source, business_keys, entity, load_date, record_source)
     if hub is None:
         return snap
-    new_rows = anti_new(snap, hub, [f"{entity}_hash_key"], broadcast_right=False)
-    return hub.unionByName(new_rows)
+    return anti_new(snap, hub, [f"{entity}_hash_key"], broadcast_right=False)
 
 
 def link_snapshot(
@@ -99,14 +101,14 @@ def load_link(
     load_date,
     record_source: str,
 ) -> DataFrame:
+    """Insert-only link load: the rows to APPEND (see load_hub)."""
     snap = link_snapshot(
         source, left_keys, right_keys, link_name, left_entity, right_entity,
         load_date, record_source,
     )
     if link is None:
         return snap
-    new_rows = anti_new(snap, link, [f"{link_name}_hash_key"], broadcast_right=False)
-    return link.unionByName(new_rows)
+    return anti_new(snap, link, [f"{link_name}_hash_key"], broadcast_right=False)
 
 
 def satellite_snapshot(

@@ -30,6 +30,11 @@ from dataclasses import dataclass, field
 from .ledger import Ledger
 
 
+def all_green(statuses: dict[str, str]) -> bool:
+    """A DAG run (or chain of runs) succeeded: every task success/skipped."""
+    return all(s in ("success", "skipped") for s in statuses.values())
+
+
 @dataclass
 class Task:
     task_id: str
@@ -66,13 +71,13 @@ class DagRunner:
         self,
         dag_id: str,
         tasks: Sequence[Task],
-        sleep_fn: Callable[[float], None] = time.sleep,
+        sleep_fn: Callable[[float], None] | None = None,
     ):
         self.dag_id = dag_id
         self.tasks = {t.task_id: t for t in tasks}
         # injectable clock-sleep (tests stub it; the reference's TimeSensor
-        # is likewise scheduler-time, not task logic)
-        self._sleep = sleep_fn
+        # is likewise scheduler-time, not task logic); None = time.sleep
+        self._sleep = sleep_fn or time.sleep
         # validate DAG
         for t in tasks:
             for d in t.depends_on:
@@ -106,9 +111,9 @@ class DagRunner:
                 rid, source_name, self.dag_id, tid, st, etl_date
             )
 
-        ok = all(s in ("success", "skipped") for s in status.values())
         ledger.finish_run(
-            rid, source_name, etl_date, "success" if ok else "failed", created_by
+            rid, source_name, etl_date,
+            "success" if all_green(status) else "failed", created_by,
         )
         return status
 
@@ -202,7 +207,7 @@ class DagRunner:
             except Exception:
                 if attempt + 1 >= attempts:
                     return "failed"
-                time.sleep(task.retry_delay_s)
+                self._sleep(task.retry_delay_s)
         return "failed"
 
     def _call(self, task: Task, ctx: RunContext):

@@ -1,4 +1,4 @@
-"""Count Spark jobs (and their total task time) per registry lane.
+"""Count Spark jobs per registry lane.
 
 Deterministic, load-independent evidence for optimizations that remove
 whole Spark actions (per-iteration counts, checkpoint materializations):
@@ -8,7 +8,7 @@ does not.
 Usage:
     python scripts/count_jobs.py <query> [<query> ...]
 
-Prints one JSON line: {name: {"jobs": n, "task_time_s": s}}
+Prints one JSON line: {name: {"jobs": n}}
 """
 
 from __future__ import annotations
@@ -23,20 +23,8 @@ from airflow_etl_spark import get_spark  # noqa: E402
 from airflow_etl_spark import queries as Q  # noqa: E402
 
 
-def _store(spark):
-    return spark._jsparkSession.sparkContext().statusStore()
-
-
-def _job_stats(spark) -> tuple[int, float]:
-    store = _store(spark)
-    it = store.jobsList(None)
-    n = it.size()
-    task_time = 0.0
-    for i in range(n):
-        # JobData.stageIds -> sum task time via stage data is noisy;
-        # job count alone is the deterministic signal.
-        pass
-    return n, task_time
+def _job_count(spark) -> int:
+    return spark._jsparkSession.sparkContext().statusStore().jobsList(None).size()
 
 
 def main() -> None:
@@ -49,10 +37,10 @@ def main() -> None:
     out: dict[str, dict[str, float]] = {}
     for name in names:
         fn = registry[name]
-        before, _ = _job_stats(spark)
+        before = _job_count(spark)
         spark.sparkContext.setJobDescription(f"jobs: {name}")
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        after, _ = _job_stats(spark)
+        after = _job_count(spark)
         out[name] = {"jobs": after - before}
         print(f"# {name}: {out[name]}", file=sys.stderr)
     print(json.dumps(out))

@@ -300,7 +300,9 @@ def test_content_gate_passes_clean_and_catches_value_rot(spark, tmp_path, sf_dir
     r10 #8): a faithful load reconciles to ZERO differing buckets with
     no row-grain exchange; a staged partition whose VALUES rot while
     its ROW COUNT stays intact (the failure row-count reconciliation is
-    blind to) must surface as a differing bucket."""
+    blind to) must surface as a differing bucket. So must a dropped row:
+    run() keeps this as its only post-load gate, so it has to catch what
+    the row-count check_records test catches."""
     from airflow_etl_spark.sources import txn
 
     src = SourceConfig(name="erp_c", tables=["region"])
@@ -321,6 +323,14 @@ def test_content_gate_passes_clean_and_catches_value_rot(spark, tmp_path, sf_dir
     # row counts still reconcile — the count gate is blind to this
     assert all(
         r.is_matched == 1 for r in p.check_records("2024-07-01").collect()
+    )
+    bad = p.check_content("2024-07-01").collect()
+    assert len(bad) >= 1 and all(r.table_name == "erp_c__region" for r in bad)
+
+    # dropped row: the count check and the content gate both flag it
+    txn.commit(cur.filter(F.col("r_regionkey") != 0), staged_path, keep_versions=5)
+    assert any(
+        r.is_matched == 0 for r in p.check_records("2024-07-01").collect()
     )
     bad = p.check_content("2024-07-01").collect()
     assert len(bad) >= 1 and all(r.table_name == "erp_c__region" for r in bad)

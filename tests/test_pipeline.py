@@ -125,6 +125,30 @@ def test_workflow_retry_and_failure_gate(ledger):
     assert not ledger.all_sources_green("2024-01-04")
 
 
+def test_retry_delay_goes_through_injected_sleep(ledger):
+    """Retry waits use the runner's injected sleep, not time.sleep; and
+    sleep_fn=None means the real clock."""
+    import time as _time
+
+    slept = []
+    attempts = {"n": 0}
+
+    def flaky(ctx):
+        attempts["n"] += 1
+        if attempts["n"] < 3:
+            raise RuntimeError("boom")
+        return "ok"
+
+    dag = DagRunner(
+        "05__src__retry_sleep",
+        [Task("flaky", fn=flaky, retries=2, retry_delay_s=7.5)],
+        sleep_fn=slept.append,
+    )
+    assert dag.run(ledger, "src_e", "2024-01-03") == {"flaky": "success"}
+    assert slept == [7.5, 7.5]
+    assert DagRunner("06__src__clock", [], sleep_fn=None)._sleep is _time.sleep
+
+
 def test_vault_minimum_slice(spark, ledger, sf_dir):
     """SURVEY §7.3: one source, one day — customer → hub + satellite."""
     customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
@@ -133,10 +157,15 @@ def test_vault_minimum_slice(spark, ledger, sf_dir):
                          "2024-01-03", "tpch")
     assert hub.count() == customer.select("c_custkey").distinct().count()
 
-    # incremental: re-load with same source adds nothing
-    hub2 = vault.load_hub(hub, customer, ["c_custkey"], "customer",
-                          "2024-01-04", "tpch")
-    assert hub2.count() == hub.count()
+    # incremental: the loader returns only the rows to append — a re-load
+    # with the same source adds nothing, a new key adds exactly its row
+    added = vault.load_hub(hub, customer, ["c_custkey"], "customer",
+                           "2024-01-04", "tpch")
+    assert added.count() == 0
+    new_key = spark.createDataFrame([(10**9,)], "c_custkey long")
+    added = vault.load_hub(hub, customer.select("c_custkey").union(new_key),
+                           ["c_custkey"], "customer", "2024-01-04", "tpch")
+    assert [r.c_custkey for r in added.collect()] == [10**9]
 
     sat = vault.load_satellite(
         None, customer, ["c_custkey"], ["c_name", "c_mktsegment"], "customer",
@@ -316,7 +345,9 @@ def test_staging_drift_absorbed_not_just_reported(spark, tmp_path):
     assert not p.drift_check(src, "r3", "2024-01-03")
 
     # and the vault load path runs over the evolved staging table
-    p._load_hub_delta("hub_thing", day2, ["id"], "thing", "2024-01-02", "erp_d")
+    p._append_new_keys(
+        "hub_thing", vault.load_hub, day2, ["id"], "thing", "2024-01-02", "erp_d"
+    )
     assert read_table(spark, str(tmp_path / "wh/raw_vault/hub_thing")).count() == 3
 
 
