@@ -639,9 +639,10 @@ class Pipeline:
     def check_content(self, etl_date: str):
         """Merkle-bucket CONTENT reconciliation of every staged partition
         against its source table (operators/recon — run()'s one post-load
-        gate, a superset of the check_records row-count test): each side fingerprints rows (60-bit md5
-        over the canonical full-row string, identical Spark expressions
-        both sides) and collapses to per-bucket (n_rows, fp_sum)
+        gate, a superset of the check_records row-count test): each side
+        fingerprints rows (60-bit md5 over the canonical full-row string,
+        identical Spark expressions both sides) and collapses to
+        per-bucket (n_rows, fp_sum)
         summaries map-side. Returns the differing (table, bucket) rows —
         EMPTY on a faithful load. Cost at any scale: two narrow scans +
         one n_buckets-row join per table; no row ever shuffles."""
