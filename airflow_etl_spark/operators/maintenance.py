@@ -137,12 +137,7 @@ def rewrite_small_files(
     from ..sources import txn
 
     fs = fs or txn._fs_for(path)
-    with txn.table_lock(path, fs):
-        m = txn.live_manifest(path, fs)
-        if m is None:
-            raise FileNotFoundError(
-                f"no versioned table at {path}: legacy dirs go through compact()"
-            )
+    with txn._live_table(path, fs, "rewrite_small_files") as (ver, m):
         thr = small_threshold if small_threshold is not None else target_file_bytes // 2
         pcol = m.get("partition_by")
         groups: dict[object, list[dict]] = {}
@@ -176,14 +171,8 @@ def rewrite_small_files(
             removed += len(smalls) - len(written)
         if not new_entries:
             return 0
-        txn._publish(
-            path, kept + new_entries, m.get("schema"), pcol, fs, 2,
-            txn._read_pointer(path, fs),
-            partition_in_data=m.get("partition_in_data", False),
-            # delete files stay for the KEPT data files they still govern
-            deletes=m.get("deletes"),
-            sort_order=m.get("sort_order"),
-        )
+        # delete files stay for the KEPT data files they still govern
+        txn._publish_child(path, ver, m, fs, files=kept, add=new_entries)
         return removed
 
 

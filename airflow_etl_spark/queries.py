@@ -10160,11 +10160,10 @@ def ivm_two_table_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = T(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     root = _scratch("ivm_2t_")
     a, b, mv = root + "/orders", root + "/customer", root + "/mv"
-    # r13 (extends the r12 commit_many overlap): ALL four data-plane
-    # writes read only the source parquet — the two base snapshots, the
-    # fact delta, and the dim delete keys stage concurrently; the
-    # manifest publishes replay in the original order around the
-    # (inherently sequential) refresh chain.
+    # ALL four data-plane writes read only the source parquet — the two
+    # base snapshots, the fact delta, and the dim delete keys stage
+    # concurrently; the manifest publishes replay in the original order
+    # around the (inherently sequential) refresh chain.
     st_a, st_b, st_delta_a, st_del_b = txn.run_concurrent([
         lambda: txn.stage_write(
             orders.filter(F.col("o_orderkey") % 3 != 2), a),
@@ -11001,14 +11000,15 @@ def s12_cascade_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cat = WarehouseCatalog(_scratch("cat_gdpr_"))
     # three INDEPENDENT fixture commits overlap (guide §2.6 / the
-    # ivm commit_many precedent): the next table's write back-fills
+    # ivm concurrent-commit precedent): the next table's write back-fills
     # executors freed by the previous one's straggler tail, then all
     # three versions publish under the one snapshot flip as before
     fixtures = [("customer", cust), ("orders", orders), ("lineitem", li)]
     with cat.transaction() as tx:
-        vers = txn.commit_many(
-            [(df, f"{cat.warehouse}/{name}") for name, df in fixtures]
-        )
+        vers = txn.run_concurrent([
+            (lambda df=df, name=name: txn.commit(df, f"{cat.warehouse}/{name}"))
+            for name, df in fixtures
+        ])
         for (name, _df), ver in zip(fixtures, vers):
             tx.stage(name, f"{cat.warehouse}/{name}", ver)
 
@@ -11033,10 +11033,11 @@ def s12_cascade_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     with cat.transaction() as tx:
         paths = [cat.table_pin(name)[0] for name, _k, _c in deletions]
-        vers = txn.delete_keys_many(
-            [(keys, path, cols)
-             for (name, keys, cols), path in zip(deletions, paths)]
-        )
+        vers = txn.run_concurrent([
+            (lambda keys=keys, path=path, cols=cols:
+             txn.delete_keys(keys, path, cols))
+            for (_name, keys, cols), path in zip(deletions, paths)
+        ])
         for (name, _k, _c), path, ver in zip(deletions, paths, vers):
             tx.stage(name, path, ver)
 

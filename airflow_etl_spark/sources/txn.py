@@ -47,6 +47,11 @@ physical directory:
   (reference's dbt+Iceberg staging behavior, SURVEY §1.3) is a metadata
   operation.
 
+Every writer is a data write (a Spark job or a driver-side arrow file)
+followed by the one shared child publish, `_publish_child`, which derives
+the new manifest from its parent's: partition spec, sort order and
+pending delete files carry over, as in an Iceberg snapshot.
+
 Concurrency / crash model (unchanged from round 2, now portable):
 
 - **Readers never lock.** `read()` resolves `_current` → manifest → a
@@ -963,46 +968,77 @@ def _publish(
     keep_versions: int,
     parent: str | None,
     partition_in_data: bool = False,
-    deletes: list[dict] | None = None,
     sort_order: dict | None = None,
 ) -> str:
-    ver = _next_version(path, fs)
+    """Publish a FULL snapshot of `entries`: nothing but the version chain
+    (seq, commit timestamp) comes from the parent. Writers that derive
+    their snapshot from the parent's go through `_publish_child`."""
     parent_m: dict = {}
     if parent:
         try:
             parent_m = _load_manifest(path, parent, fs)
         except FileNotFoundError:  # pragma: no cover - racing GC
             pass
-    # sequence numbers order data files vs equality-delete files (the
-    # Iceberg v2 rule: a delete applies only to rows whose data file has a
-    # LOWER sequence) — every entry added by THIS commit gets the next seq
-    seq = parent_m.get("seq", 0) + 1
-    for e in entries:
-        e.setdefault("seq", seq)
-    deletes = list(deletes or [])
-    for d in deletes:
-        d.setdefault("seq", seq)
-    # commit timestamp (epoch micros) for AS-OF-TIMESTAMP time travel —
-    # forced strictly above the parent's so same-microsecond commits
-    # still resolve deterministically (Iceberg keeps snapshot timestamps
-    # monotonic per table for the same reason)
-    committed_at = max(
-        int(time.time() * 1_000_000), parent_m.get("committed_at", 0) + 1
+    spec = {
+        "schema": schema_json, "partition_by": partition_by,
+        "partition_in_data": partition_in_data, "sort_order": sort_order,
+    }
+    return _publish_child(
+        path, parent, {**parent_m, **spec, "files": [], "deletes": []}, fs,
+        keep_versions, add=entries,
     )
+
+
+def _publish_child(
+    path: str,
+    parent: str | None,
+    m: dict,
+    fs,
+    keep_versions: int = 2,
+    add: list[dict] = (),
+    deletes: list[dict] = (),
+    files: list[dict] | None = None,
+    schema: dict | None = None,
+) -> str:
+    """THE snapshot publish: derive the child of `parent` from its
+    manifest `m` (loaded by the caller under the table lock) and flip the
+    pointer to it. The child inherits m's partition spec, sort order and
+    pending delete files — Iceberg's snapshot-inheritance rule — and
+    keeps m's files unless `files` replaces the list. `add` and `deletes`
+    are this commit's new data and delete entries; `schema` overrides
+    m's (schema-merging appends)."""
+    # sequence numbers order data files vs delete files (the Iceberg v2
+    # rule: a delete applies only to rows whose data file has a LOWER
+    # sequence) — every entry added by THIS commit gets the next seq, and
+    # pre-sequence-era carried files count as seq 0, older than any delete
+    seq = m.get("seq", 0) + 1
+    files = m.get("files", []) if files is None else files
+    for e in files:
+        e.setdefault("seq", 0)
+    for e in [*add, *deletes]:
+        e.setdefault("seq", seq)
+    ver = _next_version(path, fs)
     manifest = {
         "version": ver,
         "parent": parent,
         "seq": seq,
-        "committed_at": committed_at,
-        "schema": schema_json,
-        "partition_by": partition_by,
-        "partition_in_data": partition_in_data,
-        "files": entries,
+        # commit timestamp (epoch micros) for AS-OF-TIMESTAMP time travel
+        # — forced strictly above the parent's so same-microsecond commits
+        # still resolve deterministically (Iceberg keeps snapshot
+        # timestamps monotonic per table for the same reason)
+        "committed_at": max(
+            int(time.time() * 1_000_000), m.get("committed_at", 0) + 1
+        ),
+        "schema": m.get("schema") if schema is None else schema,
+        "partition_by": m.get("partition_by"),
+        "partition_in_data": m.get("partition_in_data", False),
+        "files": files + list(add),
     }
-    if deletes:
-        manifest["deletes"] = deletes
-    if sort_order:
-        manifest["sort_order"] = sort_order
+    all_deletes = (m.get("deletes") or []) + list(deletes)
+    if all_deletes:
+        manifest["deletes"] = all_deletes
+    if m.get("sort_order"):
+        manifest["sort_order"] = m["sort_order"]
     fs.mkdirs(_join(path, MANIFESTS))
     fs.write_text_atomic(_manifest_path(path, ver), json.dumps(manifest))
     # every writer passes the pointer value it observed under the lock as
@@ -1010,6 +1046,42 @@ def _publish(
     _flip_pointer(path, ver, fs, expected_parent=parent)
     _gc(path, keep_versions, fs)
     return ver
+
+
+@contextmanager
+def _live_table(path: str, fs, op: str):
+    """Hold the table lock and yield (live version, its manifest) — the
+    parent every child publish derives from. A table without the manifest
+    layout raises FileNotFoundError naming the operation `op`."""
+    with table_lock(path, fs):
+        ver = _read_pointer(path, fs)
+        if ver is None:
+            raise FileNotFoundError(
+                f"no versioned table at {path}: {op} needs the manifest "
+                "layout (commit() the table first)"
+            )
+        yield ver, _load_manifest(path, ver, fs)
+
+
+def _write_delete_file(
+    keys_df: DataFrame, path: str, fs, key_cols: list[str] | None = None,
+    tag: str | None = None,
+) -> list[dict]:
+    """Run the Spark job writing `keys_df`'s distinct delete tuples as ONE
+    file under `_data/<tag>` and return its delete entries: equality
+    deletes tagged with `key_cols`, or — `key_cols=None` — position
+    deletes of (target_file, pos) tagged `kind: "pos"`."""
+    cols = key_cols or ["target_file", "pos"]
+    tag = tag or f"{'d' if key_cols else 'pd'}-{uuid.uuid4().hex[:8]}"
+    ddir = _join(path, DATA, tag)
+    keys_df.select(*cols).distinct().coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(ddir)
+    kind = {"key_cols": key_cols} if key_cols else {"kind": "pos"}
+    return [
+        {"path": _rel_of(fp), "bytes": n, **kind}
+        for fp, n, _t in fs.list_files(ddir, ".parquet")
+    ]
 
 
 def _gc(path: str, keep_versions: int, fs=None) -> None:
@@ -1245,12 +1317,8 @@ def append_files(
         if bloom_cols:
             # delta files only — earlier entries keep their own blooms
             _attach_blooms(df.sparkSession, path, entries, bloom_cols, fs)
-        return _publish(
-            path, m["files"] + entries, schema_json, m.get("partition_by"),
-            fs, keep_versions, ver,
-            partition_in_data=m.get("partition_in_data", False),
-            deletes=m.get("deletes"),
-            sort_order=m.get("sort_order"),
+        return _publish_child(
+            path, ver, m, fs, keep_versions, add=entries, schema=schema_json
         )
 
 
@@ -1273,60 +1341,9 @@ def delete_keys(
     until compaction."""
     fs = fs or _fs_for(path)
     key_cols = list(key_cols or keys_df.columns)
-    with table_lock(path, fs):
-        ver = _read_pointer(path, fs)
-        if ver is None:
-            raise FileNotFoundError(
-                f"no versioned table at {path}: delete_keys needs the "
-                "manifest layout (commit() the table first)"
-            )
-        m = _load_manifest(path, ver, fs)
-        # pre-sequence-era file entries count as seq 0: strictly older than
-        # this delete, so it governs them
-        for e in m["files"]:
-            e.setdefault("seq", 0)
-        tag = f"d-{uuid.uuid4().hex[:8]}"
-        ddir = _join(path, DATA, tag)
-        keys_df.select(*key_cols).distinct().coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(ddir)
-        new_deletes = [
-            {"path": _rel_of(fp), "bytes": n, "key_cols": key_cols}
-            for fp, n, _t in fs.list_files(ddir, ".parquet")
-        ]
-        return _publish(
-            path, m["files"], m.get("schema"), m.get("partition_by"), fs,
-            keep_versions, ver,
-            partition_in_data=m.get("partition_in_data", False),
-            deletes=(m.get("deletes") or []) + new_deletes,
-            # carry the declared layout: without it a MoR delete silently
-            # erased the clustering record compaction restores
-            sort_order=m.get("sort_order"),
-        )
-
-
-def _publish_pos_deletes(
-    pos_df: DataFrame, path: str, m: dict, ver: str, keep_versions: int, fs
-) -> str:
-    """Write `pos_df` (target_file string, pos long) as a position-delete
-    file and publish. Caller holds the table lock and passes the manifest
-    it resolved under it."""
-    tag = f"pd-{uuid.uuid4().hex[:8]}"
-    ddir = _join(path, DATA, tag)
-    pos_df.select("target_file", "pos").distinct().coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(ddir)
-    new_deletes = [
-        {"path": _rel_of(fp), "bytes": n, "kind": "pos"}
-        for fp, n, _t in fs.list_files(ddir, ".parquet")
-    ]
-    return _publish(
-        path, m["files"], m.get("schema"), m.get("partition_by"), fs,
-        keep_versions, ver,
-        partition_in_data=m.get("partition_in_data", False),
-        deletes=(m.get("deletes") or []) + new_deletes,
-        sort_order=m.get("sort_order"),
-    )
+    with _live_table(path, fs, "delete_keys") as (ver, m):
+        deletes = _write_delete_file(keys_df, path, fs, key_cols)
+        return _publish_child(path, ver, m, fs, keep_versions, deletes=deletes)
 
 
 def delete_positions(
@@ -1345,15 +1362,9 @@ def delete_positions(
     anyway). O(deleted rows) written; readers pay one broadcast
     anti-join until compaction."""
     fs = fs or _fs_for(path)
-    with table_lock(path, fs):
-        ver = _read_pointer(path, fs)
-        if ver is None:
-            raise FileNotFoundError(
-                f"no versioned table at {path}: delete_positions needs the "
-                "manifest layout (commit() the table first)"
-            )
-        m = _load_manifest(path, ver, fs)
-        return _publish_pos_deletes(pos_df, path, m, ver, keep_versions, fs)
+    with _live_table(path, fs, "delete_positions") as (ver, m):
+        deletes = _write_delete_file(pos_df, path, fs)
+        return _publish_child(path, ver, m, fs, keep_versions, deletes=deletes)
 
 
 def delete_where_positional(
@@ -1366,11 +1377,7 @@ def delete_where_positional(
     and rows bit-identical to a surviving row still die."""
     fs = fs or _fs_for(path)
     cond = F.expr(condition) if isinstance(condition, str) else condition
-    with table_lock(path, fs):
-        ver = _read_pointer(path, fs)
-        if ver is None:
-            raise FileNotFoundError(f"no versioned table at {path}")
-        m = _load_manifest(path, ver, fs)
+    with _live_table(path, fs, "delete_where_positional") as (ver, m):
         pos = (
             _read_with_deletes(spark, path, m, keep_pos=True)
             .filter(cond)
@@ -1379,7 +1386,8 @@ def delete_where_positional(
                 F.col("__pd_pos").alias("pos"),
             )
         )
-        return _publish_pos_deletes(pos, path, m, ver, keep_versions, fs)
+        deletes = _write_delete_file(pos, path, fs)
+        return _publish_child(path, ver, m, fs, keep_versions, deletes=deletes)
 
 
 def delete_duplicate_positions(
@@ -1399,11 +1407,7 @@ def delete_duplicate_positions(
     distinct) — they are excluded from the window entirely, which also
     keeps the all-NULLs skew key out of the exchange."""
     fs = fs or _fs_for(path)
-    with table_lock(path, fs):
-        ver = _read_pointer(path, fs)
-        if ver is None:
-            raise FileNotFoundError(f"no versioned table at {path}")
-        m = _load_manifest(path, ver, fs)
+    with _live_table(path, fs, "delete_duplicate_positions") as (ver, m):
         vis = _read_with_deletes(spark, path, m, keep_pos=True)
         non_null = functools.reduce(
             lambda a, c: a & F.col(c).isNotNull(),
@@ -1420,7 +1424,8 @@ def delete_duplicate_positions(
                 F.col("__pd_pos").alias("pos"),
             )
         )
-        return _publish_pos_deletes(pos, path, m, ver, keep_versions, fs)
+        deletes = _write_delete_file(pos, path, fs)
+        return _publish_child(path, ver, m, fs, keep_versions, deletes=deletes)
 
 
 def upsert_mor(
@@ -1450,32 +1455,20 @@ def upsert_mor(
         if ver is None:
             return _commit_locked(df, path, keep_versions, fs)
         m = _load_manifest(path, ver, fs)
-        for e in m["files"]:
-            e.setdefault("seq", 0)  # pre-sequence-era files are oldest
         schema_json = _merged_schema_json(m.get("schema"), df.schema, merge_schema)
         entries = _write_snapshot(df, path, fs)
-        new_deletes: list[dict] = []
+        deletes: list[dict] = []
         if entries:
-            tag = f"d-{uuid.uuid4().hex[:8]}"
-            ddir = _join(path, DATA, tag)
             # keys come from the files just WRITTEN, not by re-running df —
             # consistent even for nondeterministic sources, and a key-column
             # projection over the delta is the cheapest possible job
-            df.sparkSession.read.parquet(
+            written = df.sparkSession.read.parquet(
                 *[_join(path, e["path"]) for e in entries]
-            ).select(*key_cols).distinct().coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(ddir)
-            new_deletes = [
-                {"path": _rel_of(fp), "bytes": n, "key_cols": list(key_cols)}
-                for fp, n, _t in fs.list_files(ddir, ".parquet")
-            ]
-        return _publish(
-            path, m["files"] + entries, schema_json, m.get("partition_by"),
-            fs, keep_versions, ver,
-            partition_in_data=m.get("partition_in_data", False),
-            deletes=(m.get("deletes") or []) + new_deletes,
-            sort_order=m.get("sort_order"),
+            )
+            deletes = _write_delete_file(written, path, fs, list(key_cols))
+        return _publish_child(
+            path, ver, m, fs, keep_versions, add=entries, deletes=deletes,
+            schema=schema_json,
         )
 
 
@@ -1536,10 +1529,11 @@ def replace_partitions(
         schema_json = _merged_schema_json(
             m.get("schema"), file_schema, merge_schema=merge_schema
         )
-        return _publish(
-            path, kept + entries, schema_json, partition_by, fs,
-            keep_versions, ver, partition_in_data=keep_column,
-            deletes=m.get("deletes"), sort_order=m.get("sort_order"),
+        # the first replace declares the spec; later ones match it
+        m.update(partition_by=partition_by, partition_in_data=keep_column)
+        return _publish_child(
+            path, ver, m, fs, keep_versions, add=entries, files=kept,
+            schema=schema_json,
         )
 
 
@@ -1559,11 +1553,7 @@ def repartition_table(
     `keep_column` keeps it in the data files too (readers can still
     filter on it) vs manifest-metadata-only (derived bucket keys)."""
     fs = fs or _fs_for(path)
-    with table_lock(path, fs):
-        ver = _read_pointer(path, fs)
-        if ver is None:
-            raise FileNotFoundError(f"no versioned table at {path}")
-        m = _load_manifest(path, ver, fs)
+    with _live_table(path, fs, "repartition_table") as (ver, m):
         df = _read_with_deletes(spark, path, m)
         if partition_by is None:
             return _commit_locked(df, path, keep_versions, fs)
@@ -1593,52 +1583,51 @@ def append_rows(path: str, arrow_table, fs=None) -> None:
     written files.
 
     Control tables only — data-plane appends stay on the cluster."""
-    import pyarrow.parquet as pq
-
     fs = fs or _fs_for(path)
-    buf = io.BytesIO()
-    pq.write_table(arrow_table, buf)
-    data = buf.getvalue()
-    fname = f"part-append-{uuid.uuid4().hex}.parquet"
     with table_lock(path, fs):
         ver = _read_pointer(path, fs)
         if ver is None and _has_plain_files(path, fs):
             # legacy plain dir: complete-file publish straight into it (the
             # dir stays legacy until a commit migrates it)
-            fs.write_bytes_atomic(_join(path, fname), data)
+            _write_arrow_file(path, None, arrow_table, fs)
             return
-        tag = f"a-{uuid.uuid4().hex[:8]}"
-        rel = f"{DATA}/{tag}/{fname}"
-        fs.mkdirs(_join(path, DATA, tag))
-        fs.write_bytes_atomic(_join(path, rel), data)
-        entry = {"path": rel, "bytes": len(data)}
+        entry = _write_arrow_file(path, f"a-{uuid.uuid4().hex[:8]}", arrow_table, fs)
         if ver is None:
             schema_json = _arrow_schema_json(arrow_table)
             _publish(path, [entry], schema_json, None, fs, 2, None)
         else:
-            m = _load_manifest(path, ver, fs)
-            _publish(
-                path, m["files"] + [entry], m.get("schema"),
-                m.get("partition_by"), fs, 2, ver,
-                partition_in_data=m.get("partition_in_data", False),
-                deletes=m.get("deletes"),
-                sort_order=m.get("sort_order"),
-            )
+            _publish_child(path, ver, _load_manifest(path, ver, fs), fs, add=[entry])
 
 
-def _write_arrow_file(path: str, rel_dir_tag: str, arrow_table, fs) -> dict:
-    """Serialize a small pyarrow table into `_data/<tag>/` atomically and
-    return its manifest entry — the shared building block of the
-    driver-side control-plane writers (no Spark job)."""
+def _write_arrow_file(path: str, rel_dir_tag: str | None, arrow_table, fs) -> dict:
+    """Serialize a small pyarrow table into `_data/<tag>/` (the table root
+    when `rel_dir_tag` is None) atomically and return its manifest entry —
+    the shared building block of the driver-side control-plane writers
+    (no Spark job)."""
     import pyarrow.parquet as pq
 
     buf = io.BytesIO()
     pq.write_table(arrow_table, buf)
     data = buf.getvalue()
-    rel = f"{DATA}/{rel_dir_tag}/part-driver-{uuid.uuid4().hex}.parquet"
-    fs.mkdirs(_join(path, DATA, rel_dir_tag))
+    name = f"part-driver-{uuid.uuid4().hex}.parquet"
+    rel = f"{DATA}/{rel_dir_tag}/{name}" if rel_dir_tag else name
+    fs.mkdirs(_join(path, rel).rsplit("/", 1)[0])
     fs.write_bytes_atomic(_join(path, rel), data)
     return {"path": rel, "bytes": len(data)}
+
+
+def _write_arrow_deletes(path: str, arrow_table, key_cols: list[str], fs) -> dict:
+    """Driver-side equality-delete file: `arrow_table`'s distinct
+    `key_cols` tuples serialized into a fresh `_data/d-*` dir."""
+    import pyarrow as pa
+
+    keys = arrow_table.select(key_cols).to_pandas().drop_duplicates()
+    entry = _write_arrow_file(
+        path, f"d-{uuid.uuid4().hex[:8]}",
+        pa.Table.from_pandas(keys, preserve_index=False), fs,
+    )
+    entry["key_cols"] = key_cols
+    return entry
 
 
 def delete_keys_rows(
@@ -1654,31 +1643,9 @@ def delete_keys_rows(
     `delete_keys`."""
     fs = fs or _fs_for(path)
     key_cols = list(key_cols or arrow_table.column_names)
-    with table_lock(path, fs):
-        ver = _read_pointer(path, fs)
-        if ver is None:
-            raise FileNotFoundError(
-                f"no versioned table at {path}: delete_keys_rows needs the "
-                "manifest layout (commit() the table first)"
-            )
-        m = _load_manifest(path, ver, fs)
-        for e in m["files"]:
-            e.setdefault("seq", 0)
-        pdf = arrow_table.select(key_cols).to_pandas().drop_duplicates()
-        import pyarrow as pa
-
-        entry = _write_arrow_file(
-            path, f"d-{uuid.uuid4().hex[:8]}",
-            pa.Table.from_pandas(pdf, preserve_index=False), fs,
-        )
-        entry["key_cols"] = key_cols
-        return _publish(
-            path, m["files"], m.get("schema"), m.get("partition_by"), fs,
-            keep_versions, ver,
-            partition_in_data=m.get("partition_in_data", False),
-            deletes=(m.get("deletes") or []) + [entry],
-            sort_order=m.get("sort_order"),
-        )
+    with _live_table(path, fs, "delete_keys_rows") as (ver, m):
+        entry = _write_arrow_deletes(path, arrow_table, key_cols, fs)
+        return _publish_child(path, ver, m, fs, keep_versions, deletes=[entry])
 
 
 def upsert_rows(
@@ -1691,8 +1658,6 @@ def upsert_rows(
     the keys vanish while the incoming rows survive). The control-plane
     fast path for ledger/status upserts; data-plane batches belong on
     the cluster via `upsert_mor`. Creates the table when absent."""
-    import pyarrow as pa
-
     fs = fs or _fs_for(path)
     with table_lock(path, fs):
         ver = _read_pointer(path, fs)
@@ -1702,29 +1667,16 @@ def upsert_rows(
                     f"legacy plain table at {path}: commit() it to the "
                     "manifest layout before MoR upserts"
                 )
-            entry = _write_arrow_file(path, f"a-{uuid.uuid4().hex[:8]}", arrow_table, fs)
+        entry = _write_arrow_file(path, f"a-{uuid.uuid4().hex[:8]}", arrow_table, fs)
+        if ver is None:
             return _publish(
                 path, [entry], _arrow_schema_json(arrow_table), None, fs,
                 keep_versions, None,
             )
-        m = _load_manifest(path, ver, fs)
-        for e in m["files"]:
-            e.setdefault("seq", 0)
-        data_entry = _write_arrow_file(
-            path, f"a-{uuid.uuid4().hex[:8]}", arrow_table, fs
-        )
-        keys = arrow_table.select(list(key_cols)).to_pandas().drop_duplicates()
-        del_entry = _write_arrow_file(
-            path, f"d-{uuid.uuid4().hex[:8]}",
-            pa.Table.from_pandas(keys, preserve_index=False), fs,
-        )
-        del_entry["key_cols"] = list(key_cols)
-        return _publish(
-            path, m["files"] + [data_entry], m.get("schema"),
-            m.get("partition_by"), fs, keep_versions, ver,
-            partition_in_data=m.get("partition_in_data", False),
-            deletes=(m.get("deletes") or []) + [del_entry],
-            sort_order=m.get("sort_order"),
+        del_entry = _write_arrow_deletes(path, arrow_table, list(key_cols), fs)
+        return _publish_child(
+            path, ver, _load_manifest(path, ver, fs), fs, keep_versions,
+            add=[entry], deletes=[del_entry],
         )
 
 
@@ -1750,10 +1702,11 @@ def run_concurrent(ops, max_workers: int = 8) -> list:
     results come back in submission order, and the first failure
     re-raises after all ops settle (no half-cancelled fixture state).
 
-    SAFETY: callers must pass ops on DISTINCT tables — same-table writes
-    would serialize on the table lock anyway and on LocalFS flock may
-    deadlock a thread holding the fd. The per-table lock discipline
-    (table_lock) is unchanged; this only overlaps the Spark job wait."""
+    SAFETY: ops may share a table only if each holds its lock briefly,
+    as the `stage_*` registration does; a one-phase writer holds the lock
+    across its whole Spark job, so one-phase writers need DISTINCT tables.
+    The per-table lock discipline (table_lock) is unchanged; this only
+    overlaps the Spark job wait."""
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=max_workers) as ex:
@@ -1769,38 +1722,6 @@ def run_concurrent(ops, max_workers: int = 8) -> list:
     if first_err is not None:
         raise first_err
     return results
-
-
-def commit_many(
-    items: list[tuple], keep_versions: int = 2, max_workers: int = 8
-) -> list[str]:
-    """commit() several DISTINCT tables concurrently: items are
-    (df, path) pairs. Returns the new version names in order."""
-    return run_concurrent(
-        [
-            (lambda d=d, p=p: commit(d, p, keep_versions=keep_versions))
-            for d, p in items
-        ],
-        max_workers=max_workers,
-    )
-
-
-def delete_keys_many(
-    items: list[tuple], keep_versions: int = 2, max_workers: int = 8
-) -> list[str]:
-    """delete_keys() on several DISTINCT tables concurrently: items are
-    (keys_df, path, key_cols) triples."""
-    return run_concurrent(
-        [
-            (
-                lambda kd=kd, p=p, kc=kc: delete_keys(
-                    kd, p, kc, keep_versions=keep_versions
-                )
-            )
-            for kd, p, kc in items
-        ],
-        max_workers=max_workers,
-    )
 
 
 # ------------------------------------------------ staged two-phase ops ----
@@ -1822,15 +1743,29 @@ def stage_write(df: DataFrame, path: str, fs=None) -> dict:
     Staged dirs are registered in the table's `_staged` file (under the
     table lock) BEFORE the write starts, so an interleaved publish's GC
     sweep skips them; publishing releases the registration, and entries
-    older than STAGED_TTL_S (a crashed stager) sweep with their dirs."""
+    older than STAGED_TTL_S (a crashed stager) sweep with their dirs. A
+    failed write releases its tag and deletes its partial dir at once."""
     fs = fs or _fs_for(path)
     tag = f"c-{uuid.uuid4().hex[:8]}"
+    entries = _staged_write(
+        path, tag, fs, lambda: _write_snapshot(df, path, fs, tag=tag)
+    )
+    return {"tag": tag, "entries": entries, "schema": df.schema.jsonValue()}
+
+
+def _staged_write(path: str, tag: str, fs, write):
+    """Register `tag` as staged, then run `write()` (the Spark job landing
+    `_data/<tag>`). If the write raises, the tag is released and the
+    partial dir deleted before re-raising — otherwise the registry would
+    GC-protect the debris for STAGED_TTL_S."""
     _register_staged(path, tag, fs)
-    return {
-        "tag": tag,
-        "entries": _write_snapshot(df, path, fs, tag=tag),
-        "schema": df.schema.jsonValue(),
-    }
+    try:
+        return write()
+    except BaseException:
+        with table_lock(path, fs):
+            _release_staged(path, [tag], fs)
+            fs.delete(_join(path, DATA, tag), recursive=True)
+        raise
 
 
 def commit_staged(
@@ -1857,24 +1792,14 @@ def append_staged(
     """Phase 2 of `stage_write` as an append: publish current files plus
     the staged files (append_files() minus the Spark job)."""
     fs = fs or _fs_for(path)
-    with table_lock(path, fs):
-        ver = _read_pointer(path, fs)
-        if ver is None:
-            raise FileNotFoundError(
-                f"no versioned table at {path}: append_staged needs the "
-                "manifest layout (commit/commit_staged the table first)"
-            )
-        m = _load_manifest(path, ver, fs)
+    with _live_table(path, fs, "append_staged") as (ver, m):
         schema_json = _merged_schema_json(
             m.get("schema"), StructType.fromJson(staged["schema"]),
             merge_schema,
         )
-        new_ver = _publish(
-            path, m["files"] + list(staged["entries"]), schema_json,
-            m.get("partition_by"), fs, keep_versions, ver,
-            partition_in_data=m.get("partition_in_data", False),
-            deletes=m.get("deletes"),
-            sort_order=m.get("sort_order"),
+        new_ver = _publish_child(
+            path, ver, m, fs, keep_versions, add=staged["entries"],
+            schema=schema_json,
         )
         _release_staged(path, [staged["tag"]], fs)
         return new_ver
@@ -1891,15 +1816,9 @@ def stage_delete_keys(
     fs = fs or _fs_for(path)
     key_cols = list(key_cols or keys_df.columns)
     tag = f"d-{uuid.uuid4().hex[:8]}"
-    _register_staged(path, tag, fs)
-    ddir = _join(path, DATA, tag)
-    keys_df.select(*key_cols).distinct().coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(ddir)
-    entries = [
-        {"path": _rel_of(fp), "bytes": n, "key_cols": key_cols}
-        for fp, n, _t in fs.list_files(ddir, ".parquet")
-    ]
+    entries = _staged_write(
+        path, tag, fs, lambda: _write_delete_file(keys_df, path, fs, key_cols, tag)
+    )
     return {"tag": tag, "delete_entries": entries}
 
 
@@ -1911,20 +1830,7 @@ def delete_keys_staged(
     the delete's sequence number is assigned here, at publish time, so
     ordering semantics are identical to the one-phase call)."""
     fs = fs or _fs_for(path)
-    with table_lock(path, fs):
-        ver = _read_pointer(path, fs)
-        if ver is None:
-            raise FileNotFoundError(
-                f"no versioned table at {path}: delete_keys_staged needs "
-                "the manifest layout (commit the table first)"
-            )
-        m = _load_manifest(path, ver, fs)
-        for e in m["files"]:
-            e.setdefault("seq", 0)
-        return _publish(
-            path, m["files"], m.get("schema"), m.get("partition_by"), fs,
-            keep_versions, ver,
-            partition_in_data=m.get("partition_in_data", False),
-            deletes=(m.get("deletes") or []) + list(staged["delete_entries"]),
-            sort_order=m.get("sort_order"),
+    with _live_table(path, fs, "delete_keys_staged") as (ver, m):
+        return _publish_child(
+            path, ver, m, fs, keep_versions, deletes=staged["delete_entries"]
         )

@@ -378,28 +378,106 @@ def test_random_schedules_match_pandas_model(spark, tmp_path):
             pass
 
 
-def test_mor_delete_preserves_declared_sort_order(spark, tmp_path):
-    """Regression (r4): delete_keys/_rows dropped the manifest's
+SORT = {"kind": "range", "cols": ["k"]}
+
+
+def _rows(spark, *ks, p=0):
+    return spark.createDataFrame(
+        [(k, k * 10, p) for k in ks], "k long, v long, p long"
+    )
+
+
+def _keys(spark, *ks):
+    return spark.createDataFrame([(k,) for k in ks], "k long")
+
+
+def _arrow_rows(*ks):
+    import pyarrow as pa
+
+    return pa.table({"k": list(ks), "v": [k * 10 for k in ks], "p": [0] * len(ks)})
+
+
+def _arrow_keys(*ks):
+    import pyarrow as pa
+
+    return pa.table({"k": list(ks)})
+
+
+#: every writer that derives a child snapshot from its parent's manifest
+CHILD_WRITERS = {
+    "append_files": lambda s, p: txn.append_files(_rows(s, 100), p),
+    "delete_keys": lambda s, p: txn.delete_keys(_keys(s, 2), p, ["k"]),
+    "delete_positions": lambda s, p: txn.delete_positions(
+        s.createDataFrame([("gone.parquet", 0)], "target_file string, pos long"), p
+    ),
+    "delete_where_positional": lambda s, p: txn.delete_where_positional(
+        s, p, "k = 3"
+    ),
+    "delete_duplicate_positions": lambda s, p: txn.delete_duplicate_positions(
+        s, p, ["p"]
+    ),
+    "upsert_mor": lambda s, p: txn.upsert_mor(_rows(s, 4, 101), p, ["k"]),
+    "replace_partitions": lambda s, p: txn.replace_partitions(
+        _rows(s, 5, p=0), p, "p"
+    ),
+    "append_rows": lambda s, p: txn.append_rows(p, _arrow_rows(102)),
+    "delete_keys_rows": lambda s, p: txn.delete_keys_rows(p, _arrow_keys(6)),
+    "upsert_rows": lambda s, p: txn.upsert_rows(p, _arrow_rows(7, 103), ["k"]),
+    "append_staged": lambda s, p: txn.append_staged(
+        txn.stage_write(_rows(s, 104), p), p
+    ),
+    "delete_keys_staged": lambda s, p: txn.delete_keys_staged(
+        txn.stage_delete_keys(_keys(s, 8), p, ["k"]), p
+    ),
+    "rewrite_small_files": lambda s, p: maintenance.rewrite_small_files(
+        s, p, target_file_bytes=10 ** 9
+    ),
+}
+
+
+@pytest.mark.parametrize("writer", sorted(CHILD_WRITERS))
+def test_child_writer_carries_parent_state(spark, tmp_path, writer):
+    """Every child writer inherits its parent's partition spec, declared
+    sort order and pending deletes (regression: delete_keys once dropped
     sort_order, silently erasing the clustering record that compaction
-    restores. All MoR writers must carry it forward."""
+    restores)."""
+    path = str(tmp_path / "so")
+    # two files per partition (round-robin tasks) so rewrite_small_files
+    # has something to merge
+    base = _rows(spark, *range(40)).withColumn("p", F.col("k") % 2)
+    txn.replace_partitions(base.repartition(2), path, "p", keep_column=True)
+    m = txn.live_manifest(path)
+    # declare a clustering on the partitioned snapshot (commit() only
+    # declares one on an unpartitioned table)
+    txn._publish(
+        path, m["files"], m["schema"], "p", txn._fs_for(path), 2,
+        m["version"], partition_in_data=True, sort_order=SORT,
+    )
+    txn.delete_keys(_keys(spark, 1), path, ["k"])
+    parent = txn.live_manifest(path)
+
+    CHILD_WRITERS[writer](spark, path)
+    child = txn.live_manifest(path)
+    assert child["parent"] == parent["version"]
+    assert child["seq"] == parent["seq"] + 1
+    assert child["sort_order"] == SORT
+    assert (child["partition_by"], child["partition_in_data"]) == ("p", True)
+    assert child["deletes"][: len(parent["deletes"])] == parent["deletes"]
+    assert txn.read(spark, path).filter(F.col("k") == 1).count() == 0
+
+
+def test_compaction_restores_declared_order_after_mor_churn(spark, tmp_path):
     path = str(tmp_path / "so")
     txn.commit(
         spark.range(100).select(F.col("id").alias("k"), F.col("id").alias("v")),
         path, cluster_by="k",
     )
-    assert txn.live_manifest(path)["sort_order"] == {"kind": "range", "cols": ["k"]}
-    txn.delete_keys(spark.createDataFrame([(1,)], "k long"), path, ["k"])
-    assert txn.live_manifest(path)["sort_order"] == {"kind": "range", "cols": ["k"]}
-    import pyarrow as pa
-
-    txn.delete_keys_rows(path, pa.table({"k": [2]}))
-    txn.upsert_rows(path, pa.table({"k": [3], "v": [30]}), ["k"])
-    assert txn.live_manifest(path)["sort_order"] == {"kind": "range", "cols": ["k"]}
-    # compaction still restores the declared order after MoR churn
-    from airflow_etl_spark.operators import maintenance
+    txn.delete_keys(_keys(spark, 1), path, ["k"])
+    txn.upsert_rows(path, _arrow_rows(3).drop_columns(["p"]), ["k"])
     maintenance.compact(spark, path, 10 ** 9)
     m = txn.live_manifest(path)
-    assert m["sort_order"] == {"kind": "range", "cols": ["k"]} and not m.get("deletes")
+    assert m["sort_order"] == SORT and not m.get("deletes")
+    assert txn.read(spark, path).count() == 99
 
 
 def test_mor_read_preserves_manifest_column_order(spark, tmp_path):

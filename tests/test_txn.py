@@ -843,3 +843,60 @@ def test_run_concurrent_orders_results_and_settles_before_raising():
         _txn.run_concurrent([boom, slow_ok])
     # the failure waited for the slow op to finish
     assert settled.is_set() and done == ["ok"]
+
+
+def _ks(spark, *ks):
+    return spark.createDataFrame([(k,) for k in ks], "k long")
+
+
+def test_staged_dir_survives_same_table_publish_and_gc(spark, tmp_path):
+    """A publish landing between stage_write and append_staged runs GC;
+    the `_staged` registry keeps the unreferenced staged dir alive."""
+    p = str(tmp_path / "stg")
+    txn.commit(_ks(spark, 0, 1), p)
+    staged = txn.stage_write(_ks(spark, 10, 11), p)
+    txn.append_files(_ks(spark, 20), p)
+    assert os.path.isdir(os.path.join(p, txn.DATA, staged["tag"]))
+    txn.append_staged(staged, p)
+    assert staged["tag"] not in txn._read_staged(p)
+    assert sorted(r.k for r in txn.read(spark, p).collect()) == [0, 1, 10, 11, 20]
+
+
+def test_stale_staged_entry_swept_with_its_dir(spark, tmp_path):
+    """A registry entry older than STAGED_TTL_S is a crashed stager's:
+    the next publish drops the entry and deletes its dir."""
+    p = str(tmp_path / "stale")
+    txn.commit(_ks(spark, 0), p)
+    staged = txn.stage_write(_ks(spark, 5), p)
+    reg = txn._read_staged(p)
+    reg[staged["tag"]] -= txn.STAGED_TTL_S + 1
+    LocalFS().write_text_atomic(txn._staged_path(p), json.dumps(reg))
+    txn.append_files(_ks(spark, 1), p)
+    assert txn._read_staged(p) == {}
+    assert not os.path.exists(os.path.join(p, txn.DATA, staged["tag"]))
+
+
+def test_staged_publish_on_missing_table_raises(tmp_path):
+    p = str(tmp_path / "missing")
+    with pytest.raises(FileNotFoundError, match="append_staged"):
+        txn.append_staged({"tag": "c-0", "entries": [], "schema": {}}, p)
+    with pytest.raises(FileNotFoundError, match="delete_keys_staged"):
+        txn.delete_keys_staged({"tag": "d-0", "delete_entries": []}, p)
+
+
+def test_failed_staged_write_leaves_no_registry_entry_or_dir(spark, tmp_path):
+    """A staged Spark write that fails at execution releases its tag and
+    deletes its partial dir, so GC is not blocked on debris for a TTL."""
+    p = str(tmp_path / "leak")
+    txn.commit(_ks(spark, 0), p)
+    dirs = set(os.listdir(os.path.join(p, txn.DATA)))
+    bad = spark.range(3).select(
+        F.when(F.col("id") == 2, F.raise_error(F.lit("staged boom")))
+        .otherwise(F.col("id")).alias("k")
+    )
+    with pytest.raises(Exception, match="staged boom"):
+        txn.stage_write(bad, p)
+    with pytest.raises(Exception, match="staged boom"):
+        txn.stage_delete_keys(bad, p)
+    assert txn._read_staged(p) == {}
+    assert set(os.listdir(os.path.join(p, txn.DATA))) == dirs
