@@ -7,9 +7,9 @@ principles (the same references tests/test_bpe.py checks the Spark
 operators against) and deliberately imports NOTHING from
 `operators/bpe.py` — `tests/test_broadcast_bounds.py`'s sibling
 independence test pins that, so the oracle can never silently become
-"Spark checked against itself". `scripts/gen_expected.py` imports these
-same functions, so the historical generator and the live oracle share
-one reference implementation.
+"Spark checked against itself". `pack_ffd_expected` is the same kind
+of reference for `corpus_pack_ffd`: tests/test_corpus.py runs it live
+as a third engine against that lane's recursive-CTE oracle.
 
 BPE's global-argmax-per-iteration remains CTE-inexpressible (documented
 in the bpe_token_stats docstring) — liveness here means the expected
@@ -38,6 +38,38 @@ FINGERPRINT_SQL = (
 
 def _h28(s: str) -> int:
     return int(hashlib.md5(s.encode()).hexdigest()[:7], 16)
+
+
+def pack_ffd_expected(
+    sizes: list[tuple[int, int]], budget: int = 4096, n_shards: int = 8
+) -> list[tuple]:
+    """(doc_id, shard, bin_id, n_tokens, bin_fill) — per-shard
+    first-fit-decreasing, (tokens desc, id asc) order, salted shard hash —
+    operators.corpus.pack_sequences_ffd semantics."""
+    shards: dict[int, list[tuple[int, int]]] = {}
+    for doc_id, n in sizes:
+        shards.setdefault(_h28(f"pack-v1:{doc_id}") % n_shards, []).append(
+            (doc_id, n)
+        )
+    rows = []
+    for s, members in shards.items():
+        members.sort(key=lambda t: (-t[1], t[0]))
+        bins: list[int] = []
+        assign: list[tuple[int, int, int]] = []
+        for doc_id, tok in members:
+            placed = None
+            for b, used in enumerate(bins):
+                if used + tok <= budget:
+                    placed = b
+                    bins[b] = used + tok
+                    break
+            if placed is None:
+                placed = len(bins)
+                bins.append(tok)
+            assign.append((doc_id, tok, placed))
+        for doc_id, tok, b in assign:
+            rows.append((doc_id, s, b, tok, bins[b]))
+    return sorted(rows)
 
 
 def _norm_words(text: str) -> list[str]:

@@ -184,8 +184,8 @@ def bpe_train(
     batched merge sequence is deterministic (fully-ordered ranking +
     greedy rule) but is NOT guaranteed identical to the sequential
     sequence; the independent pure-Python reference in
-    scripts/gen_expected.py implements the identical batched rule, so
-    batched runs stay VALUES-oracle-checkable.
+    airflow_etl_spark/_bpe_reference.py implements the identical batched
+    rule, so batched runs stay VALUES-oracle-checkable.
 
     `sample_fraction` — SAMPLED training (VERDICT r5 #6 / r6 #5), the
     standard production-tokenizer move (merge statistics are extremely

@@ -58,18 +58,28 @@ def compact(
     fs = fs or txn._fs_for(path)
     # probe + read + commit all inside the table lock: probing outside
     # races a concurrent writer's legacy→versioned migration (its GC
-    # deletes the very files this plan would scan)
+    # deletes the very files this plan would scan). The pointer and
+    # manifest are read ONCE here; every read below plans off `m`.
     with txn.table_lock(path, fs):
-        if not txn.table_exists(path, fs):
+        ver = txn._read_pointer(path, fs)
+        m = txn._load_manifest(path, ver, fs) if ver else {}
+        if not m and not txn._has_plain_files(path, fs):
             raise FileNotFoundError(f"no table at {path}")
-        total = txn.live_bytes(path, fs)
+        # a legacy plain dir (no manifest) is migrated by this compaction
+        total = (
+            sum(e.get("bytes", 0) for e in m["files"]) if m
+            else txn.live_bytes(path, fs)
+        )
         n_files = max(1, math.ceil(total / target_file_bytes))
-        pcol = txn.live_partition_by(path, fs)
+        pcol = m.get("partition_by")
         if pcol is None:
-            df = txn.read(spark, path, fs)
+            df = (
+                txn._read_with_deletes(spark, path, m) if m
+                else txn.read(spark, path, fs)
+            )
             # restore the table's DECLARED layout: appends degrade
             # clustering; compaction re-sorts per the recorded order
-            order = (txn.live_manifest(path, fs) or {}).get("sort_order")
+            order = m.get("sort_order")
             if order and order.get("kind") == "zorder":
                 txn._commit_locked(
                     df, path, fs=fs, zorder_by=order["cols"],
@@ -87,11 +97,11 @@ def compact(
         # (value re-attached from manifest metadata when it is not a data
         # column), write back through the same COW machinery — one Spark
         # job, partition purity preserved
-        m = txn.live_manifest(path, fs)
         in_data = m.get("partition_in_data", False)
         parts = []
-        for v in txn.partition_values(path, fs):
-            pdf = txn.read_partitions(spark, path, [v], fs)
+        for v in sorted({e.get("partition") for e in m["files"]} - {None}):
+            entries = [e for e in m["files"] if e.get("partition") == v]
+            pdf = txn._read_with_deletes(spark, path, m, entries)
             if not in_data:
                 pdf = pdf.withColumn(pcol, F.lit(v))
             parts.append(pdf)
@@ -107,8 +117,8 @@ def compact(
             keep_column=in_data,
         )
         txn._publish(
-            path, entries, m.get("schema"), pcol, fs, 2,
-            txn._read_pointer(path, fs), partition_in_data=in_data,
+            path, entries, m.get("schema"), pcol, fs, 2, ver,
+            partition_in_data=in_data,
         )
         return n_files
 

@@ -95,23 +95,19 @@ def _bcast_dim(
     """Bounded dimension broadcast (r12, VERDICT r11 #1): hint `rel`
     broadcast only while `factor` × the base `table`'s row count — a
     metadata-only parquet footer read, cached per session — fits
-    core.BROADCAST_MAX_ROWS. Valid whenever `rel` derives from `table`
-    by row-non-increasing ops (filter/project/unique-key joins), or by
-    a fixed `factor`-way expansion (the synthesized partsupp is
-    4·|part|). TPC-H dimensions GROW with scale factor: supplier is
-    10k·SF rows, so the forced hints these replaced were correct at
-    every bench scale and a planned driver OOM at the 100 TB SF — the
-    same class the r11 sf100 probe caught in verify_candidates. Over
-    the bound the relation joins unhinted (AQE then picks the
-    strategy from real sizes)."""
-    from .operators.core import BROADCAST_MAX_ROWS
-
+    core.broadcast_if_bounded's row budget. Valid whenever `rel`
+    derives from `table` by row-non-increasing ops (filter/project/
+    unique-key joins), or by a fixed `factor`-way expansion (the
+    synthesized partsupp is 4·|part|). TPC-H dimensions GROW with scale
+    factor: supplier is 10k·SF rows, so the forced hints these replaced
+    were correct at every bench scale and a planned driver OOM at the
+    100 TB SF — the same class the r11 sf100 probe caught in
+    verify_candidates. Over the bound the relation joins unhinted (AQE
+    then picks the strategy from real sizes)."""
     key = (sf_dir, table)
     if key not in _DIM_COUNTS:
         _DIM_COUNTS[key] = T(spark, sf_dir, table).count()
-    if _DIM_COUNTS[key] * factor <= BROADCAST_MAX_ROWS:
-        return F.broadcast(rel)
-    return rel
+    return core.broadcast_if_bounded(rel, bound_rows=_DIM_COUNTS[key] * factor)
 
 
 def _bcast_users(spark: SparkSession, sf_dir: str, rel: DataFrame) -> DataFrame:
@@ -123,16 +119,12 @@ def _bcast_users(spark: SparkSession, sf_dir: str, rel: DataFrame) -> DataFrame:
     deployment with >500k active users these relations stop fitting a
     broadcast exactly like a scale-grown TPC-H dimension — same
     adaptive contract as `_bcast_dim`."""
-    from .operators.core import BROADCAST_MAX_ROWS
-
     key = (sf_dir, "__events_users")
     if key not in _DIM_COUNTS:
         _DIM_COUNTS[key] = (
             T(spark, sf_dir, "events").select("user_id").distinct().count()
         )
-    if _DIM_COUNTS[key] <= BROADCAST_MAX_ROWS:
-        return F.broadcast(rel)
-    return rel
+    return core.broadcast_if_bounded(rel, bound_rows=_DIM_COUNTS[key])
 
 
 # --------------------------------------------------------------------------
@@ -5864,7 +5856,7 @@ def _fingerprint_values_oracle(
     algorithms (VERDICT r3 #3): the algorithm can't run in DuckDB, but
     its output on a known input is a plain relation — generated by the
     INDEPENDENT pure-Python reference implementation
-    (scripts/gen_expected.py), keyed by a fingerprint of the documents
+    (`_bpe_reference`), keyed by a fingerprint of the documents
     table so the same SQL string serves every embedded scale factor
     (sf0.001 for the local suite, sf0.01 for the driver's gate). An
     unknown fingerprint yields zero rows → a loud row-count mismatch,
@@ -5892,15 +5884,15 @@ def _fingerprint_values_oracle(
 def _ffd_oracle_sql(budget: int = 4096, n_shards: int = 8) -> str:
     """LIVE recursive-CTE replay of first-fit-decreasing (r11, VERDICT
     r10 #5 — previously a fingerprint-keyed VALUES relation from
-    scripts/gen_expected.py): FFD's greedy loop is sequential but its
+    the pure-Python FFD): FFD's greedy loop is sequential but its
     STATE is just the per-shard bin-fill list, which a DuckDB recursive
     CTE carries as a LIST column exactly like ts_holt_trend carries its
     (level, trend) scalars — one document placed per iteration, first
     fit found with list_filter over the fills, the chosen slot updated
     with list_transform. This upgrades the weakest oracle class in the
     registry to a genuine second-engine execution; the independent
-    pure-Python reference in scripts/gen_expected.py remains as a third
-    cross-check in tests."""
+    pure-Python reference (_bpe_reference.pack_ffd_expected) remains as
+    a third cross-check in tests."""
     h = (
         "CAST(concat('0x', substr(md5(concat('pack-v1:', "
         "CAST(doc_id AS VARCHAR))), 1, 7)) AS BIGINT)"
@@ -5960,10 +5952,10 @@ def corpus_pack_ffd(spark: SparkSession, sf_dir: str) -> DataFrame:
     greedy in DuckDB via a recursive CTE (one placement per iteration,
     fills carried as a LIST column; see _ffd_oracle_sql), replacing the
     r4 fingerprint-keyed VALUES relation. The independent pure-Python
-    FFD in scripts/gen_expected.py stays as a third cross-check, and
-    invariants (exactly-once assignment, budget bound, determinism under
-    repartitioning, bin count <= concat-and-chunk's) remain asserted in
-    tests/test_corpus.py."""
+    FFD (_bpe_reference.pack_ffd_expected) stays as a third cross-check,
+    and invariants (exactly-once assignment, budget bound, determinism
+    under repartitioning, bin count <= concat-and-chunk's) remain
+    asserted in tests/test_corpus.py."""
     from .operators import corpus
 
     docs = T(spark, sf_dir, "documents")
@@ -6581,11 +6573,11 @@ def bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     via the broadcast vocabulary and report per-document word and BPE
     token counts. Deterministic: pair ties break (count desc, pair asc) —
     so the expected relation, computed by the independent pure-Python
-    BPE (`_bpe_reference`, shared with scripts/gen_expected.py), is
-    emitted as a fingerprint-keyed VALUES oracle and hash-checked like
-    any relational query (on top of the algorithmic parity tests in
-    tests/test_bpe.py). Since r12 that relation regenerates LIVE at
-    oracle_sql() time — no frozen fixture on the parity path."""
+    BPE (`_bpe_reference`), is emitted as a fingerprint-keyed VALUES
+    oracle and hash-checked like any relational query (on top of the
+    algorithmic parity tests in tests/test_bpe.py). Since r12 that
+    relation regenerates LIVE at oracle_sql() time — no frozen fixture
+    on the parity path."""
     from .operators import bpe
 
     docs = T(spark, sf_dir, "documents")
@@ -6621,7 +6613,7 @@ def bpe_batched_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     in ~30k/batch job waves instead of 30k sequential ones (r4 verdict
     "What's missing #2"). Deterministic (fully-ordered ranking + greedy
     disjoint rule), so the independent pure-Python batched reference in
-    scripts/gen_expected.py provides the embedded VALUES oracle, same
+    `_bpe_reference` provides the embedded VALUES oracle, same
     methodology as bpe_token_stats."""
     from .operators import bpe
 
@@ -6661,7 +6653,7 @@ def bpe_sampled_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     path for 30k-merge vocabularies. Deterministic end to end (salted
     h28 sample, fully-ordered ranking, greedy disjoint rule), so the
     independent pure-Python sampled reference in
-    scripts/gen_expected.py provides the embedded VALUES oracle."""
+    `_bpe_reference` provides the embedded VALUES oracle."""
     from .operators import bpe
 
     docs = T(spark, sf_dir, "documents")

@@ -296,13 +296,6 @@ def live_partition_by(path: str, fs=None) -> str | None:
     return m.get("partition_by") if m else None
 
 
-def partition_values(path: str, fs=None) -> list[str]:
-    m = live_manifest(path, fs)
-    if not m or not m.get("partition_by"):
-        return []
-    return sorted({e["partition"] for e in m["files"] if e.get("partition") is not None})
-
-
 def version_log(path: str, fs=None) -> list[dict]:
     """The table's metadata log (Iceberg `$metadata_log_entries` analog,
     reference utlis/clean_metadata.py:54): retained snapshots oldest-first
@@ -1831,6 +1824,8 @@ def delete_keys_staged(
     ordering semantics are identical to the one-phase call)."""
     fs = fs or _fs_for(path)
     with _live_table(path, fs, "delete_keys_staged") as (ver, m):
-        return _publish_child(
+        new_ver = _publish_child(
             path, ver, m, fs, keep_versions, deletes=staged["delete_entries"]
         )
+        _release_staged(path, [staged["tag"]], fs)
+        return new_ver

@@ -15,6 +15,7 @@ import json
 import os
 import sys
 import time
+import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -302,6 +303,57 @@ def _jvm_canary(spark) -> float:
     return sorted(runs[1:])[2]
 
 
+def measure_lane(spark, fn, sf_dir: str, runs: int = N_RUNS) -> list[dict]:
+    """THE lane timer: run registry lane `fn` `runs` times, each from a
+    cleared cache and a freshly built plan written to the noop sink, and
+    return one record per run: `wall_s` (build + execution), `build_s`
+    (the `fn(spark, sf_dir)` call alone) and the Spark `jobs`, `stages`
+    and `tasks` of that run. The job group is set before the build, so
+    eager build-time jobs (persist + count, collected constants) count
+    too; stages are those that ran (shuffle reuse skips the rest)."""
+    sc = spark.sparkContext
+    out = []
+    for _ in range(runs):
+        # drop cached intermediates (the dedup family persists its
+        # signature matrix): a later run must re-execute the FULL query
+        # with only JIT warmth carried over, or `min` would measure
+        # cache reads instead of the query
+        spark.catalog.clearCache()
+        group = f"lane-{uuid.uuid4().hex[:12]}"
+        sc.setJobGroup(group, fn.__name__)
+        t0 = time.perf_counter()
+        df = fn(spark, sf_dir)
+        t1 = time.perf_counter()
+        df.write.format("noop").mode("overwrite").save()
+        t2 = time.perf_counter()
+        sc.setJobGroup(None, None)
+        out.append({
+            "wall_s": round(t2 - t0, 3), "build_s": round(t1 - t0, 3),
+            **_group_counters(sc, group),
+        })
+    return out
+
+
+def _group_counters(sc, group: str) -> dict[str, int]:
+    # the status store is fed by the asynchronous listener bus: drain it
+    # so the group's last stage completions are recorded before reading
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    # a stage reused by a later job is listed by both jobs: count it once
+    stage_ids = {sid for jid in jobs for sid in tracker.getJobInfo(jid).stageIds}
+    # a skipped stage ran no task; the status store evicts skipped stages
+    # first, so its info may already be gone (None)
+    ran = [
+        si for si in map(tracker.getStageInfo, stage_ids)
+        if si is not None and si.numCompletedTasks > 0
+    ]
+    return {
+        "jobs": len(jobs), "stages": len(ran),
+        "tasks": sum(si.numTasks for si in ran),
+    }
+
+
 def _cpu_steal_snapshot() -> tuple[int, int] | None:
     """(steal_jiffies, total_jiffies) from /proc/stat, or None where
     unavailable. Hypervisor STEAL is the noise source neither canary
@@ -341,18 +393,9 @@ def main() -> None:
     cold: dict[str, float] = {}
     spread: dict[str, float] = {}
     for name in HEADLINE:
-        fn = registry[name]
-        per_run = []
-        for _run in range(N_RUNS):
-            # drop cached intermediates (the dedup family persists its
-            # signature matrix): the second run must re-execute the FULL
-            # query with only JIT warmth carried over, or `min` would
-            # measure cache reads instead of the query
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            per_run.append(round(time.perf_counter() - t0, 3))
+        per_run = [
+            r["wall_s"] for r in measure_lane(spark, registry[name], sf_dir)
+        ]
         cold[name] = per_run[0]
         timings[name] = min(per_run)
         spread[name] = round(
@@ -367,14 +410,9 @@ def main() -> None:
 
     extended: dict[str, float] = {}
     for name in EXTENDED:
-        fn = registry[name]
-        per_run = []
-        for _run in range(N_RUNS):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            per_run.append(round(time.perf_counter() - t0, 3))
-        extended[name] = min(per_run)
+        extended[name] = min(
+            r["wall_s"] for r in measure_lane(spark, registry[name], sf_dir)
+        )
         print(f"# [ext] {name}: {extended[name]}s steady", file=sys.stderr)
 
     total = round(sum(timings.values()), 3)

@@ -11,8 +11,8 @@ the sf1-full decade (TPC-H tables amplified 10x, the graph lanes' real
                degree-side hint — the exact shape a >500k-node graph
                takes at 100 TB
 
-Methodology matches bench.py: min of N fresh-plan executions through
-the noop sink, clearCache between runs, jvm canary bracketing.
+Timing is bench.py's lane timer (bench.measure_lane, min of N runs),
+bracketed by the jvm canary.
 
 Run:  python scripts/graph_shuffle_probe.py [--runs 2]
 """
@@ -23,7 +23,6 @@ import argparse
 import json
 import os
 import sys
-import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, os.path.dirname(HERE))
@@ -66,21 +65,13 @@ def main() -> None:
             ):
                 core.BROADCAST_MAX_ROWS = budget
                 try:
-                    per = []
-                    for i in range(max(1, args.runs)):
-                        spark.catalog.clearCache()
-                        spark.sparkContext.setJobDescription(
-                            f"probe: {name} sf{sf} {mode} #{i}"
-                        )
-                        t0 = time.perf_counter()
-                        fn(spark, sf_dir).write.format("noop").mode(
-                            "overwrite"
-                        ).save()
-                        per.append(round(time.perf_counter() - t0, 3))
+                    runs = bench.measure_lane(
+                        spark, fn, sf_dir, max(1, args.runs)
+                    )
                 finally:
                     core.BROADCAST_MAX_ROWS = default_budget
-                out[name][sf][mode] = min(per)
-                print(f"# {name} sf{sf} {mode}: {min(per)}s",
+                out[name][sf][mode] = min(r["wall_s"] for r in runs)
+                print(f"# {name} sf{sf} {mode}: {out[name][sf][mode]}s",
                       file=sys.stderr)
     canary_out = bench._jvm_canary(spark) / bench.JVM_CANARY_REF_S
     print(json.dumps({

@@ -10,9 +10,8 @@ ties break as they would on real data). All other tables symlink to
 sf0.1. This probes PLAN scaling (shuffle sizes, partition counts,
 super-linear traps), not absolute throughput parity.
 
-Timing methodology matches bench.py: min of 2 fresh-plan executions per
-query through the noop sink (full column evaluation), clearCache between
-runs.
+Timing is bench.py's lane timer (bench.measure_lane): min of 2 runs per
+query, each a fresh plan through the noop sink from a cleared cache.
 
 Run:  python scripts/scale_sweep.py [--queries a,b,c] [--skip-sf1]
 """
@@ -23,7 +22,6 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -253,6 +251,7 @@ def main() -> None:
 
     from airflow_etl_spark import get_spark
     from airflow_etl_spark import queries as Q
+    from bench import measure_lane
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark("afes_scale_sweep", cpus=cpus, shuffle_partitions=cpus)
@@ -278,14 +277,10 @@ def main() -> None:
     results: dict[str, dict[str, float]] = {n: {} for n in names}
     for sf, sf_dir in sfs.items():
         for name in names:
-            fn = registry[name]
-            per_run = []
-            for _ in range(max(1, args.runs)):
-                spark.catalog.clearCache()
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                per_run.append(round(time.perf_counter() - t0, 3))
-            results[name][sf] = min(per_run)
+            runs = measure_lane(
+                spark, registry[name], sf_dir, max(1, args.runs)
+            )
+            results[name][sf] = min(r["wall_s"] for r in runs)
             print(f"# sf{sf} {name}: {results[name][sf]}s", file=sys.stderr)
 
     # markdown table (paste into SCALE.md) + one JSON line

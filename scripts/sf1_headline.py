@@ -6,9 +6,9 @@ consistent per-copy key shifts (scale_sweep.build_sf1_full) — and print
 one JSON line comparing against a same-session sf0.1 pass.
 
 This is the standing "is the 2x gate still comfortable one decade up"
-probe: same methodology as bench.py (min of N fresh-plan executions
-through the noop sink, clearCache between runs), both scales measured by
-the SAME process on the same host so the comparison needs no canary.
+probe: bench.py's lane timer (bench.measure_lane, min of N runs), both
+scales measured by the SAME process on the same host so the comparison
+needs no canary.
 
 Run:  python scripts/sf1_headline.py  (idle host; ~10 min)
 """
@@ -17,12 +17,11 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from bench import HEADLINE  # noqa: E402
+from bench import HEADLINE, measure_lane  # noqa: E402
 from scale_sweep import build_sf1_full  # noqa: E402
 
 from airflow_etl_spark import get_spark  # noqa: E402
@@ -40,15 +39,9 @@ def main() -> None:
     out: dict[str, dict[str, float]] = {}
     for sf, sf_dir in (("0.1", "/root/testdata/sf0.1"), ("1full", sf1full)):
         for name in HEADLINE:
-            fn = registry[name]
-            per_run = []
-            for _ in range(N_RUNS):
-                spark.catalog.clearCache()
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                per_run.append(round(time.perf_counter() - t0, 3))
-            out.setdefault(name, {})[sf] = min(per_run)
-            print(f"# sf{sf} {name}: {min(per_run)}s", file=sys.stderr)
+            runs = measure_lane(spark, registry[name], sf_dir, N_RUNS)
+            out.setdefault(name, {})[sf] = min(r["wall_s"] for r in runs)
+            print(f"# sf{sf} {name}: {out[name][sf]}s", file=sys.stderr)
     t01 = round(sum(v["0.1"] for v in out.values()), 3)
     t1 = round(sum(v["1full"] for v in out.values()), 3)
     print(json.dumps({

@@ -25,13 +25,6 @@ from airflow_etl_spark import streaming  # noqa: E402
 import bench  # noqa: E402
 
 
-def run_lane(spark, registry, sf_dir, name):
-    spark.catalog.clearCache()
-    t0 = time.perf_counter()
-    registry[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-    return time.perf_counter() - t0
-
-
 def instrumented_stream_ivm(spark, sf_dir):
     """stream_ivm_sink's body with per-phase timers and per-batch capture."""
     from pyspark.sql import functions as F
@@ -95,14 +88,10 @@ def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark("stream_ivm_probe", cpus=cpus, shuffle_partitions=cpus)
-    sc = spark.sparkContext
     registry = Q.queries()
     registry["q1_pricing_summary"](spark, sf_dir).count()  # warm like bench
 
     def snapshot(tag):
-        st = sc.statusTracker()
-        jobs = len(st.getJobIdsForGroup(None)) if hasattr(
-            st, "getJobIdsForGroup") else -1
         out = {"tag": tag}
         for i in range(3):
             ph, bt = instrumented_stream_ivm(spark, sf_dir)
@@ -118,8 +107,7 @@ def main():
         ]
         t0 = time.perf_counter()
         for name in prefix:
-            for _ in range(args.age_runs):
-                run_lane(spark, registry, sf_dir, name)
+            bench.measure_lane(spark, registry[name], sf_dir, args.age_runs)
         print(json.dumps({
             "tag": "aged",
             "aging_lanes": len(prefix),

@@ -1,13 +1,20 @@
-"""Targeted lane timer: bench.py's exact methodology (fresh-plan
-executions through the noop sink, min + spread reported) for a named
-subset of registry queries, bracketed by the jvm canary so readings are
-normalizable against full bench runs.
+"""The lane-measurement CLI: bench.py's lane timer (`bench.measure_lane`:
+cleared cache, fresh plan, noop sink, per-run Spark counters) over a
+named subset of registry lanes — or over every bench lane (HEADLINE +
+EXTENDED) when none is named — bracketed by the jvm canary so readings
+are normalizable against full bench runs.
 
 Usage:
-    python scripts/time_lanes.py [--runs N] <query> [<query> ...]
+    python scripts/time_lanes.py [--runs N] [<lane> ...]
 
 Prints one JSON line:
-    {"jvm_canary_ratio": ..., "lanes": {name: {"steady": s, "spread_pct": p}}}
+    {"jvm_canary_ratio_in": ..., "jvm_canary_ratio_out": ...,
+     "lanes": {name: {"steady": s, "spread_pct": p,
+                      "runs": [{"wall_s", "build_s", "jobs", "stages",
+                                "tasks"}, ...]}}}
+
+Wall times swing with host load; the jobs/stages/tasks counters do not,
+so they are the before/after evidence for plan and job-count changes.
 """
 
 from __future__ import annotations
@@ -15,7 +22,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -31,27 +37,24 @@ def main() -> None:
     if args and args[0] == "--runs":
         n_runs = int(args[1])
         args = args[2:]
+    names = args or bench.HEADLINE + bench.EXTENDED
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = get_spark("time_lanes", cpus=int(cpus),
                       shuffle_partitions=int(cpus))
     registry = Q.queries()
     canary_in = bench._jvm_canary(spark) / bench.JVM_CANARY_REF_S
-    lanes: dict[str, dict[str, float]] = {}
-    for name in args:
-        fn = registry[name]
-        runs = []
-        for i in range(n_runs):
-            spark.sparkContext.setJobDescription(f"time: {name} #{i}")
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
-        steady = min(runs)
+    lanes: dict[str, dict] = {}
+    for name in names:
+        runs = bench.measure_lane(spark, registry[name], sf_dir, n_runs)
+        walls = [r["wall_s"] for r in runs]
+        steady = min(walls)
         lanes[name] = {
-            "steady": round(steady, 3),
-            "spread_pct": round((max(runs) - steady) / steady, 3),
+            "steady": steady,
+            "spread_pct": round((max(walls) - steady) / steady, 3),
+            "runs": runs,
         }
-        print(f"# {name}: {lanes[name]}", file=sys.stderr)
+        print(f"# {name}: {lanes[name]}", file=sys.stderr, flush=True)
     canary_out = bench._jvm_canary(spark) / bench.JVM_CANARY_REF_S
     print(json.dumps({
         "jvm_canary_ratio_in": round(canary_in, 3),

@@ -118,8 +118,9 @@ def test_vocab_persists_as_txn_artifact(spark, tmp_path):
 # ------------------------------------------------- batched-merge reference
 def _py_bpe_batched(word_counts, n_merges, batch, window_mult=8):
     """Independent reimplementation of the batched rule (mirrors
-    scripts/gen_expected.py): rank, truncate to the candidate window,
-    greedy symbol-disjoint pick, ONE combined merge pass per round."""
+    airflow_etl_spark/_bpe_reference.py): rank, truncate to the
+    candidate window, greedy symbol-disjoint pick, ONE combined merge
+    pass per round."""
     vocab = {w: list(w) + [bpe.EOW] for w in word_counts}
     merges: list[tuple[str, str]] = []
     while len(merges) < n_merges:

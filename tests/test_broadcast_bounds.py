@@ -135,10 +135,6 @@ ALLOWLIST: dict[str, tuple[str, str]] = {
     "operators/text.py::rake_keywords":
         ("VOCAB", "candidate-word degree/freq stats (Heaps-sublinear); "
                   "vocab_bound= makes it adaptive"),
-    "queries.py::_bcast_dim":
-        ("ADAPTIVE", "metadata row count of the base dim x factor"),
-    "queries.py::_bcast_users":
-        ("ADAPTIVE", "measured distinct-user count, session-cached"),
     "queries.py::_hash_capped":
         ("SCALAR", "1-row ppm threshold"),
     "queries.py::_partsupp":

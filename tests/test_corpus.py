@@ -777,26 +777,16 @@ def test_kfold_clusters_never_straddle_folds(spark, sf_dir):
 
 
 def test_ffd_live_oracle_matches_python_reference_values():
-    """The r11 recursive-CTE FFD oracle (queries._ffd_oracle_sql) is a
-    LIVE DuckDB execution of the greedy; the r4-r10 oracle was a
-    fingerprint-keyed VALUES relation generated by the INDEPENDENT
-    pure-Python FFD in scripts/gen_expected.py (_expected.PACK_FFD).
-    Running both in DuckDB over the same documents table and asserting
-    equality makes the pure-Python reference a third engine
-    cross-checking the CTE — no Spark involved."""
+    """The recursive-CTE FFD oracle (queries._ffd_oracle_sql) is a LIVE
+    DuckDB execution of the greedy. The INDEPENDENT pure-Python FFD
+    (_bpe_reference.pack_ffd_expected) runs live over the same
+    documents table and must yield the same rows — a third engine
+    cross-checking the CTE, no Spark involved."""
     import duckdb
 
-    from airflow_etl_spark._expected import PACK_FFD
-    from airflow_etl_spark.queries import (
-        _ffd_oracle_sql,
-        _fingerprint_values_oracle,
-    )
+    from airflow_etl_spark._bpe_reference import pack_ffd_expected
+    from airflow_etl_spark.queries import _ffd_oracle_sql
 
-    legacy = _fingerprint_values_oracle(
-        PACK_FFD,
-        ["doc_id", "shard", "bin_id", "n_tokens", "bin_fill"],
-        "doc_id",
-    )
     live = _ffd_oracle_sql()
     for sf in ("0.001", "0.01"):
         con = duckdb.connect()
@@ -804,7 +794,8 @@ def test_ffd_live_oracle_matches_python_reference_values():
             "CREATE VIEW documents AS SELECT * FROM "
             f"'/root/testdata/sf{sf}/documents.parquet'"
         )
-        got_legacy = con.execute(legacy).fetchall()
+        sizes = con.execute("SELECT doc_id, n_chars FROM documents").fetchall()
         got_live = con.execute(live).fetchall()
-        assert len(got_legacy) > 0, f"sf{sf}: fingerprint not in PACK_FFD"
-        assert got_live == got_legacy, f"sf{sf}: live CTE != reference"
+        want = pack_ffd_expected([(d, int(n)) for d, n in sizes])
+        assert len(want) > 0, f"sf{sf}: empty documents table"
+        assert got_live == want, f"sf{sf}: live CTE != reference"

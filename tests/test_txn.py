@@ -900,3 +900,22 @@ def test_failed_staged_write_leaves_no_registry_entry_or_dir(spark, tmp_path):
         txn.stage_delete_keys(bad, p)
     assert txn._read_staged(p) == {}
     assert set(os.listdir(os.path.join(p, txn.DATA))) == dirs
+
+
+def test_same_table_concurrent_stages_publish_in_order(spark, tmp_path):
+    """Two stage_writes and a stage_delete_keys on ONE table overlap
+    through run_concurrent (each holds the table lock only to register
+    its tag); publishing them in order gives both staged row sets minus
+    the deleted keys and leaves no staged registration behind."""
+    p = str(tmp_path / "conc")
+    txn.commit(_ks(spark, 0, 1), p)
+    a, b, d = txn.run_concurrent([
+        lambda: txn.stage_write(_ks(spark, 10, 11, 12), p),
+        lambda: txn.stage_write(_ks(spark, 20, 21), p),
+        lambda: txn.stage_delete_keys(_ks(spark, 1, 11, 21), p),
+    ])
+    txn.append_staged(a, p)
+    txn.append_staged(b, p)
+    txn.delete_keys_staged(d, p)
+    assert sorted(r.k for r in txn.read(spark, p).collect()) == [0, 10, 12, 20]
+    assert txn._read_staged(p) == {}
