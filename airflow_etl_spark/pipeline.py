@@ -28,6 +28,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import SparkSession, functions as F
 
 from . import vault
+from .catalog import load_table
 from .ledger import Ledger
 from .operators import drift
 from .operators.checks import PipelineStateError
@@ -140,9 +141,10 @@ class Pipeline:
         return read_table(self.spark, self._tpath(schema, table))
 
     def _source(self, table: str):
-        """A live source table. Read fresh on every call: sf_dir moves per
-        date and sources are rewritten in place."""
-        return self.spark.read.parquet(f"{self.sf_dir}/{table}.parquet")
+        """A live source table. sf_dir moves per date and sources are
+        rewritten in place; the catalog re-infers a rewritten file's
+        schema."""
+        return load_table(self.spark, self.sf_dir, table)
 
     def _checkpoint(self, run_id: str, name: str, schema: str,
                     source_name: str, etl_date: str) -> None:

@@ -83,48 +83,37 @@ def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return catalog.load_table(spark, sf_dir, name)
 
 
-#: (sf_dir, table) -> metadata-only parquet row count, cached for the
-#: session so a whole bench/parity sweep pays each count exactly once.
-_DIM_COUNTS: dict[tuple[str, str], int] = {}
-
-
 def _bcast_dim(
     spark: SparkSession, sf_dir: str, table: str, rel: DataFrame,
     factor: int = 1,
 ) -> DataFrame:
     """Bounded dimension broadcast (r12, VERDICT r11 #1): hint `rel`
     broadcast only while `factor` × the base `table`'s row count — a
-    metadata-only parquet footer read, cached per session — fits
-    core.broadcast_if_bounded's row budget. Valid whenever `rel`
-    derives from `table` by row-non-increasing ops (filter/project/
-    unique-key joins), or by a fixed `factor`-way expansion (the
-    synthesized partsupp is 4·|part|). TPC-H dimensions GROW with scale
-    factor: supplier is 10k·SF rows, so the forced hints these replaced
-    were correct at every bench scale and a planned driver OOM at the
-    100 TB SF — the same class the r11 sf100 probe caught in
+    metadata-only parquet footer read that catalog.row_count caches per
+    file identity — fits core.broadcast_if_bounded's row budget. Valid
+    whenever `rel` derives from `table` by row-non-increasing ops
+    (filter/project/unique-key joins), or by a fixed `factor`-way
+    expansion (the synthesized partsupp is 4·|part|). TPC-H dimensions
+    GROW with scale factor: supplier is 10k·SF rows, so the forced hints
+    these replaced were correct at every bench scale and a planned driver
+    OOM at the 100 TB SF — the same class the r11 sf100 probe caught in
     verify_candidates. Over the bound the relation joins unhinted (AQE
     then picks the strategy from real sizes)."""
-    key = (sf_dir, table)
-    if key not in _DIM_COUNTS:
-        _DIM_COUNTS[key] = T(spark, sf_dir, table).count()
-    return core.broadcast_if_bounded(rel, bound_rows=_DIM_COUNTS[key] * factor)
+    n_rows = catalog.row_count(spark, sf_dir, table)
+    return core.broadcast_if_bounded(rel, bound_rows=n_rows * factor)
 
 
 def _bcast_users(spark: SparkSession, sf_dir: str, rel: DataFrame) -> DataFrame:
     """Bounded broadcast for PER-USER aggregate relations over the
     events stream (r12): the bound is the measured distinct-user count
-    — one count-distinct job per (session, sf_dir), cached, so every
+    — one count-distinct job per events file identity, cached, so every
     later per-user lane broadcasts (or not) for free. The user
     dimension grows with the USER BASE, not event volume, but at a
     deployment with >500k active users these relations stop fitting a
     broadcast exactly like a scale-grown TPC-H dimension — same
     adaptive contract as `_bcast_dim`."""
-    key = (sf_dir, "__events_users")
-    if key not in _DIM_COUNTS:
-        _DIM_COUNTS[key] = (
-            T(spark, sf_dir, "events").select("user_id").distinct().count()
-        )
-    return core.broadcast_if_bounded(rel, bound_rows=_DIM_COUNTS[key])
+    n_users = catalog.row_count(spark, sf_dir, "events", distinct="user_id")
+    return core.broadcast_if_bounded(rel, bound_rows=n_users)
 
 
 # --------------------------------------------------------------------------

@@ -14,10 +14,6 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def read_json_file(spark: SparkSession, path: str) -> DataFrame:
     """S5: single JSON object file (e.g. Iceberg metadata.json) → 1-row DF."""
     return spark.read.option("multiLine", "true").json(path)

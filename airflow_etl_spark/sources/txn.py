@@ -97,6 +97,7 @@ from urllib.parse import unquote
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.sql.types import StructField, StructType
 
+from .. import catalog
 from ..operators.core import broadcast_if_bounded
 from .fs import LocalFS, PreconditionFailed
 
@@ -360,7 +361,7 @@ def _read_manifest(
 
 
 def _read_delete_entry(spark: SparkSession, path: str, d: dict) -> DataFrame:
-    return spark.read.parquet(_join(path, d["path"])).select(*d["key_cols"])
+    return catalog.read_parquet(spark, _join(path, d["path"])).select(*d["key_cols"])
 
 
 def _read_with_deletes(
@@ -443,8 +444,8 @@ def _read_with_deletes(
     for p in parts[1:]:
         out = out.unionByName(p)
     if pos_dels:
-        pd_keys = spark.read.parquet(
-            *[_join(path, d["path"]) for d in pos_dels]
+        pd_keys = catalog.read_parquet(
+            spark, *[_join(path, d["path"]) for d in pos_dels]
         ).select("target_file", "pos")
         # bound: Σ manifest bytes of the positional-delete files (same
         # mass-delete gate as the equality branch above); entries

@@ -9,17 +9,9 @@ hook. Local tests drive them with the parquet file source + a memory sink +
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
-def _ensure_nanos_conf(spark: SparkSession) -> None:
-    """Older testdata generations store events.ts as TIMESTAMP(NANOS) —
-    unreadable without the legacy flag (a no-op for MICROS files). Set it at
-    runtime so a caller-provided session (the grading driver's) works
-    without pre-configuring."""
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass  # conf locked → the session must already handle nanos
+from ..catalog import normalize_ts, raw_table
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -29,26 +21,15 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def read_table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """File-source stream over any testdata table: schema probed from a
-    batch read (driver-side metadata only). events.ts stored as
-    TIMESTAMP(NANOS) arrives as a raw long → converted to a micros
-    timestamp; newer MICROS testdata needs no conversion."""
-    if name == "events":
-        _ensure_nanos_conf(spark)
-    schema = spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
+    """File-source stream over any testdata table: the schema comes from
+    the catalog's cache (driver-side metadata only) and events.ts gets
+    the batch reader's normalization."""
+    schema = raw_table(spark, sf_dir, name).schema
     # `[t]` makes the path a glob: the file-stream source then derives
     # basePath = the parent directory (a non-glob single-file path would
     # become its own basePath, which the source rejects)
     df = spark.readStream.schema(schema).parquet(f"{sf_dir}/{name}.parque[t]")
-    if name == "events":
-        ts_type = schema["ts"].dataType
-        if isinstance(ts_type, T.LongType):  # TIMESTAMP(NANOS) as raw long
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif isinstance(ts_type, T.TimestampNTZType):
-            # session tz is UTC → NTZ cast keeps the same instants; LTZ is
-            # what watermarks/windows require
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
+    return normalize_ts(df) if name == "events" else df
 
 
 def windowed_counts(

@@ -308,9 +308,10 @@ def measure_lane(spark, fn, sf_dir: str, runs: int = N_RUNS) -> list[dict]:
     cleared cache and a freshly built plan written to the noop sink, and
     return one record per run: `wall_s` (build + execution), `build_s`
     (the `fn(spark, sf_dir)` call alone) and the Spark `jobs`, `stages`
-    and `tasks` of that run. The job group is set before the build, so
-    eager build-time jobs (persist + count, collected constants) count
-    too; stages are those that ran (shuffle reuse skips the rest)."""
+    and `tasks` of that run, of which `build_jobs` ran during the build.
+    The build runs under its own job group, so eager build-time jobs
+    (schema inference, persist + count, collected constants) count too;
+    stages are those that ran (shuffle reuse skips the rest)."""
     sc = spark.sparkContext
     out = []
     for _ in range(runs):
@@ -320,26 +321,28 @@ def measure_lane(spark, fn, sf_dir: str, runs: int = N_RUNS) -> list[dict]:
         # cache reads instead of the query
         spark.catalog.clearCache()
         group = f"lane-{uuid.uuid4().hex[:12]}"
-        sc.setJobGroup(group, fn.__name__)
+        sc.setJobGroup(f"{group}-build", fn.__name__)
         t0 = time.perf_counter()
         df = fn(spark, sf_dir)
         t1 = time.perf_counter()
+        sc.setJobGroup(group, fn.__name__)
         df.write.format("noop").mode("overwrite").save()
         t2 = time.perf_counter()
         sc.setJobGroup(None, None)
         out.append({
             "wall_s": round(t2 - t0, 3), "build_s": round(t1 - t0, 3),
-            **_group_counters(sc, group),
+            **_group_counters(sc, f"{group}-build", group),
         })
     return out
 
 
-def _group_counters(sc, group: str) -> dict[str, int]:
+def _group_counters(sc, build_group: str, group: str) -> dict[str, int]:
     # the status store is fed by the asynchronous listener bus: drain it
     # so the group's last stage completions are recorded before reading
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     tracker = sc.statusTracker()
-    jobs = tracker.getJobIdsForGroup(group)
+    build_jobs = tracker.getJobIdsForGroup(build_group)
+    jobs = build_jobs + tracker.getJobIdsForGroup(group)
     # a stage reused by a later job is listed by both jobs: count it once
     stage_ids = {sid for jid in jobs for sid in tracker.getJobInfo(jid).stageIds}
     # a skipped stage ran no task; the status store evicts skipped stages
@@ -349,7 +352,7 @@ def _group_counters(sc, group: str) -> dict[str, int]:
         if si is not None and si.numCompletedTasks > 0
     ]
     return {
-        "jobs": len(jobs), "stages": len(ran),
+        "jobs": len(jobs), "build_jobs": len(build_jobs), "stages": len(ran),
         "tasks": sum(si.numTasks for si in ran),
     }
 

@@ -10,11 +10,13 @@ Usage:
 Prints one JSON line:
     {"jvm_canary_ratio_in": ..., "jvm_canary_ratio_out": ...,
      "lanes": {name: {"steady": s, "spread_pct": p,
-                      "runs": [{"wall_s", "build_s", "jobs", "stages",
-                                "tasks"}, ...]}}}
+                      "runs": [{"wall_s", "build_s", "jobs", "build_jobs",
+                                "stages", "tasks"}, ...]}}}
 
 Wall times swing with host load; the jobs/stages/tasks counters do not,
 so they are the before/after evidence for plan and job-count changes.
+`build_jobs` are the jobs the plan build itself launched (schema
+inference, eager counts and persists).
 """
 
 from __future__ import annotations

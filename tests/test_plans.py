@@ -8,7 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from airflow_etl_spark import queries as Q
+from airflow_etl_spark import catalog, queries as Q
 from airflow_etl_spark.plans import (
     formatted_plan,
     physical_plan,
@@ -1061,7 +1061,7 @@ def test_bcast_dim_respects_budget(spark, sf_dir, monkeypatch):
     rows = {tuple(r) for r in df.collect()}
 
     monkeypatch.setattr(C, "BROADCAST_MAX_ROWS", 0)
-    Q._DIM_COUNTS.clear()
+    catalog._ROW_COUNTS.clear()
     thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -1070,4 +1070,4 @@ def test_bcast_dim_respects_budget(spark, sf_dir, monkeypatch):
         assert {tuple(r) for r in df2.collect()} == rows
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
-        Q._DIM_COUNTS.clear()
+        catalog._ROW_COUNTS.clear()
