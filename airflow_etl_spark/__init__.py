@@ -27,4 +27,4 @@ from .pipeline import (  # noqa: F401
     Pipeline,
     SourceConfig,
 )
-from .sources import read_table, safe_overwrite  # noqa: F401
+from .sources import read_table  # noqa: F401

@@ -72,18 +72,6 @@ def dv_hash_key(*cols: Column | str, sep: str = "||") -> Column:
     )
 
 
-def hash60(col: Column | str) -> Column:
-    """Portable 60-bit integer hash: first 15 hex chars of md5 as a BIGINT.
-
-    Used by the MinHash/SimHash operators so the same hash is computable in
-    any engine that has md5 + hex→int conversion (e.g. DuckDB
-    `CAST('0x'||substr(md5(x),1,15) AS BIGINT)`), keeping those operators
-    oracle-checkable. 60 bits fits a signed 64-bit int, always positive.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
-
-
 def tz_shift(ts: Column | str, hours: int = 7) -> Column:
     """The reference's fixed UTC→Asia/Bangkok shift (+7h)."""
     c = F.col(ts) if isinstance(ts, str) else ts

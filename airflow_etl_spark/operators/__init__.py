@@ -6,7 +6,6 @@ Each module maps to a section of SURVEY.md §2:
                the reference's SQL surface.
 - merge:       MERGE INTO upsert (S13) as an outer-join rewrite.
 - scd2:        Data Vault SCD2 satellite load (inferred dbt layer).
-- hashkeys:    DV hub/link/satellite hash keys.
 - drift:       schema-drift detection (schemadrift_* semantics).
 - checks:      row-count reconciliation + all-success assertions (§5).
 - dedup:       exact + MinHash-LSH + SimHash (+ pigeonhole Hamming pairs) +

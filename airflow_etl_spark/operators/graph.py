@@ -30,16 +30,6 @@ from .dedup import h28
 PR_SCALE = 10**12
 
 
-def undirected_degrees(edges: DataFrame) -> DataFrame:
-    """(node, deg) over the symmetrized edge set. `edges` carries
-    (src, dst); each distinct undirected pair contributes 1 to both
-    endpoints' degrees."""
-    sym = symmetrize(edges)
-    return sym.groupBy("src").agg(
-        F.count(F.lit(1)).cast("long").alias("deg")
-    ).select(F.col("src").alias("node"), "deg")
-
-
 def symmetrize(edges: DataFrame) -> DataFrame:
     """Distinct undirected edge set as both directions: (src, dst) rows
     with each pair appearing exactly once per direction."""

@@ -20,15 +20,8 @@ All destructive steps return a *plan* DataFrame; the caller commits it
 from __future__ import annotations
 
 import math
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
-
-
-def dir_bytes(path: str) -> int:
-    return sum(
-        f.stat().st_size for f in Path(path).rglob("*") if f.is_file()
-    )
 
 
 def compact(

@@ -52,11 +52,6 @@ def h60(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def dd_h60(s: str) -> str:
-    """DuckDB expression mirroring h60() bit-for-bit."""
-    return f"CAST(concat('0x', substr(md5({s}), 1, 15)) AS BIGINT)"
-
-
 def fingerprint_rows(
     df: DataFrame,
     key_cols: list[str],

@@ -2,7 +2,7 @@
 FIXTURES.md §6).
 
 The reference's satellites carry `load_date` / `load_end_date` (SCD2) and a
-per-attribute hash-diff, loaded by absent dbt models. Two operators cover
+per-attribute hash-diff, loaded by absent dbt models. Three operators cover
 the lifecycle:
 
 - `scd2_compress`: given a history of observations (key, order_col, attrs),
@@ -10,9 +10,13 @@ the lifecycle:
   (hash-diff), and derive validity intervals [load_date, load_end_date).
   This is the "rebuild satellite from history" path — one window shuffle on
   the key, no joins, scales linearly.
-- `scd2_apply`: given the current satellite and a new snapshot for one
-  load_date, close out changed/retired rows and append new versions — the
-  incremental per-run path (what `dbt run` did per etl_date).
+- `scd2_delta`: given the current satellite and a new snapshot for one
+  load_date, the rows that snapshot changes — closed copies of changed/
+  retired open rows and the new open rows. It is THE change rule: the
+  pipeline writes it as one merge-on-read upsert keyed on
+  (keys, load_date) (what `dbt run` did per etl_date as an Iceberg MERGE).
+- `scd2_apply`: the same load as a full result — the delta merged into
+  the satellite in place (the parity reference for the upsert).
 """
 
 from __future__ import annotations
@@ -56,8 +60,8 @@ def scd2_compress(
     return out
 
 
-def scd2_apply(
-    satellite: DataFrame,
+def scd2_delta(
+    satellite: DataFrame | None,
     snapshot: DataFrame,
     keys: Sequence[str],
     attr_cols: Sequence[str],
@@ -65,68 +69,87 @@ def scd2_apply(
     load_date_col: str = "load_date",
     load_end_date_col: str = "load_end_date",
 ) -> DataFrame:
-    """Apply one snapshot (all current rows for `load_date`) to a satellite.
+    """The rows one snapshot (all current rows for `load_date`) changes in
+    a satellite:
 
-    - key in both, attrs changed → close current row (end date = load_date)
-      and append the new version.
-    - key only in snapshot → append (new entity).
-    - key only in satellite → close current row (entity retired).
-    - unchanged → untouched.
+    - key in both, attrs changed → the key's open row, closed (end date =
+      load_date), and the snapshot's row as a new open version.
+    - key only in snapshot → a new open row (new entity).
+    - key only in satellite → the open row, closed (entity retired).
+    - unchanged → nothing.
 
-    Returns the new satellite. The join is on the satellite's *current* rows
-    only (load_end_date IS NULL); history rows pass through untouched —
-    at scale, with the satellite partitioned by key, this is one co-located
-    join plus an append.
-    """
+    A closed copy keeps every other column of its open row (e.g.
+    `record_source` provenance) and its (keys, load_date) identity, so an
+    upsert keyed on (keys, load_date) replaces the open row with it; an
+    opened row takes the satellite's non-date columns from the snapshot.
+    An identical snapshot gives an empty delta. `satellite=None` (first
+    load) opens every snapshot row. The join touches the satellite's open
+    rows only (load_end_date IS NULL): one full-outer join at key grain."""
     keys = list(keys)
     ld = F.lit(load_date)
-
-    hist = satellite.filter(F.col(load_end_date_col).isNotNull())
-    current = satellite.filter(F.col(load_end_date_col).isNull())
-
-    cur_h = current.withColumn("__hd", dv_hash_key(*attr_cols))
     snap_h = snapshot.withColumn("__hd", dv_hash_key(*attr_cols))
-
-    # null-safe key equality: with plain `on=keys` a NULL-key row never
-    # matches its own snapshot counterpart and gets closed + re-opened every
-    # run even when unchanged (same bug class fixed in merge.upsert)
-    j = cur_h.alias("c").join(
-        snap_h.alias("s"),
-        on=[F.col(f"c.{k}").eqNullSafe(F.col(f"s.{k}")) for k in keys],
-        how="full_outer",
-    )
-    key_cols = [
-        F.coalesce(F.col(f"c.{k}"), F.col(f"s.{k}")).alias(k) for k in keys
-    ]
-
-    # rows of the existing satellite, with end-date closed where needed
-    closed = (
-        j.filter(F.col("c.__hd").isNotNull())
-        .select(
-            *key_cols,
-            *[F.col(f"c.{a}").alias(a) for a in attr_cols],
-            F.col(f"c.{load_date_col}").alias(load_date_col),
-            F.when(
-                F.col("s.__hd").isNull() | (F.col("s.__hd") != F.col("c.__hd")), ld
-            )
-            .otherwise(F.col(f"c.{load_end_date_col}"))
-            .alias(load_end_date_col),
+    if satellite is None:
+        rest = [c for c in snapshot.columns if c not in (*keys, *attr_cols)]
+        cols = [*keys, *attr_cols, load_date_col, load_end_date_col, *rest]
+        open_end = F.when(F.lit(False), ld)  # NULL typed like load_date
+        changed = snap_h.alias("s")
+    else:
+        cols = satellite.columns
+        open_end = F.lit(None).cast(satellite.schema[load_end_date_col].dataType)
+        cur_h = satellite.filter(F.col(load_end_date_col).isNull()).withColumn(
+            "__hd", dv_hash_key(*attr_cols)
         )
-    )
+        # null-safe key equality: with plain `on=keys` a NULL-key row never
+        # matches its own snapshot counterpart and gets closed + re-opened
+        # every run even when unchanged (same bug class fixed in
+        # merge.upsert)
+        changed = cur_h.alias("c").join(
+            snap_h.alias("s"),
+            on=[F.col(f"c.{k}").eqNullSafe(F.col(f"s.{k}")) for k in keys],
+            how="full_outer",
+        ).filter(~F.col("c.__hd").eqNullSafe(F.col("s.__hd")))
 
-    # new versions: snapshot rows that are new keys or changed attrs
-    opened = (
-        j.filter(
-            F.col("s.__hd").isNotNull()
-            & (F.col("c.__hd").isNull() | (F.col("c.__hd") != F.col("s.__hd")))
-        )
-        .select(
-            *key_cols,
-            *[F.col(f"s.{a}").alias(a) for a in attr_cols],
-            ld.alias(load_date_col),
-            F.lit(None).cast(satellite.schema[load_end_date_col].dataType).alias(load_end_date_col),
-        )
-    )
+    opened = changed.filter(F.col("s.__hd").isNotNull()).select(*[
+        ld.alias(c) if c == load_date_col
+        else open_end.alias(c) if c == load_end_date_col
+        else F.col(f"s.{c}")
+        for c in cols
+    ])
+    if satellite is None:
+        return opened
+    closed = changed.filter(F.col("c.__hd").isNotNull()).select(*[
+        ld.alias(c) if c == load_end_date_col else F.col(f"c.{c}")
+        for c in cols
+    ])
+    return closed.unionByName(opened)
 
-    hist_sel = hist.select(*keys, *attr_cols, load_date_col, load_end_date_col)
-    return hist_sel.unionByName(closed).unionByName(opened)
+
+def scd2_apply(
+    satellite: DataFrame | None,
+    snapshot: DataFrame,
+    keys: Sequence[str],
+    attr_cols: Sequence[str],
+    load_date,
+    load_date_col: str = "load_date",
+    load_end_date_col: str = "load_end_date",
+) -> DataFrame:
+    """Apply one snapshot to a satellite and return the new satellite:
+    `scd2_delta`'s rows replace the satellite rows sharing their
+    (keys, load_date) identity — exactly what the merge-on-read upsert of
+    that delta reads back — and every other row (history, unchanged open
+    rows) passes through untouched. `satellite=None` (first load) gives
+    the delta itself."""
+    version = [*keys, load_date_col]
+    delta = scd2_delta(
+        satellite, snapshot, keys, attr_cols, load_date, load_date_col,
+        load_end_date_col,
+    )
+    if satellite is None:
+        return delta
+    replaced = delta.select(*version)
+    untouched = satellite.alias("t").join(
+        replaced.alias("d"),
+        on=[F.col(f"t.{c}").eqNullSafe(F.col(f"d.{c}")) for c in version],
+        how="left_anti",
+    )
+    return untouched.unionByName(delta)

@@ -301,11 +301,6 @@ IVF_K = 16       # coarse cells
 IVF_NPROBE = 2   # cells probed per query
 
 
-def _h28_int(s: str) -> int:
-    """Portable 28-bit md5 hash (same construction as dedup.h28)."""
-    return int(hashlib.md5(s.encode()).hexdigest()[:7], 16)
-
-
 def head_centroids(
     corpus: DataFrame, n_cells: int, id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -1052,10 +1047,6 @@ def _cb_lit_3d_sql(cb: list[list[list[float]]]) -> str:
         for sub in cb
     )
     return f"array({body})"
-
-
-def _cb_lit_3d(cb: list[list[list[float]]]) -> Column:
-    return F.expr(_cb_lit_3d_sql(cb))
 
 
 def _pq_codes_expr(cb: list[list[list[float]]], v_sql: str) -> Column:

@@ -32,7 +32,7 @@ from .catalog import load_table
 from .ledger import Ledger
 from .operators import drift
 from .operators.checks import PipelineStateError
-from .sources import parquet_table_exists, read_table, safe_overwrite
+from .sources import parquet_table_exists, read_table
 from .workflow import DagRunner, RunContext, Task, all_green
 
 
@@ -96,7 +96,6 @@ class Pipeline:
         sf_dir: str,
         multi: MultiSourceConfig | None = None,
         sleep_fn=None,
-        satellite_buckets: int = 32,
         catalog=None,
     ):
         self.spark = spark
@@ -105,14 +104,6 @@ class Pipeline:
         self.multi = multi
         self.sf_dir = sf_dir
         self._sleep_fn = sleep_fn  # injectable for tests (C8); None = time.sleep
-        # satellite_buckets > 0 → copy-on-write satellites partitioned (in
-        # manifest metadata, txn.replace_partitions) by a key-hash bucket:
-        # a load rewrites ONLY partitions containing new/changed/retired
-        # keys (O(changed buckets), not O(table)). This is the DEFAULT —
-        # an SCD2 satellite at 100 TB must never take a full rewrite to
-        # absorb a day's changes. satellite_buckets=0 opts back into the
-        # full-rewrite path (exact reference shape; fine for small dims).
-        self.satellite_buckets = satellite_buckets
         # catalog (sources/catalog_txn.WarehouseCatalog) → every GREEN run
         # ends by publishing one catalog snapshot pinning the live version
         # of every warehouse table (publish_warehouse_state, tagged with
@@ -243,6 +234,12 @@ class Pipeline:
         return n > 0
 
     # -- vault -------------------------------------------------------------
+    def _vault_table(self, table: str):
+        """A raw_vault table, or None before its first load."""
+        if self._exists("raw_vault", table):
+            return self._read("raw_vault", table)
+        return None
+
     def _append_new_keys(self, table: str, load, *args) -> None:
         """Insert-only hub/link load as an O(delta) atomic append:
         `load(existing, *args)` (vault.load_hub / vault.load_link) returns
@@ -252,14 +249,23 @@ class Pipeline:
         table the append commits the initial snapshot."""
         from .sources import txn
 
-        existing = (
-            self._read("raw_vault", table)
-            if self._exists("raw_vault", table)
-            else None
+        txn.append_files(
+            load(self._vault_table(table), *args),
+            self._tpath("raw_vault", table),
         )
-        txn.append_files(load(existing, *args), self._tpath("raw_vault", table))
 
     def load_entity(self, source: SourceConfig, ent: EntityConfig, etl_date: str):
+        """Hub append, then the SCD2 satellite load as ONE merge-on-read
+        upsert (txn.upsert_mor) keyed on (hash key, load_date): the delta
+        (vault.satellite_delta) holds the closed copies of changed/retired
+        open rows, which share the identity of the open rows they replace,
+        and the new open rows. The write is O(changed keys) plus one
+        equality-delete file; no untouched row is rewritten (the Iceberg v2
+        row-level MERGE of the reference's dbt satellites), and compaction
+        folds the pending deletes. An identical snapshot publishes nothing;
+        a first load is the same call on a missing table."""
+        from .sources import txn
+
         staged = self._read("staging", f"{source.name}__{ent.table}").filter(
             F.col("etl_date") == etl_date
         )
@@ -267,86 +273,15 @@ class Pipeline:
             f"hub_{ent.name}", vault.load_hub, staged, ent.business_keys,
             ent.name, etl_date, source.name,
         )
-
         sat_name = f"satellite_{ent.name}"
-        if self.satellite_buckets > 0:
-            self._load_satellite_cow(sat_name, staged, ent, etl_date, source.name)
-        else:
-            sat = self._read("raw_vault", sat_name) if self._exists("raw_vault", sat_name) else None
-            new_sat = vault.load_satellite(
-                sat, staged, ent.business_keys, ent.attr_cols, ent.name,
-                etl_date, source.name,
-            )
-            safe_overwrite(new_sat, self._tpath("raw_vault", sat_name))
-
-    def _load_satellite_cow(self, sat_name: str, staged, ent: EntityConfig,
-                            etl_date: str, record_source: str) -> None:
-        """Copy-on-write SCD2 satellite load over a manifest-partitioned
-        table (txn.replace_partitions): `__bucket = pmod(hash(
-        entity_hash_key), N)` is the partition key (manifest metadata, not
-        a data column); a load computes the buckets containing new/
-        changed/retired keys (metadata-scale collect of distinct bucket
-        ids), reads ONLY those buckets' files back (file-level pruning off
-        the manifest), and atomically swaps exactly those partitions. At
-        100 TB a satellite never gets a full rewrite to absorb a day's
-        changes — the same reason Iceberg/Delta MERGE rewrites only
-        affected files. Because the old files stay pinned until the
-        manifest flips, the rewrite plan may read the very partitions it
-        replaces — no checkpoint/lineage break needed (round 2 paid an
-        eager localCheckpoint here)."""
-        from .functions import dv_hash_key
-        from .sources import txn
-
-        hk = f"{ent.name}_hash_key"
-        n = self.satellite_buckets
-        path = self._tpath("raw_vault", sat_name)
-        bucket_of = F.pmod(F.hash(F.col(hk)), F.lit(n))
-
-        snap = vault.satellite_snapshot(
-            staged, ent.business_keys, ent.attr_cols, ent.name
+        delta = vault.satellite_delta(
+            self._vault_table(sat_name), staged, ent.business_keys,
+            ent.attr_cols, ent.name, etl_date, source.name,
         )
-        if not self._exists("raw_vault", sat_name):
-            init = vault.load_satellite(
-                None, staged, ent.business_keys, ent.attr_cols, ent.name,
-                etl_date, record_source,
-            ).withColumn("__bucket", bucket_of)
-            txn.replace_partitions(init, path, "__bucket")
-            return
-
-        sat = self._read("raw_vault", sat_name)
-        # changed buckets: keys whose current hash-diff differs from the
-        # snapshot's, plus keys on only one side (new / retired)
-        cur = sat.filter(F.col("load_end_date").isNull()).select(
-            F.col(hk), dv_hash_key(*ent.attr_cols).alias("__hd_c")
+        txn.upsert_mor(
+            delta, self._tpath("raw_vault", sat_name),
+            [f"{ent.name}_hash_key", "load_date"],
         )
-        sn = snap.select(F.col(hk), dv_hash_key(*ent.attr_cols).alias("__hd_s"))
-        delta_keys = (
-            cur.join(sn, hk, "full_outer")
-            .filter(
-                F.col("__hd_c").isNull()
-                | F.col("__hd_s").isNull()
-                | (F.col("__hd_c") != F.col("__hd_s"))
-            )
-            .select(F.pmod(F.hash(F.col(hk)), F.lit(n)).alias("__bucket"))
-            .distinct()
-        )
-        # r["__bucket"], not r.__bucket: attribute access here would be
-        # Python-name-mangled to _Pipeline__bucket inside the class body
-        buckets = [r["__bucket"] for r in delta_keys.collect()]  # metadata-scale
-        if not buckets:
-            return  # nothing changed — zero partitions rewritten
-
-        sub_sat = txn.read_partitions(self.spark, path, buckets)
-        staged_sub = staged.filter(
-            F.pmod(
-                F.hash(dv_hash_key(*ent.business_keys)), F.lit(n)
-            ).isin(buckets)
-        )
-        new_sub = vault.load_satellite(
-            sub_sat, staged_sub, ent.business_keys, ent.attr_cols, ent.name,
-            etl_date, record_source,
-        ).withColumn("__bucket", bucket_of)
-        txn.replace_partitions(new_sub, path, "__bucket")
 
     def load_link(self, source: SourceConfig, lk: LinkConfig, etl_date: str):
         staged = self._read("staging", f"{source.name}__{lk.table}").filter(

@@ -62,10 +62,3 @@ def single_partition_window_feeds(df: DataFrame) -> list[str]:
             hits.append(windows[0])
     return hits
 
-
-def has_pushed_filters(df: DataFrame) -> bool:
-    return "PushedFilters: [" in formatted_plan(df)
-
-
-def is_broadcast_join(df: DataFrame) -> bool:
-    return "BroadcastHashJoin" in formatted_plan(df)

@@ -38,17 +38,6 @@ def rollup_totals(rollup_df: DataFrame) -> DataFrame:
     )
 
 
-def _failed(status_df: DataFrame) -> DataFrame:
-    """Failed-task rows: everything not success/skipped INCLUDING NULL
-    status (a task that crashed before reporting) — ~isin alone is NULL for
-    NULL input and filter() would silently drop the very failures the error
-    report exists to surface."""
-    return status_df.filter(
-        ~F.col("status").isin("success", "skipped")
-        | F.col("status").isNull()
-    )
-
-
 def error_details(status_df: DataFrame) -> DataFrame:
     """Failed tasks with the layer extracted from the dag id —
     `dag_id.split('__')[2]` (1-based [2] in the reference's pandas code is

@@ -7,23 +7,10 @@ Sinks: table appends (S9/S10), object deletes (S15). The Spark equivalents:
 
 from __future__ import annotations
 
-import json
 import os
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
-
-
-def read_json_file(spark: SparkSession, path: str) -> DataFrame:
-    """S5: single JSON object file (e.g. Iceberg metadata.json) → 1-row DF."""
-    return spark.read.option("multiLine", "true").json(path)
-
-
-def read_json_objects(path: str) -> dict:
-    """Driver-side JSON read for control-plane decisions (the reference
-    json.loads's metadata files, utlis/clean_metadata.py:228-247)."""
-    with open(path) as f:
-        return json.load(f)
 
 
 def read_yaml_models(spark: SparkSession, root: str) -> DataFrame:
@@ -83,33 +70,9 @@ def list_files(
     return spark.createDataFrame(rows or [], "path string, n_bytes long, mtime double")
 
 
-def append(df: DataFrame, path: str) -> None:
-    """S9/S10 sink: append rows to a parquet table dir."""
-    df.write.mode("append").parquet(path)
-
-
-def overwrite(df: DataFrame, path: str) -> None:
-    df.write.mode("overwrite").parquet(path)
-
-
-def safe_overwrite(df: DataFrame, path: str) -> None:
-    """Overwrite a table whose current contents may feed `df`'s plan.
-
-    A direct overwrite deletes the target before executing the plan, so a
-    read-modify-write on the same path fails with FILE_NOT_EXIST (the
-    reference never hits this because Trino/Iceberg MERGE is transactional).
-    Delegates to the manifest-pointer commit (txn.commit): the new snapshot
-    is fully written while the old version stays live, then an atomic
-    pointer flip publishes it — no crash window where the table is missing
-    or half-swapped."""
-    from . import txn
-
-    txn.commit(df, path)
-
-
 def read_table(spark: SparkSession, path: str) -> DataFrame:
-    """Read a table written by safe_overwrite/txn.commit (pointer layout)
-    or a legacy plain parquet dir — the one reader for mutable tables."""
+    """Read a table written by a txn writer (pointer layout) or a legacy
+    plain parquet dir — the one reader for mutable tables."""
     from . import txn
 
     return txn.read(spark, path)

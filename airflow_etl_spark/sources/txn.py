@@ -24,10 +24,10 @@ table layout::
       _lock / _lock.lease         # writer lock (flock locally, lease else)
 
 A **manifest** is a JSON file listing the table's data files (paths
-relative to the table root, sizes, optional partition values) plus the
-table schema — the same core idea as an Iceberg snapshot's manifest list,
-minus the format machinery. Because a version is a *listing*, not a
-physical directory:
+relative to the table root, sizes, footer row counts and min/max stats,
+optional partition values) plus the table schema — the same core idea as
+an Iceberg snapshot's manifest list, minus the format machinery. Because
+a version is a *listing*, not a physical directory:
 
 - **Appends are O(delta) everywhere.** A new manifest references the old
   files plus the freshly written delta — no hardlinks (POSIX-only), no
@@ -36,7 +36,10 @@ physical directory:
 - **Copy-on-write partition replacement is first-class**
   (`replace_partitions`): the new manifest keeps unaffected partitions'
   files and swaps only the rewritten ones — Iceberg/Delta's
-  overwrite-by-partition, used by the bucketed SCD2 satellite loads.
+  overwrite-by-partition, used by the per-etl_date staging loads.
+- **Row-level MERGE is merge-on-read** (`upsert_mor`): the batch plus an
+  equality-delete file of its keys, one publish — Iceberg v2's
+  row-level deletes, used by the SCD2 satellite loads.
 - **GC is reference-based**: a data file is deleted exactly when no
   retained manifest references it — which makes orphan cleanup after a
   crashed commit (the reference's `remove_orphan_files`,
@@ -897,9 +900,7 @@ def _write_snapshot(
         e = {"path": rel, "bytes": n_bytes}
         if part_col:
             e["partition"] = _partition_of(rel, part_col)
-        stats = _file_stats(fp)
-        if stats:
-            e["stats"] = stats
+        e.update(_file_stats(fp))
         entries.append(e)
     return entries
 
@@ -911,16 +912,18 @@ def _partition_of(rel: str, col: str) -> str | None:
     return None
 
 
-def _file_stats(abs_path: str) -> dict | None:
-    """Per-file column min/max from the parquet FOOTER (no data read) —
-    the manifest's Iceberg-style scan statistics. Driver-side and
+def _file_stats(abs_path: str) -> dict:
+    """The manifest entry fields read from a data file's parquet FOOTER
+    (no data read): Iceberg's `record_count` and per-column min/max
+    `stats`, the scan statistics pruning uses. Driver-side and
     per-delta-file only (a commit stats its own new files, never the
     table), so the cost is one footer parse per written file. Nested and
     binary columns are skipped; dates/timestamps serialize as ISO strings
     (ordered lexicographically, so pruning comparisons still work).
-    Returns None when the footer is unreachable (e.g. a remote object
-    store without a local pyarrow path) — stats are an optimization,
-    absence only disables pruning."""
+    Returns {} when the footer is unreachable (e.g. a remote object
+    store without a local pyarrow path) — the fields are optimizations:
+    a missing `stats` only disables pruning, and a missing
+    `record_count` reads as a non-empty file."""
     import datetime
 
     try:
@@ -928,7 +931,7 @@ def _file_stats(abs_path: str) -> dict | None:
 
         md = pq.ParquetFile(abs_path).metadata
     except Exception:
-        return None
+        return {}
     out: dict[str, list] = {}
     for rg in range(md.num_row_groups):
         row_group = md.row_group(rg)
@@ -950,7 +953,7 @@ def _file_stats(abs_path: str) -> dict | None:
                 out[name] = [mn, mx]
             else:
                 out[name] = [min(cur[0], mn), max(cur[1], mx)]
-    return out or None
+    return {"record_count": md.num_rows, **({"stats": out} if out else {})}
 
 
 def _publish(
@@ -1442,7 +1445,10 @@ def upsert_mor(
 
     Row semantics are replace-whole-row (Iceberg's delete+insert MERGE):
     a matched key's row becomes exactly the source row. For column-subset
-    updates (keep unlisted target columns), use the COW merge."""
+    updates (keep unlisted target columns), use the COW merge.
+
+    An empty `df` changes nothing: its files are removed and the live
+    version is returned without a publish."""
     fs = fs or _fs_for(path)
     with table_lock(path, fs):
         ver = _read_pointer(path, fs)
@@ -1450,16 +1456,19 @@ def upsert_mor(
             return _commit_locked(df, path, keep_versions, fs)
         m = _load_manifest(path, ver, fs)
         schema_json = _merged_schema_json(m.get("schema"), df.schema, merge_schema)
-        entries = _write_snapshot(df, path, fs)
-        deletes: list[dict] = []
-        if entries:
-            # keys come from the files just WRITTEN, not by re-running df —
-            # consistent even for nondeterministic sources, and a key-column
-            # projection over the delta is the cheapest possible job
-            written = df.sparkSession.read.parquet(
-                *[_join(path, e["path"]) for e in entries]
-            )
-            deletes = _write_delete_file(written, path, fs, list(key_cols))
+        tag = f"c-{uuid.uuid4().hex[:8]}"
+        entries = _write_snapshot(df, path, fs, tag=tag)
+        if not any(e.get("record_count", 1) for e in entries):
+            fs.delete(_join(path, DATA, tag), recursive=True)
+            return ver
+        # keys come from the files just WRITTEN, not by re-running df —
+        # consistent even for nondeterministic sources, and a key-column
+        # projection over the delta is the cheapest possible job (the
+        # frame's schema is passed, so no schema-inference job runs)
+        written = df.sparkSession.read.schema(df.schema).parquet(
+            *[_join(path, e["path"]) for e in entries]
+        )
+        deletes = _write_delete_file(written, path, fs, list(key_cols))
         return _publish_child(
             path, ver, m, fs, keep_versions, add=entries, deletes=deletes,
             schema=schema_json,
@@ -1485,7 +1494,7 @@ def replace_partitions(
 
     The partition column lives in the manifest (file → value); by default
     it is metadata only (reads return data columns — right for derived
-    keys like satellite hash buckets), while `keep_column=True` also
+    keys like hash buckets), while `keep_column=True` also
     keeps it as an ordinary data column (right for natural keys like
     etl_date that readers filter on). `read_partitions` prunes at file
     level off the manifest either way, with zero listing.

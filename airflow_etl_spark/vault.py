@@ -12,7 +12,9 @@ utlis/etl_manager.py:894,1231):
 
 Loads are incremental and idempotent: hubs/links are insert-only — their
 loaders return just the rows to append (the *new* hash keys, anti-join J3);
-satellites apply SCD2 via operators.scd2. At scale each
+satellites return just the SCD2 rows to upsert on (hash key, load_date)
+(operators.scd2.scd2_delta; `load_satellite` is the same rule as a full
+result). At scale each
 loader is one shuffle on the hash key — the key is uniformly distributed by
 construction (sha2), so no skew.
 """
@@ -25,7 +27,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from .functions import dv_hash_key
 from .operators.core import anti_new
-from .operators.scd2 import scd2_apply
+from .operators.scd2 import scd2_apply, scd2_delta
 
 
 def hub_snapshot(
@@ -124,6 +126,38 @@ def satellite_snapshot(
     ).distinct()
 
 
+def _scd2_load(rule, satellite, source, business_keys, attr_cols, entity,
+               load_date, record_source):
+    snap = satellite_snapshot(source, business_keys, attr_cols, entity)
+    return rule(
+        satellite, snap.withColumn("record_source", F.lit(record_source)),
+        keys=[f"{entity}_hash_key"], attr_cols=list(attr_cols),
+        load_date=load_date,
+    )
+
+
+def satellite_delta(
+    satellite: DataFrame | None,
+    source: DataFrame,
+    business_keys: Sequence[str],
+    attr_cols: Sequence[str],
+    entity: str,
+    load_date,
+    record_source: str = "engine",
+) -> DataFrame:
+    """SCD2 satellite load for one `load_date` snapshot, as the rows to
+    UPSERT on (`<entity>_hash_key`, load_date) — operators.scd2.scd2_delta:
+    closed copies of changed/retired open rows and the new open rows; the
+    whole snapshot on the initial load (`satellite=None`), nothing for an
+    identical snapshot. record_source is immutable per-row provenance: a
+    closed copy keeps its row's, only newly-opened versions get this
+    load's."""
+    return _scd2_load(
+        scd2_delta, satellite, source, business_keys, attr_cols, entity,
+        load_date, record_source,
+    )
+
+
 def load_satellite(
     satellite: DataFrame | None,
     source: DataFrame,
@@ -133,30 +167,10 @@ def load_satellite(
     load_date,
     record_source: str = "engine",
 ) -> DataFrame:
-    """SCD2 satellite load for one `load_date` snapshot."""
-    hk = f"{entity}_hash_key"
-    snap = satellite_snapshot(source, business_keys, attr_cols, entity)
-    if satellite is None:
-        return snap.select(
-            hk,
-            *attr_cols,
-            F.lit(load_date).alias("load_date"),
-            F.lit(None).cast("string").alias("load_end_date"),
-            F.lit(record_source).alias("record_source"),
-        )
-    sat = satellite.drop("record_source")
-    out = scd2_apply(
-        sat, snap, keys=[hk], attr_cols=list(attr_cols), load_date=load_date
-    )
-    # record_source is immutable per-row provenance: existing versions keep
-    # theirs (joined back on the (key, load_date) version identity); only
-    # newly-opened versions get this load's record_source. A blanket
-    # re-stamp would rewrite history's provenance on every load.
-    prov = satellite.select(hk, "load_date", "record_source")
-    return (
-        out.join(prov, [hk, "load_date"], "left")
-        .withColumn(
-            "record_source",
-            F.coalesce(F.col("record_source"), F.lit(record_source)),
-        )
+    """The satellite after one load, in full: `satellite_delta`'s rows
+    merged into `satellite` (operators.scd2.scd2_apply) — the reference
+    result the pipeline's merge-on-read satellite must read back as."""
+    return _scd2_load(
+        scd2_apply, satellite, source, business_keys, attr_cols, entity,
+        load_date, record_source,
     )

@@ -163,6 +163,28 @@ def test_upsert_mor_chains_and_compacts(spark, tmp_path):
     assert txn.read(spark, path).count() == 100
 
 
+def test_upsert_mor_of_empty_frame_publishes_nothing(spark, tmp_path):
+    """A zero-row upsert (an identical satellite re-load's delta) keeps the
+    live version, its files and the `_data` listing exactly as they were:
+    no new version, no empty data file, no delete file."""
+    import os
+
+    path = _table(spark, tmp_path, n=100)
+    ver = txn._read_pointer(path)
+    m = txn.live_manifest(path)
+    listing = sorted(os.listdir(os.path.join(path, "_data")))
+    empty = spark.range(0).select(
+        F.col("id").alias("k"), (F.col("id") % 10).alias("grp")
+    )
+    assert txn.upsert_mor(empty, path, ["k"]) == ver
+    assert txn._read_pointer(path) == ver
+    assert txn.live_manifest(path) == m
+    assert sorted(os.listdir(os.path.join(path, "_data"))) == listing
+    assert txn.read(spark, path).count() == 100
+    # every data entry records its footer row count (Iceberg record_count)
+    assert sum(e["record_count"] for e in m["files"]) == 100
+
+
 def test_delete_keys_requires_manifest_layout(spark, tmp_path):
     path = str(tmp_path / "legacy")
     spark.range(5).write.parquet(path)

@@ -96,7 +96,7 @@ def test_commit_and_read_roundtrip(spark, tmp_path, tfs):
 
 def test_read_modify_write_without_collect(spark, tmp_path, tfs):
     """commit() must be safe when df's plan reads the table's live version
-    (the safe_overwrite contract)."""
+    (the read-modify-write contract every txn writer keeps)."""
     p = str(tmp_path / "t2")
     txn.commit(_mk(spark, 4), p, fs=tfs)
     df = read_table(spark, p).withColumn("v", F.col("v") + 100)
