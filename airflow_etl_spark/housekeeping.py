@@ -19,11 +19,12 @@ month-bucket predicate).
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import SparkSession, functions as F
 
-from .ledger import Ledger, STATUS_SCHEMA
+from .ledger import Ledger
 from .operators import maintenance
 from .workflow import DagRunner, RunContext, Task
 
@@ -47,15 +48,38 @@ def data_housekeeping_succeeded_this_month(
     """C14 gate predicate: a success row for the data-housekeeping compact
     task whose created_at falls in `month` (reference
     clean_metadata.py:207-224 — `date_format(created_at, '%Y-%m') =
-    current_month`). Ledger-scale read; one tiny filtered scan."""
-    df = ledger.read("status_tasks", STATUS_SCHEMA)
-    hit = df.filter(
-        (F.col("dag_id") == DATA_DAG_ID)
-        & (F.col("task_id") == DATA_TASK_ID)
-        & (F.col("status") == "success")
-        & (F.date_format("created_at", "yyyy-MM") == month)
+    current_month`). A driver-side ledger read; no Spark job."""
+    return any(
+        (r["dag_id"], r["task_id"], r["status"])
+        == (DATA_DAG_ID, DATA_TASK_ID, "success")
+        and r["created_at"].strftime("%Y-%m") == month
+        for r in ledger.rows("status_tasks")
     )
-    return hit.limit(1).count() > 0
+
+
+def fold_control_tables(ledger: Ledger) -> int:
+    """Rewrite every control table under the ledger's dir that holds more
+    than one file (or pending deletes) as ONE file — `txn.read_arrow` →
+    `txn.commit_rows` under the table lock. Each ledger row lands as its
+    own small file, and the driver-side reader opens every one, so this
+    bounds the reader's file count. The rows are unchanged; the previous
+    version stays readable for the table's retention window. Returns the
+    number of tables folded."""
+    from .sources import txn
+
+    folded = 0
+    for name in os.listdir(ledger.dir):
+        path = os.path.join(ledger.dir, name)
+        if txn.live_manifest(path) is None:
+            continue
+        with txn.table_lock(path):
+            m = txn.live_manifest(path)
+            if len(m["files"]) <= 1 and not m.get("deletes"):
+                continue
+            # keep_versions=4 matches the date queue's own commits
+            txn.commit_rows(path, txn.read_arrow(path), keep_versions=4)
+            folded += 1
+    return folded
 
 
 def data_housekeeping_dag(
@@ -265,7 +289,13 @@ def metadata_housekeeping_dag(
     straight to end (the reference's early-return at
     clean_metadata.py:207-224). The retention step only *plans* (keep/
     delete rows); committing deletions stays with the caller — the
-    reference's generate-then-execute housekeeping style."""
+    reference's generate-then-execute housekeeping style.
+
+    A `fold_control_tables` task runs first, ungated: it folds each
+    control table's per-row files into one (see fold_control_tables)."""
+
+    def fold(ctx: RunContext) -> str:
+        return f"folded {fold_control_tables(ledger)} control tables"
 
     def check_gate(ctx: RunContext) -> str:
         month = gate_month or current_month()
@@ -281,9 +311,10 @@ def metadata_housekeeping_dag(
 
     tasks = [
         Task("start"),
+        Task("fold_control_tables", fn=fold, depends_on=["start"]),
         Task(
-            "check_monthly_gate", fn=check_gate, depends_on=["start"],
-            is_branch=True,
+            "check_monthly_gate", fn=check_gate,
+            depends_on=["fold_control_tables"], is_branch=True,
         ),
         Task("retention_plan", fn=run_retention, depends_on=["check_monthly_gate"]),
         Task(

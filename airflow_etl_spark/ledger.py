@@ -14,8 +14,14 @@ parquet-backed tables under a warehouse dir, with the same schemas
 - `latest_status_per_source`: the signature ROW_NUMBER dedup (:228-237).
 - `has_succeeded`: resume-skip check (`check_conditions`, :435-468).
 
-Control tables are tiny; reads collect to the driver by design (the data
-plane never does).
+Control tables hold a few hundred rows, so control reads never launch
+Spark: every query above is Python over `txn.read_arrow` (pyarrow over the
+live manifest's files, deletes applied), appends go through
+`txn.append_rows`, and each date-queue commit is one driver-side
+`txn.commit_rows` under the table flock. A Spark job costs ~1-2 s of
+scheduling latency; these cost milliseconds (the reference runs them as
+Trino metadata queries). `Ledger.read` is the one DataFrame view of a
+control table, for the reports and checks that want Spark.
 """
 
 from __future__ import annotations
@@ -25,9 +31,7 @@ import threading
 import uuid
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-
-from .operators.core import first_by, latest_per_key
+from pyspark.sql import DataFrame, SparkSession
 
 ETL_DATES_SCHEMA = (
     "etl_date string, holiday_flag int, status string, current_date_flag int"
@@ -50,7 +54,7 @@ def _now() -> datetime:
     return datetime.now(timezone.utc).replace(tzinfo=None)
 
 
-def _arrow_table(rows: list[tuple], schema: str):
+def arrow_table(rows: list[tuple], schema: str):
     """Build a pyarrow Table matching a Spark DDL schema string — the
     driver-side fast-append representation. Timestamps become
     timestamp[us, UTC] so Spark reads them as TIMESTAMP (LTZ), type-
@@ -76,33 +80,36 @@ def _arrow_table(rows: list[tuple], schema: str):
     return pa.Table.from_arrays(arrays, schema=pa.schema(fields))
 
 
-def _pick_next_date(dates: DataFrame) -> str | None:
+def _pick_next_date(dates: list[dict]) -> str | None:
     """The queue-pick query (utlis/etl_manager.py:48-53: WHERE
     holiday_flag = 0 AND status IS NULL ORDER BY etl_date LIMIT 1)."""
-    picked = first_by(
-        dates.filter((F.col("holiday_flag") == 0) & F.col("status").isNull()),
-        ["etl_date"],
-    ).collect()
-    return picked[0].etl_date if picked else None
+    return min(
+        (r["etl_date"] for r in dates
+         if r["holiday_flag"] == 0 and r["status"] is None),
+        default=None,
+    )
 
 
-def _commit_date_status(
-    dates: DataFrame, path: str, etl_date: str, status: str
-) -> None:
-    """UPDATE etl_dates SET status, current_date_flag
-    (utlis/etl_manager.py:319-337). The caller holds the table flock."""
+def _commit_dates(path: str, rows: list[tuple]) -> None:
+    """Replace etl_dates with `rows` (ETL_DATES_SCHEMA tuples). The caller
+    holds the table flock."""
     from .sources import txn
 
-    is_date = F.col("etl_date") == etl_date
-    out = dates.withColumn(
-        "status", F.when(is_date, F.lit(status)).otherwise(F.col("status"))
-    ).withColumn(
-        "current_date_flag", F.when(is_date, F.lit(1)).otherwise(F.lit(0))
-    )
     # keep_versions=4 on hot control tables: claim/mark commits can land
     # in quick succession from a second driver, and a reader pinned to an
     # older manifest must still find its files
-    txn._commit_locked(out, path, keep_versions=4)
+    txn.commit_rows(path, arrow_table(rows, ETL_DATES_SCHEMA), keep_versions=4)
+
+
+def _with_date_status(dates: list[dict], etl_date: str, status: str) -> list[tuple]:
+    """UPDATE etl_dates SET status, current_date_flag
+    (utlis/etl_manager.py:319-337)."""
+    return [
+        (r["etl_date"], r["holiday_flag"],
+         status if r["etl_date"] == etl_date else r["status"],
+         int(r["etl_date"] == etl_date))
+        for r in dates
+    ]
 
 
 class Ledger:
@@ -128,7 +135,17 @@ class Ledger:
 
         return parquet_table_exists(self._path(table))
 
+    def rows(self, table: str) -> list[dict]:
+        """A control table's live rows, read on the driver
+        (`txn.read_arrow`, no Spark job); [] before its first write."""
+        from .sources import txn
+
+        if not self._exists(table):
+            return []
+        return txn.read_arrow(self._path(table)).to_pylist()
+
     def read(self, table: str, schema: str) -> DataFrame:
+        """The one DataFrame view of a control table (reports, checks)."""
         from .sources import txn
 
         if self._exists(table):
@@ -150,7 +167,7 @@ class Ledger:
         from .sources import txn
 
         with self._lock:
-            txn.append_rows(self._path(table), _arrow_table(rows, schema))
+            txn.append_rows(self._path(table), arrow_table(rows, schema))
 
     def overwrite(self, table: str, df: DataFrame) -> None:
         from .sources import txn
@@ -165,14 +182,16 @@ class Ledger:
     def seed_dates(self, dates: list[tuple]) -> None:
         """Seed the date queue: rows (etl_date, holiday_flag, status,
         current_date_flag)."""
-        self.overwrite(
-            "etl_dates", self.spark.createDataFrame(dates, ETL_DATES_SCHEMA)
-        )
+        from .sources import txn
+
+        path = self._path("etl_dates")
+        with self._lock, txn.table_lock(path):
+            _commit_dates(path, dates)
 
     def next_etl_date(self) -> str | None:
         """Earliest non-holiday, not-yet-processed date (read only; see
         claim_next_date to take it)."""
-        return _pick_next_date(self.read("etl_dates", ETL_DATES_SCHEMA))
+        return _pick_next_date(self.rows("etl_dates"))
 
     def claim_next_date(self) -> str | None:
         """Atomically pick the next unprocessed date AND mark it 'running'
@@ -184,12 +203,10 @@ class Ledger:
 
         path = self._path("etl_dates")
         with self._lock, txn.table_lock(path):
-            if not txn.table_exists(path):
-                return None
-            df = txn.read(self.spark, path)
-            etl_date = _pick_next_date(df)
+            dates = self.rows("etl_dates")
+            etl_date = _pick_next_date(dates)
             if etl_date is not None:
-                _commit_date_status(df, path, etl_date, "running")
+                _commit_dates(path, _with_date_status(dates, etl_date, "running"))
             return etl_date
 
     def mark_date(self, etl_date: str, status: str) -> None:
@@ -203,12 +220,9 @@ class Ledger:
 
         path = self._path("etl_dates")
         with self._lock, txn.table_lock(path):
-            df = (
-                txn.read(self.spark, path)
-                if txn.table_exists(path)
-                else self.spark.createDataFrame([], ETL_DATES_SCHEMA)
+            _commit_dates(
+                path, _with_date_status(self.rows("etl_dates"), etl_date, status)
             )
-            _commit_date_status(df, path, etl_date, status)
 
     # -- run protocol ------------------------------------------------------
     def start_run(
@@ -249,15 +263,25 @@ class Ledger:
         self.append_rows("checkpoints", row, CHECKPOINT_SCHEMA)
 
     # -- queries -----------------------------------------------------------
-    def latest_status_per_source(self, etl_date: str) -> DataFrame:
-        """The signature dedup (utlis/etl_manager.py:228-237)."""
-        df = self.read("info_by_sources", INFO_SCHEMA).filter(
-            (F.col("etl_date") == etl_date)
-            & F.col("created_by").isin("master", "group")
+    def _latest_per_source(self, etl_date: str) -> dict[str, dict]:
+        """The signature dedup (utlis/etl_manager.py:228-237): per source,
+        the master/group row of `etl_date` with the latest created_at,
+        ties to the larger run_id."""
+        rows = sorted(
+            (r for r in self.rows("info_by_sources")
+             if r["etl_date"] == etl_date
+             and r["created_by"] in ("master", "group")),
+            key=lambda r: (r["created_at"], r["run_id"]),
         )
-        return latest_per_key(
-            df, ["source_name"], "created_at", tie_breakers=["run_id"]
-        ).select("source_name", "status", "etl_date")
+        return {r["source_name"]: r for r in rows}  # the latest row wins
+
+    def latest_status_per_source(self, etl_date: str) -> DataFrame:
+        """`_latest_per_source` as (source_name, status, etl_date) rows."""
+        return self.spark.createDataFrame(
+            [(s, r["status"], r["etl_date"])
+             for s, r in self._latest_per_source(etl_date).items()],
+            "source_name string, status string, etl_date string",
+        )
 
     def has_succeeded(
         self, source_name: str, task_id: str, etl_date: str,
@@ -268,46 +292,30 @@ class Ledger:
         when given (the reference's query filters on the dag-id pattern at
         :441-449; without the scope, same-named tasks in sibling DAGs
         poison each other's resume checks)."""
-        df = self.read("status_tasks", STATUS_SCHEMA)
-        cond = (
-            (F.col("source_name") == source_name)
-            & (F.col("task_id") == task_id)
-            & (F.col("etl_date") == etl_date)
-            & (F.col("status") == "success")
+        return any(
+            (r["source_name"], r["task_id"], r["etl_date"], r["status"])
+            == (source_name, task_id, etl_date, "success")
+            and dag_id in (None, r["dag_id"])
+            for r in self.rows("status_tasks")
         )
-        if dag_id is not None:
-            cond = cond & (F.col("dag_id") == dag_id)
-        return df.filter(cond).limit(1).count() > 0
 
     def successful_tasks(
         self, source_name: str, etl_date: str, dag_id: str
     ) -> set[str]:
         """All task_ids with a success row for (source, dag, date) — ONE
-        ledger scan per DAG run instead of one `has_succeeded` job per
-        task (20 sources x ~15 tasks would otherwise fire ~300 tiny Spark
-        jobs per pipeline run on driver latency alone). Safe as a
-        run-start snapshot: a task never runs twice within one DAG run,
-        so successes written during the run can't affect its own
+        ledger read per DAG run instead of one `has_succeeded` per task.
+        Safe as a run-start snapshot: a task never runs twice within one
+        DAG run, so successes written during the run can't affect its own
         resume-skips."""
-        df = self.read("status_tasks", STATUS_SCHEMA)
-        rows = (
-            df.filter(
-                (F.col("source_name") == source_name)
-                & (F.col("etl_date") == etl_date)
-                & (F.col("dag_id") == dag_id)
-                & (F.col("status") == "success")
-            )
-            .select("task_id")
-            .distinct()
-            .collect()
-        )
-        return {r.task_id for r in rows}
+        return {
+            r["task_id"] for r in self.rows("status_tasks")
+            if (r["source_name"], r["etl_date"], r["dag_id"], r["status"])
+            == (source_name, etl_date, dag_id, "success")
+        }
 
     def all_sources_green(self, etl_date: str) -> bool:
         """update_status_etl all-success gate (:219-268)."""
-        statuses = self.latest_status_per_source(etl_date)
-        row = statuses.agg(
-            F.min(F.col("status").isin("success", "skipped").cast("int")).alias("ok"),
-            F.count(F.lit(1)).alias("n"),
-        ).collect()[0]
-        return row.n > 0 and row.ok == 1
+        latest = self._latest_per_source(etl_date).values()
+        return bool(latest) and all(
+            r["status"] in ("success", "skipped") for r in latest
+        )

@@ -4,70 +4,61 @@ The reference's dbt staging layer diffs each source's live schema against
 the staged schema and writes `schemadrift_tablechangedetail` rows
 (columns: run_id, table_name, source_name, column_name, data_type,
 status 'I'|'D', change_date, created_date — utlis/send_email.py:26-49) and a
-per-table `schemadrift_tablechange` flag. Reproduced here as a pure
-DataFrame diff:
+per-table `schemadrift_tablechange` flag. Reproduced here as one Python
+set diff over (table_name, column_name):
 
 - 'I' (inserted): column present in the source, absent from the registry.
 - 'D' (deleted): column present in the registry, gone from the source.
 
-Schemas are tiny (control-plane), so both sides are literal DataFrames; the
-comparison itself is the J3/J4 anti-join pair.
+A type change under the same column name is not drift. Schemas are a few
+dozen rows and the live side comes from the catalog's cached schema, so
+the diff runs on the driver and launches no Spark job; the pipeline reads
+the registry with `txn.read_arrow` and writes the rows below with the
+driver-side txn writers.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql.types import StructType
+
+REGISTRY_SCHEMA = "table_name string, column_name string, data_type string"
+DETAIL_SCHEMA = (
+    "run_id string, table_name string, source_name string, column_name string, "
+    "data_type string, status string, change_date string, created_date string"
+)
+FLAG_SCHEMA = "run_id string, table_name string, source_name string, is_updated int"
 
 
-def schema_df(spark: SparkSession, df: DataFrame, table_name: str) -> DataFrame:
-    """A live DataFrame's schema as rows (table_name, column_name, data_type)
-    — the engine's `information_schema.columns` analog."""
-    rows = [(table_name, f.name, f.dataType.simpleString()) for f in df.schema.fields]
-    return spark.createDataFrame(
-        rows, "table_name string, column_name string, data_type string"
-    )
+def schema_rows(schema: StructType, table_name: str) -> list[tuple]:
+    """A schema as (table_name, column_name, data_type) rows — the
+    engine's `information_schema.columns` analog."""
+    return [(table_name, f.name, f.dataType.simpleString()) for f in schema.fields]
 
 
-def drift_detail(
-    source_schema: DataFrame,
-    registered_schema: DataFrame,
-    run_id: str,
-    source_name: str,
-    change_date: str,
-) -> DataFrame:
-    """schemadrift_tablechangedetail rows for one run: I/D per column."""
-    inserted = source_schema.join(
-        registered_schema.select("table_name", "column_name"),
-        on=["table_name", "column_name"],
-        how="left_anti",
-    ).withColumn("status", F.lit("I"))
-    deleted = registered_schema.join(
-        source_schema.select("table_name", "column_name"),
-        on=["table_name", "column_name"],
-        how="left_anti",
-    ).withColumn("status", F.lit("D"))
-    return (
-        inserted.unionByName(deleted)
-        .select(
-            F.lit(run_id).alias("run_id"),
-            "table_name",
-            F.lit(source_name).alias("source_name"),
-            "column_name",
-            "data_type",
-            "status",
-            F.lit(change_date).alias("change_date"),
-            F.lit(change_date).alias("created_date"),
-        )
-    )
+def diff(live: list[tuple], registered: list[tuple]) -> list[tuple]:
+    """(table_name, column_name, data_type, status) per inserted ('I')
+    or deleted ('D') column of `live` against `registered` (both
+    `schema_rows`)."""
+    live_cols = {r[:2] for r in live}
+    reg_cols = {r[:2] for r in registered}
+    return [(*r, "I") for r in live if r[:2] not in reg_cols] + [
+        (*r, "D") for r in registered if r[:2] not in live_cols
+    ]
 
 
-def drift_flags(detail: DataFrame) -> DataFrame:
-    """schemadrift_tablechange: one row per table with is_updated=1 when any
-    I/D row exists (utlis/send_email.py:43-49)."""
-    return (
-        detail.groupBy("run_id", "table_name", "source_name")
-        .agg(F.lit(1).alias("is_updated"))
-    )
+def change_rows(
+    changes: list[tuple], run_id: str, source_name: str, change_date: str
+) -> tuple[list[tuple], list[tuple]]:
+    """One run's `diff` as (schemadrift_tablechangedetail rows,
+    schemadrift_tablechange rows): one detail row per change and one
+    is_updated=1 flag per changed table (utlis/send_email.py:43-49)."""
+    detail = [
+        (run_id, t, source_name, c, dt, st, change_date, change_date)
+        for t, c, dt, st in changes
+    ]
+    flags = [(run_id, t, source_name, 1) for t in sorted({c[0] for c in changes})]
+    return detail, flags
 
 
 def value_psi(

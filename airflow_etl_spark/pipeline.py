@@ -171,67 +171,55 @@ class Pipeline:
     def drift_check(self, source: SourceConfig, run_id: str, etl_date: str) -> bool:
         """Compare live source schemas against the registered schema table;
         write schemadrift rows; return True when drift exists (branch C5).
+        Driver-side throughout (operators/drift.py): the live schemas come
+        from the catalog's cache, the registry from `txn.read_arrow`.
 
         The whole read-check-write holds BOTH the in-process lock (thread
         fan-out) and the registry's table flock (a second driver process):
         without the flock, two processes could both take the first-run
         register path and silently swallow each other's registrations."""
+        from .ledger import arrow_table
         from .sources import txn
 
+        live = [
+            row for t in source.tables
+            for row in drift.schema_rows(
+                self._source(t).schema, f"{source.name}__{t}"
+            )
+        ]
+        mine = f"{source.name}__"
         reg_path = self._tpath("operational_metadata", "schema_registry")
         with self._drift_lock, txn.table_lock(reg_path):
-            return self._drift_check_locked(source, run_id, etl_date)
-
-    def _drift_check_locked(
-        self, source: SourceConfig, run_id: str, etl_date: str
-    ) -> bool:
-        reg_path = self._tpath("operational_metadata", "schema_registry")
-        live_parts = [
-            drift.schema_df(self.spark, self._source(t), f"{source.name}__{t}")
-            for t in source.tables
-        ]
-        live = live_parts[0]
-        for p in live_parts[1:]:
-            live = live.unionByName(p)
-
-        from .sources import txn
-
-        # a missing registry (first run) reads as an empty one
-        all_registered = (
-            read_table(self.spark, reg_path)
-            if self._exists("operational_metadata", "schema_registry")
-            else live.limit(0)
-        )
-        registered = all_registered.filter(
-            F.col("table_name").startswith(f"{source.name}__")
-        )
-        if registered.limit(1).count() == 0:
-            # THIS source's first sighting: register, no drift (lock
-            # already held by caller) — the short-circuit is per-source,
-            # not global, or every source after the first gets full false
-            # drift on day one
-            txn._commit_locked(all_registered.unionByName(live), reg_path)
-            return False
-        detail = drift.drift_detail(live, registered, run_id, source.name, etl_date)
-        n = detail.count()
-        if n:
-            txn.append(
-                detail,
-                self._tpath("operational_metadata", "schemadrift_tablechangedetail"),
-            )
-            txn.append(
-                drift.drift_flags(detail),
-                self._tpath("operational_metadata", "schemadrift_tablechange"),
-            )
+            registry = [
+                (r["table_name"], r["column_name"], r["data_type"])
+                for r in self.ledger.rows("schema_registry")
+            ]
+            registered = [r for r in registry if r[0].startswith(mine)]
+            # THIS source's first sighting registers without drift — the
+            # short-circuit is per-source, not global, or every source
+            # after the first gets full false drift on day one
+            changes = drift.diff(live, registered) if registered else []
+            if registered and not changes:
+                return False
+            if changes:
+                detail, flags = drift.change_rows(
+                    changes, run_id, source.name, etl_date
+                )
+                self.ledger.append_rows(
+                    "schemadrift_tablechangedetail", detail, drift.DETAIL_SCHEMA
+                )
+                self.ledger.append_rows(
+                    "schemadrift_tablechange", flags, drift.FLAG_SCHEMA
+                )
             # fold the observed schema into the registry so the drift is
             # reported once (this run) and the next run compares against the
             # accepted new shape — without this, a table first seen after
             # initial registration re-flags full drift forever
-            merged = all_registered.filter(
-                ~F.col("table_name").startswith(f"{source.name}__")
-            ).unionByName(live)
-            txn._commit_locked(merged, reg_path)
-        return n > 0
+            others = [r for r in registry if not r[0].startswith(mine)]
+            txn.commit_rows(
+                reg_path, arrow_table(others + live, drift.REGISTRY_SCHEMA)
+            )
+            return bool(changes)
 
     # -- vault -------------------------------------------------------------
     def _vault_table(self, table: str):
@@ -635,17 +623,18 @@ class Pipeline:
         """Error-email rows from the failed tasks of this date (C6 +
         send_email.py:703-811 error detail)."""
         from . import report
-        from .ledger import STATUS_SCHEMA
 
-        failed = (
-            self.ledger.read("status_tasks", STATUS_SCHEMA)
-            .filter(F.col("etl_date") == etl_date)
-            .filter(~F.col("status").isin("success", "skipped"))
+        failed = sorted(
+            ((r["source_name"], r["dag_id"], r["task_id"], r["status"])
+             for r in self.ledger.rows("status_tasks")
+             if r["etl_date"] == etl_date
+             and r["status"] not in ("success", "skipped")),
+            key=lambda r: (r[1], r[2]),
         )
-        body = report.to_html_table(
-            failed.select("source_name", "dag_id", "task_id", "status")
-            .orderBy("dag_id", "task_id")
-        )
+        body = report.to_html_table(self.spark.createDataFrame(
+            failed,
+            "source_name string, dag_id string, task_id string, status string",
+        ))
         rows = report.email_rows(
             self.spark, "root", etl_date, ["data-team@example.com"],
             "ETL_ERROR", f"ETL pipeline failed: {etl_date}", body,

@@ -812,13 +812,14 @@ _REGISTERED_CUSTOMER_SCHEMA = [
     """,
 )
 def drift_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    live = drift.schema_df(spark, T(spark, sf_dir, "customer"), "customer")
-    registered = spark.createDataFrame(
+    changes = drift.diff(
+        drift.schema_rows(T(spark, sf_dir, "customer").schema, "customer"),
         _REGISTERED_CUSTOMER_SCHEMA,
-        "table_name string, column_name string, data_type string",
     )
-    detail = drift.drift_detail(live, registered, "r1", "src", "2024-01-01")
-    return detail.select("table_name", "column_name", "data_type", "status")
+    return spark.createDataFrame(
+        changes,
+        "table_name string, column_name string, data_type string, status string",
+    )
 
 
 @q(

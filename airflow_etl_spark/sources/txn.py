@@ -519,6 +519,83 @@ def read_named_version(
     return _read_with_deletes(spark, path, _load_manifest(path, version, fs))
 
 
+#: the most manifest-recorded data plus delete bytes `read_arrow` serves.
+#: Control tables (run ledger, date queue, schema registry) hold a few
+#: hundred rows in kilobyte files; a snapshot past this is data plane and
+#: belongs on the cluster.
+ARROW_READ_MAX_BYTES = 64 * 1024 * 1024
+
+
+def read_arrow(path: str, fs=None):
+    """Driver-side read of a small table's live snapshot as a pyarrow
+    Table — ZERO Spark jobs. The control-plane counterpart of `read`,
+    with the same semantics as `_read_with_deletes`: the manifest schema
+    is applied (columns a file lacks read as NULL), an equality delete
+    drops matching keys only from files with a LOWER sequence number,
+    and a positional delete drops its (file basename, row ordinal)
+    address. Before any file is opened, a snapshot whose recorded file
+    and delete bytes exceed ARROW_READ_MAX_BYTES is refused (ValueError),
+    so no data-plane table can take this path. Raises FileNotFoundError
+    when no versioned table is at `path`."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    fs = fs or _fs_for(path)
+    m = live_manifest(path, fs)
+    if m is None:
+        raise FileNotFoundError(f"no versioned table at {path}")
+    deletes = m.get("deletes") or []
+    n_bytes = sum(e.get("bytes", 0) for e in m["files"] + deletes)
+    if n_bytes > ARROW_READ_MAX_BYTES:
+        raise ValueError(
+            f"{path}: {n_bytes} live bytes exceed the driver-side read bound "
+            f"({ARROW_READ_MAX_BYTES}); read it through Spark (txn.read)"
+        )
+
+    def load(rel: str):
+        data = fs.read_bytes(_join(path, rel))
+        if data is None:
+            raise FileNotFoundError(_join(path, rel))
+        return pq.read_table(pa.BufferReader(data))
+
+    def keys_of(t, cols: list[str]):
+        return zip(*(t.column(c).to_pylist() for c in cols))
+
+    schema = to_arrow_schema(_schema_of(m))
+    # SQL equality: a NULL key component matches nothing
+    eq_dels = [
+        (d.get("seq", 0), d["key_cols"],
+         {k for k in keys_of(load(d["path"]), d["key_cols"]) if None not in k})
+        for d in deletes if d.get("kind") != "pos"
+    ]
+    pos_dels: set[tuple] = set()
+    for d in deletes:
+        if d.get("kind") == "pos":
+            pos_dels |= set(keys_of(load(d["path"]), ["target_file", "pos"]))
+    parts = []
+    for e in m["files"]:
+        t = load(e["path"])
+        t = pa.Table.from_arrays(
+            [
+                t.column(f.name).cast(f.type) if f.name in t.column_names
+                else pa.nulls(t.num_rows, f.type)
+                for f in schema
+            ],
+            schema=schema,
+        )
+        name = e["path"].rsplit("/", 1)[1]
+        keep = [(name, i) not in pos_dels for i in range(t.num_rows)]
+        for seq, cols, dead in eq_dels:
+            if seq > e.get("seq", 0):
+                keep = [
+                    k and key not in dead
+                    for k, key in zip(keep, keys_of(t, cols))
+                ]
+        parts.append(t.filter(pa.array(keep, pa.bool_())))
+    return pa.concat_tables(parts) if parts else schema.empty_table()
+
+
 def committed_at(path: str, version: str, fs=None) -> int:
     """Commit timestamp (epoch micros) recorded in a snapshot's manifest.
     Pre-timestamp manifests (older tables) report 0 — they sort before
@@ -903,6 +980,18 @@ def _write_snapshot(
         e.update(_file_stats(fp))
         entries.append(e)
     return entries
+
+
+def _write_delta(df: DataFrame, path: str, fs) -> list[dict]:
+    """`_write_snapshot` for a delta published into an existing table:
+    when no written file holds a row, its `_data/c-*` dir is removed and
+    [] returned, so the caller publishes nothing."""
+    tag = f"c-{uuid.uuid4().hex[:8]}"
+    entries = _write_snapshot(df, path, fs, tag=tag)
+    if any(e.get("record_count", 1) for e in entries):
+        return entries
+    fs.delete(_join(path, DATA, tag), recursive=True)
+    return []
 
 
 def _partition_of(rel: str, col: str) -> str | None:
@@ -1293,7 +1382,10 @@ def append_files(
     `merge_schema=True` absorbs column drift in the incoming frame (new
     columns join the table schema as NULL-backed nullable fields; columns
     the frame lacks read as NULL from its files) — a pure metadata
-    operation, no data rewrite."""
+    operation, no data rewrite.
+
+    A delta with no rows publishes nothing: the live version is returned
+    (a hub or link load on a day without new keys adds no version)."""
     fs = fs or _fs_for(path)
     with table_lock(path, fs):
         ver = _read_pointer(path, fs)
@@ -1310,7 +1402,9 @@ def append_files(
             return _commit_locked(df, path, keep_versions, fs)
         m = _load_manifest(path, ver, fs)
         schema_json = _merged_schema_json(m.get("schema"), df.schema, merge_schema)
-        entries = _write_snapshot(df, path, fs)
+        entries = _write_delta(df, path, fs)
+        if not entries:
+            return ver
         if bloom_cols:
             # delta files only — earlier entries keep their own blooms
             _attach_blooms(df.sparkSession, path, entries, bloom_cols, fs)
@@ -1456,10 +1550,8 @@ def upsert_mor(
             return _commit_locked(df, path, keep_versions, fs)
         m = _load_manifest(path, ver, fs)
         schema_json = _merged_schema_json(m.get("schema"), df.schema, merge_schema)
-        tag = f"c-{uuid.uuid4().hex[:8]}"
-        entries = _write_snapshot(df, path, fs, tag=tag)
-        if not any(e.get("record_count", 1) for e in entries):
-            fs.delete(_join(path, DATA, tag), recursive=True)
+        entries = _write_delta(df, path, fs)
+        if not entries:
             return ver
         # keys come from the files just WRITTEN, not by re-running df —
         # consistent even for nondeterministic sources, and a key-column
@@ -1594,12 +1686,27 @@ def append_rows(path: str, arrow_table, fs=None) -> None:
             # dir stays legacy until a commit migrates it)
             _write_arrow_file(path, None, arrow_table, fs)
             return
-        entry = _write_arrow_file(path, f"a-{uuid.uuid4().hex[:8]}", arrow_table, fs)
         if ver is None:
-            schema_json = _arrow_schema_json(arrow_table)
-            _publish(path, [entry], schema_json, None, fs, 2, None)
-        else:
-            _publish_child(path, ver, _load_manifest(path, ver, fs), fs, add=[entry])
+            commit_rows(path, arrow_table, fs=fs)
+            return
+        entry = _write_arrow_file(path, f"a-{uuid.uuid4().hex[:8]}", arrow_table, fs)
+        _publish_child(path, ver, _load_manifest(path, ver, fs), fs, add=[entry])
+
+
+def commit_rows(path: str, arrow_table, keep_versions: int = 2, fs=None) -> str:
+    """Driver-side full-snapshot replace of a small table — `_commit_locked`
+    minus the Spark job: `arrow_table` lands as ONE file and one publish
+    makes it the live snapshot (the old files and pending deletes leave
+    the manifest; readers pinned to a retained version still find them).
+    For callers that already hold the table lock, so `read_arrow` → edit
+    → `commit_rows` is an atomic read-modify-write. Control tables only.
+    Returns the new version name."""
+    fs = fs or _fs_for(path)
+    entry = _write_arrow_file(path, f"a-{uuid.uuid4().hex[:8]}", arrow_table, fs)
+    return _publish(
+        path, [entry], _arrow_schema_json(arrow_table), None, fs,
+        keep_versions, _read_pointer(path, fs),
+    )
 
 
 def _write_arrow_file(path: str, rel_dir_tag: str | None, arrow_table, fs) -> dict:
@@ -1670,12 +1777,8 @@ def upsert_rows(
                     f"legacy plain table at {path}: commit() it to the "
                     "manifest layout before MoR upserts"
                 )
+            return commit_rows(path, arrow_table, keep_versions, fs)
         entry = _write_arrow_file(path, f"a-{uuid.uuid4().hex[:8]}", arrow_table, fs)
-        if ver is None:
-            return _publish(
-                path, [entry], _arrow_schema_json(arrow_table), None, fs,
-                keep_versions, None,
-            )
         del_entry = _write_arrow_deletes(path, arrow_table, list(key_cols), fs)
         return _publish_child(
             path, ver, _load_manifest(path, ver, fs), fs, keep_versions,

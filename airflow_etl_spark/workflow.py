@@ -23,11 +23,14 @@ pool (Spark's scheduler is thread-safe; FAIR scheduling recommended).
 
 from __future__ import annotations
 
+import logging
 import time
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 
 from .ledger import Ledger
+
+log = logging.getLogger(__name__)
 
 
 def all_green(statuses: dict[str, str]) -> bool:
@@ -59,6 +62,8 @@ class RunContext:
     etl_date: str
     ledger: Ledger
     results: dict[str, object] = field(default_factory=dict)
+    #: task_id → "ExcType: message" of its last failed attempt
+    errors: dict[str, str] = field(default_factory=dict)
 
     def xcom_pull(self, task_id: str):
         return self.results.get(task_id)
@@ -78,6 +83,8 @@ class DagRunner:
         # injectable clock-sleep (tests stub it; the reference's TimeSensor
         # is likewise scheduler-time, not task logic); None = time.sleep
         self._sleep = sleep_fn or time.sleep
+        #: the RunContext of the latest run() — results and task errors
+        self.last_context: RunContext | None = None
         # validate DAG
         for t in tasks:
             for d in t.depends_on:
@@ -96,6 +103,7 @@ class DagRunner:
         success | failed | skipped | upstream_failed."""
         rid = ledger.start_run(source_name, etl_date, created_by, run_id)
         ctx = RunContext(rid, source_name, etl_date, ledger)
+        self.last_context = ctx
         status: dict[str, str] = {}
         deselected: set[str] = set()
         # resume-skip snapshot: one ledger scan for the whole DAG run
@@ -204,7 +212,13 @@ class DagRunner:
                         ):
                             deselected.add(candidate)
                 return "success"
-            except Exception:
+            except Exception as e:
+                # the runner must outlive any task: record, then retry/fail
+                log.warning(
+                    "%s.%s attempt %d/%d failed", self.dag_id, task.task_id,
+                    attempt + 1, attempts, exc_info=True,
+                )
+                ctx.errors[task.task_id] = f"{type(e).__name__}: {e}"
                 if attempt + 1 >= attempts:
                     return "failed"
                 self._sleep(task.retry_delay_s)

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -27,3 +28,22 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return TEST_SF_DIR
+
+
+@pytest.fixture()
+def jobs_of(spark):
+    """`jobs_of(build)` → (result of `build()`, Spark jobs it launched),
+    counted under a fresh job group."""
+
+    def run(build):
+        sc = spark.sparkContext
+        group = f"jobs-of-{uuid.uuid4().hex[:8]}"
+        sc.setJobGroup(group, "job count")
+        try:
+            out = build()
+        finally:
+            sc.setJobGroup(None, None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -5,8 +5,6 @@ read through the same cache."""
 
 from __future__ import annotations
 
-import uuid
-
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import types as T
@@ -15,27 +13,14 @@ from airflow_etl_spark import catalog, streaming
 from airflow_etl_spark.sources import txn
 
 
-def _jobs_of(spark, build):
-    """(result of `build()`, Spark jobs it launched)."""
-    sc = spark.sparkContext
-    group = f"catalog-test-{uuid.uuid4().hex[:8]}"
-    sc.setJobGroup(group, "catalog test")
-    try:
-        out = build()
-    finally:
-        sc.setJobGroup(None, None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _write(path, **cols):
     pq.write_table(pa.table(cols), str(path))
 
 
-def test_repeat_load_launches_no_jobs(spark, tmp_path):
+def test_repeat_load_launches_no_jobs(spark, tmp_path, jobs_of):
     _write(tmp_path / "t.parquet", a=pa.array([1, 2, 3], pa.int64()))
-    first, n_first = _jobs_of(spark, lambda: catalog.load_table(spark, str(tmp_path), "t"))
-    again, n_again = _jobs_of(spark, lambda: catalog.load_table(spark, str(tmp_path), "t"))
+    first, n_first = jobs_of(lambda: catalog.load_table(spark, str(tmp_path), "t"))
+    again, n_again = jobs_of(lambda: catalog.load_table(spark, str(tmp_path), "t"))
     assert n_first >= 1  # the one schema-inference job the cache saves
     assert n_again == 0
     assert again.schema == first.schema
@@ -94,7 +79,7 @@ def test_both_events_layouts_read_ts_as_timestamp(spark, tmp_path):
     assert rows["nanos"] == rows["ntz_micros"]
 
 
-def test_mor_reread_launches_no_build_jobs(spark, tmp_path):
+def test_mor_reread_launches_no_build_jobs(spark, tmp_path, jobs_of):
     path = str(tmp_path / "tbl")
     txn.commit(spark.createDataFrame([(i, i % 3) for i in range(9)], "k long, g long"), path)
     txn.delete_keys(spark.createDataFrame([(1,)], "k long"), path)
@@ -103,6 +88,6 @@ def test_mor_reread_launches_no_build_jobs(spark, tmp_path):
     assert kinds == {"eq", "pos"}
     first = txn.read(spark, path)
     assert sorted(r.k for r in first.collect()) == [0, 3, 4, 5, 6, 7, 8]
-    again, n_jobs = _jobs_of(spark, lambda: txn.read(spark, path))
+    again, n_jobs = jobs_of(lambda: txn.read(spark, path))
     assert n_jobs == 0
     assert sorted(r.k for r in again.collect()) == [0, 3, 4, 5, 6, 7, 8]

@@ -162,13 +162,19 @@ def test_churn_day_writes_only_the_delta(spark, tmp_path):
 
 def test_identical_snapshot_writes_nothing(spark, tmp_path):
     """An identical snapshot on the next date leaves the satellite dir's
-    files and mtimes exactly as they were (the empty delta publishes
-    nothing)."""
+    files and mtimes exactly as they were, and the hub's manifest and
+    `_data` listing unchanged (an empty delta publishes nothing)."""
     p = _pipeline(spark, tmp_path)
     _run(p, _day(tmp_path, "d1", BASE), DATES[0])
-    before = _files(_sat_path(p))
+    hub = p._tpath("raw_vault", f"hub_{ENT.name}")
+
+    def hub_state():
+        return txn.live_manifest(hub), sorted(os.listdir(os.path.join(hub, "_data")))
+
+    before, hub_before = _files(_sat_path(p)), hub_state()
     _run(p, _day(tmp_path, "d2", BASE), DATES[1])
     assert _files(_sat_path(p)) == before
+    assert hub_state() == hub_before
 
 
 def test_rerun_of_committed_date_adds_nothing(spark, tmp_path):

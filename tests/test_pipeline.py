@@ -149,6 +149,21 @@ def test_retry_delay_goes_through_injected_sleep(ledger):
     assert DagRunner("06__src__clock", [], sleep_fn=None)._sleep is _time.sleep
 
 
+def test_failed_attempts_are_logged_and_kept(ledger, caplog):
+    """Every failed attempt is logged with its traceback, and the last
+    error's text stays reachable on the run's context after run()."""
+    import logging
+
+    def bad(ctx):
+        raise RuntimeError("disk on fire")
+
+    dag = DagRunner("07__src__errors", [Task("bad", fn=bad, retries=1)])
+    with caplog.at_level(logging.WARNING, logger="airflow_etl_spark.workflow"):
+        assert dag.run(ledger, "src_f", "2024-01-03") == {"bad": "failed"}
+    assert dag.last_context.errors == {"bad": "RuntimeError: disk on fire"}
+    assert [r.exc_info[0] for r in caplog.records] == [RuntimeError] * 2
+
+
 def test_vault_minimum_slice(spark, ledger, sf_dir):
     """SURVEY §7.3: one source, one day — customer → hub + satellite."""
     customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
