@@ -10,10 +10,14 @@ root run:
   pick etl_date → per source: [staging DAG → vault DAG] → all-success gate
   → mark etl_date success
 
-staging DAG (per source):   fetch_run_id → stage tables → drift check
-                            (branch: notify vs continue) → status rows
+staging DAG (per source):   start → stage__<table> (one independent task
+                            per table, each auditing the partition it wrote
+                            against its source) → drift check (branch:
+                            notify vs continue) → status rows
 vault DAG (per source):     per-domain hub/link/satellite loads with
                             resume-skip (check_conditions semantics)
+
+Ready tasks of a DAG run concurrently (workflow.MAX_ACTIVE_TASKS).
 
 Data tables are parquet dirs under the warehouse; control tables live in the
 Ledger. Everything is idempotent per (source, task, etl_date): re-running a
@@ -155,7 +159,12 @@ class Pipeline:
         the change into the table schema; earlier dates read the new
         columns as NULL — the reference's dbt+Iceberg staging behavior,
         SURVEY §1.3). etl_date stays a data column (keep_column) so every
-        downstream reader's date filter works unchanged."""
+        downstream reader's date filter works unchanged.
+
+        The content gate runs here, on the partition just written: a
+        staged partition that differs from its source raises
+        PipelineStateError, so the stage task fails (after its retry) and
+        the vault never loads it."""
         from .sources import txn
 
         out = (
@@ -163,10 +172,15 @@ class Pipeline:
             .withColumn("etl_date", F.lit(etl_date))
             .withColumn("record_source", F.lit(source.name))
         )
-        stage_path = self._tpath("staging", f"{source.name}__{table}")
+        name = f"{source.name}__{table}"
         txn.replace_partitions(
-            out, stage_path, "etl_date", merge_schema=True, keep_column=True
+            out, self._tpath("staging", name), "etl_date",
+            merge_schema=True, keep_column=True,
         )
+        if self._content_diff(source, table, etl_date).limit(1).collect():
+            raise PipelineStateError(
+                f"staged partition {name} for {etl_date} differs from its source"
+            )
 
     def drift_check(self, source: SourceConfig, run_id: str, etl_date: str) -> bool:
         """Compare live source schemas against the registered schema table;
@@ -318,25 +332,23 @@ class Pipeline:
     # -- DAG assembly ------------------------------------------------------
     def staging_dag(self, source: SourceConfig) -> DagRunner:
         tasks: list[Task] = [Task("start", start_delay_s=source.start_delay_s)]
-        prev = "start"
         for t in source.tables:
-            tid = f"stage__{t}"
             def stage_and_checkpoint(ctx: RunContext, tt=t):
                 self.stage_table(source, tt, ctx.etl_date)
                 self._checkpoint(
                     ctx.run_id, f"stg_{tt}", "staging", source.name, ctx.etl_date
                 )
 
-            tasks.append(
-                Task(tid, fn=stage_and_checkpoint, depends_on=[prev], retries=1)
-            )
-            prev = tid
+            tasks.append(Task(f"stage__{t}", fn=stage_and_checkpoint,
+                              depends_on=["start"], retries=1))
 
         def check_drift(ctx: RunContext):
             has_drift = self.drift_check(source, ctx.run_id, ctx.etl_date)
             return "notify_drift" if has_drift else "end"
 
-        tasks.append(Task("check_drift", fn=check_drift, depends_on=[prev], is_branch=True))
+        stages = [t.task_id for t in tasks[1:]] or ["start"]
+        tasks.append(Task("check_drift", fn=check_drift, depends_on=stages,
+                          is_branch=True))
 
         def notify_drift(ctx: RunContext):
             """Schema-drift notification TaskGroup (C5 + S16,
@@ -371,7 +383,8 @@ class Pipeline:
 
     def vault_dag(self, source: SourceConfig) -> DagRunner:
         """Per-domain fan-out (C3): entities/links grouped by domain, each
-        domain an independent chain off start (parallelizable)."""
+        domain an independent chain off start, so domains run
+        concurrently."""
         tasks: list[Task] = [Task("start")]
         domain_tasks = []
         domains: dict[str, list] = {}
@@ -472,11 +485,15 @@ class Pipeline:
         (§3.1): date pick → per-source staging+vault → all-green → mark
         date success. Returns {source: {dag: statuses}}.
 
-        `max_workers > 1` fans sources out over a driver thread pool (the
-        reference runs ~20 source TaskGroups concurrently, C2; Spark's
+        `max_workers` is the source-group fan-out: `> 1` runs that many
+        sources' staging → vault chains at once on a driver thread pool
+        (the reference runs ~20 source TaskGroups concurrently, C2; Spark's
         scheduler is thread-safe and interleaves the jobs). Sources are
         independent by construction — disjoint staging/vault tables — and
-        the shared ledger serializes its own writes."""
+        the shared ledger serializes its own writes. Tasks inside each DAG
+        run concurrently whatever `max_workers` is. The content gate runs
+        in each stage task (stage_table), so a date is green only when
+        every staged partition reconciled with its source."""
         if etl_date is None:
             # atomic pick+mark: two drivers draining one queue cannot
             # claim the same date (C4 idempotency across processes)
@@ -516,18 +533,6 @@ class Pipeline:
                 etl_date,
             )
 
-        # The one post-load gate: Merkle CONTENT reconciliation (r11,
-        # VERDICT r10 #8). It subsumes the reference's row-count
-        # check_records (root.py:55-60): each side's per-bucket summary
-        # carries n_rows, so a dropped or duplicated row is a differing
-        # bucket — and it also catches values rotting under matching
-        # counts (a truncated load re-run, a codec bug, bit rot on a
-        # replica). Per (source, table): both sides collapse map-side to
-        # n_buckets (count, fingerprint-sum) partials; equal summaries
-        # prove content equal with ZERO row-grain exchange, so at 100 TB
-        # a healthy load pays two narrow scans and a 256-row join.
-        ok = ok and not self.check_content(etl_date).limit(1).collect()
-
         self.ledger.mark_date(etl_date, "success" if ok else "failed")
         if ok and self.catalog is not None:
             self.catalog.publish_warehouse_state(
@@ -544,8 +549,9 @@ class Pipeline:
     def check_records(self, etl_date: str):
         """Row-count reconciliation (§5 #1): every (source, table) staged
         partition for this date vs the source table it was loaded from.
-        Not a gate of run(): check_content compares per-bucket row counts
-        too, so it catches every mismatch this one does."""
+        Not a gate of run(): the content gate in stage_table compares
+        per-bucket row counts too, so it catches every mismatch this one
+        does."""
         from .operators import checks
 
         src_tables: dict = {}
@@ -561,62 +567,53 @@ class Pipeline:
         tgt = checks.rowcounts(self.spark, tgt_tables)
         return checks.reconcile(src, tgt)
 
-    def check_content(self, etl_date: str):
-        """Merkle-bucket CONTENT reconciliation of every staged partition
-        against its source table (operators/recon — run()'s one post-load
-        gate, a superset of the check_records row-count test): each side
-        fingerprints rows (60-bit md5 over the canonical full-row string,
-        identical Spark expressions both sides) and collapses to
-        per-bucket (n_rows, fp_sum)
-        summaries map-side. Returns the differing (table, bucket) rows —
-        EMPTY on a faithful load. Cost at any scale: two narrow scans +
-        one n_buckets-row join per table; no row ever shuffles."""
+    def _content_diff(self, source: SourceConfig, table: str, etl_date: str):
+        """Merkle-bucket CONTENT reconciliation of one staged partition
+        against its source table (operators/recon): the gate stage_table
+        runs on the partition it just wrote, a superset of the
+        check_records row-count test. Each row's 60-bit md5 fingerprint
+        over the canonical full-row string (identical Spark expressions
+        both sides) is signed — source rows carry (n=+1, fp=+h), staged
+        rows (n=-1, fp=-h) — and summed per bucket, so a bucket differs
+        iff its (n_rows, fp_sum) summaries differ. Returns the differing
+        (table_name, bucket) rows, EMPTY on a faithful load. Cost at any
+        scale: two narrow scans and one n_buckets-partial shuffle; no row
+        ever shuffles."""
         from .operators import recon
 
-        diffs = []
+        name = f"{source.name}__{table}"
+        src = self._source(table)
+        tgt = self._read("staging", name).filter(F.col("etl_date") == etl_date)
+        # NULLs get an explicit sentinel: concat_ws SKIPS nulls, which
+        # would let (1, NULL, 2) collide with (1, 2, NULL)
+        h = recon.h60(F.concat_ws("\x1f", *[
+            F.coalesce(F.col(c).cast("string"), F.lit("\x00null"))
+            for c in sorted(src.columns)
+        ]))
+
+        def signed(df, sign: int):
+            return df.select(
+                F.pmod(h, F.lit(recon.RECON_BUCKETS)).cast("long").alias("bucket"),
+                F.lit(sign).alias("n"),
+                (h * sign).cast("decimal(38,0)").alias("fp"),
+            )
+
+        return (
+            signed(src, 1).unionByName(signed(tgt, -1))
+            .groupBy("bucket").agg(F.sum("n").alias("n"), F.sum("fp").alias("fp"))
+            .filter((F.col("n") != 0) | (F.col("fp") != 0))
+            .select(F.lit(name).alias("table_name"), "bucket")
+        )
+
+    def check_content(self, etl_date: str):
+        """The content gate of every (source, table) staged partition for
+        this date (_content_diff), for on-demand audits: the differing
+        (table_name, bucket) rows, EMPTY on a faithful load — and with zero
+        sources or tables."""
+        out = self.spark.createDataFrame([], "table_name string, bucket long")
         for source in self.sources:
             for t in source.tables:
-                name = f"{source.name}__{t}"
-                src_df = self._source(t)
-                tgt_df = self._read("staging", name).filter(
-                    F.col("etl_date") == etl_date
-                )
-                cols = sorted(src_df.columns)
-                # NULLs get an explicit sentinel: concat_ws SKIPS nulls,
-                # which would let (1, NULL, 2) collide with (1, 2, NULL)
-                row_str = F.concat_ws(
-                    "\x1f",
-                    *[
-                        F.coalesce(
-                            F.col(c).cast("string"), F.lit("\x00null")
-                        )
-                        for c in cols
-                    ],
-                )
-
-                def fps(df, rs=row_str):
-                    return df.select(
-                        F.pmod(
-                            recon.h60(rs), F.lit(recon.RECON_BUCKETS)
-                        ).cast("long").alias("bucket"),
-                        recon.h60(rs).alias("fp"),
-                    )
-
-                d = recon.differing_buckets(
-                    recon.bucket_summary(fps(src_df)),
-                    recon.bucket_summary(fps(tgt_df.select(*src_df.columns))),
-                ).select(F.lit(name).alias("table_name"), "bucket")
-                diffs.append(d)
-        if not diffs:
-            # zero sources / zero tables: the gate passes trivially
-            # (advisor r11 — run() calls this on every successful load,
-            # and diffs[0] on an empty list crashed the gate instead)
-            return self.spark.createDataFrame(
-                [], "table_name string, bucket long"
-            )
-        out = diffs[0]
-        for d in diffs[1:]:
-            out = out.unionByName(d)
+                out = out.unionByName(self._content_diff(source, t, etl_date))
         return out
 
     def _notify_error(self, etl_date: str) -> None:

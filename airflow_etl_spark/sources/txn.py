@@ -525,6 +525,12 @@ def read_named_version(
 #: belongs on the cluster.
 ARROW_READ_MAX_BYTES = 64 * 1024 * 1024
 
+#: table path -> {(rel path, manifest-recorded bytes): parsed pyarrow Table}
+#: for `read_arrow`. Data and delete files are write-once (uuid names,
+#: atomic writes), so a parsed file stays valid for as long as a manifest
+#: lists it; each read keeps only the live snapshot's files.
+_ARROW_FILES: dict[str, dict[tuple[str, int], object]] = {}
+
 
 def read_arrow(path: str, fs=None):
     """Driver-side read of a small table's live snapshot as a pyarrow
@@ -536,7 +542,9 @@ def read_arrow(path: str, fs=None):
     address. Before any file is opened, a snapshot whose recorded file
     and delete bytes exceed ARROW_READ_MAX_BYTES is refused (ValueError),
     so no data-plane table can take this path. Raises FileNotFoundError
-    when no versioned table is at `path`."""
+    when no versioned table is at `path`. Files parsed by an earlier read
+    of `path` are reused (_ARROW_FILES), so a read after one append parses
+    one file."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
@@ -553,11 +561,19 @@ def read_arrow(path: str, fs=None):
             f"({ARROW_READ_MAX_BYTES}); read it through Spark (txn.read)"
         )
 
-    def load(rel: str):
-        data = fs.read_bytes(_join(path, rel))
-        if data is None:
-            raise FileNotFoundError(_join(path, rel))
-        return pq.read_table(pa.BufferReader(data))
+    cached = _ARROW_FILES.get(path, {})
+    live: dict[tuple[str, int], object] = {}
+
+    def load(e: dict):
+        key = (e["path"], e.get("bytes", 0))
+        t = cached.get(key)
+        if t is None:
+            data = fs.read_bytes(_join(path, e["path"]))
+            if data is None:
+                raise FileNotFoundError(_join(path, e["path"]))
+            t = pq.read_table(pa.BufferReader(data))
+        live[key] = t
+        return t
 
     def keys_of(t, cols: list[str]):
         return zip(*(t.column(c).to_pylist() for c in cols))
@@ -566,16 +582,16 @@ def read_arrow(path: str, fs=None):
     # SQL equality: a NULL key component matches nothing
     eq_dels = [
         (d.get("seq", 0), d["key_cols"],
-         {k for k in keys_of(load(d["path"]), d["key_cols"]) if None not in k})
+         {k for k in keys_of(load(d), d["key_cols"]) if None not in k})
         for d in deletes if d.get("kind") != "pos"
     ]
     pos_dels: set[tuple] = set()
     for d in deletes:
         if d.get("kind") == "pos":
-            pos_dels |= set(keys_of(load(d["path"]), ["target_file", "pos"]))
+            pos_dels |= set(keys_of(load(d), ["target_file", "pos"]))
     parts = []
     for e in m["files"]:
-        t = load(e["path"])
+        t = load(e)
         t = pa.Table.from_arrays(
             [
                 t.column(f.name).cast(f.type) if f.name in t.column_names
@@ -593,6 +609,7 @@ def read_arrow(path: str, fs=None):
                     for k, key in zip(keep, keys_of(t, cols))
                 ]
         parts.append(t.filter(pa.array(keep, pa.bool_())))
+    _ARROW_FILES[path] = live
     return pa.concat_tables(parts) if parts else schema.empty_table()
 
 

@@ -17,20 +17,31 @@ The reference's control-flow semantics, minus the scheduler daemon:
 
 Single-process, driver-side; tasks themselves launch Spark jobs (Spark
 provides the data-plane parallelism, mirroring how the reference delegates
-to Trino/dbt). Independent ready tasks can run concurrently via a thread
-pool (Spark's scheduler is thread-safe; FAIR scheduling recommended).
+to Trino/dbt). Ready tasks run concurrently on a thread pool of at most
+MAX_ACTIVE_TASKS threads (the reference's dbt `threads`; Spark's scheduler
+is thread-safe and the session runs FAIR): a task is submitted once every
+upstream has a final status, so tasks that touch one table must declare a
+dependency between them.
 """
 
 from __future__ import annotations
 
 import logging
+import threading
 import time
 from collections.abc import Callable, Sequence
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
+
+from pyspark.util import inheritable_thread_target
 
 from .ledger import Ledger
 
 log = logging.getLogger(__name__)
+
+#: most tasks of one DAG run at once (Airflow's default
+#: max_active_tasks_per_dag)
+MAX_ACTIVE_TASKS = 16
 
 
 def all_green(statuses: dict[str, str]) -> bool:
@@ -70,7 +81,7 @@ class RunContext:
 
 
 class DagRunner:
-    """Topological executor with the reference's skip/branch/retry rules."""
+    """Ready-set executor with the reference's skip/branch/retry rules."""
 
     def __init__(
         self,
@@ -110,20 +121,40 @@ class DagRunner:
         # (per-task has_succeeded jobs add a driver round trip per task)
         succeeded = ledger.successful_tasks(source_name, etl_date, self.dag_id)
 
-        order = self._topo_order()
-        for tid in order:
-            task = self.tasks[tid]
-            st = self._decide_and_run(task, ctx, status, deselected, succeeded)
-            status[tid] = st
-            ledger.save_task_status(
-                rid, source_name, self.dag_id, tid, st, etl_date
-            )
+        self._topo_order()  # cycle check
+        # ready-set scheduling: a task is submitted once every upstream has
+        # a final status; this thread alone records statuses, in completion
+        # order. Each submit captures its own copy of the caller's Spark
+        # local properties (job group, scheduler pool) for the task thread:
+        # threads that shared one copy would see each other's job groups.
+        waiting = dict(self.tasks)
+        running: dict = {}
+        workers = max(1, min(len(self.tasks), MAX_ACTIVE_TASKS))
+        with ThreadPoolExecutor(workers, f"dag-{self.dag_id}") as pool:
+            while waiting or running:
+                for tid, task in list(waiting.items()):
+                    if all(d in status for d in task.depends_on):
+                        del waiting[tid]
+                        fn = inheritable_thread_target(ledger.spark)(
+                            self._decide_and_run
+                        )
+                        fut = pool.submit(
+                            fn, task, ctx, status, deselected, succeeded
+                        )
+                        running[fut] = tid
+                done, _ = wait(running, return_when=FIRST_COMPLETED)
+                for fut in done:
+                    tid = running.pop(fut)
+                    status[tid] = fut.result()
+                    ledger.save_task_status(
+                        rid, source_name, self.dag_id, tid, status[tid], etl_date
+                    )
 
         ledger.finish_run(
             rid, source_name, etl_date,
             "success" if all_green(status) else "failed", created_by,
         )
-        return status
+        return {tid: status[tid] for tid in self.tasks}
 
     # ------------------------------------------------------------------
     def _topo_order(self) -> list[str]:
@@ -229,28 +260,38 @@ class DagRunner:
         dagrun_timeout policies, dag_etlpipeline__root.py:37-38,
         dag_etlpipeline__staging.py:77). The timed-out callable cannot be
         force-killed in-process (same as an Airflow local task losing the
-        race); the attempt is FAILED and counts against retries."""
+        race); the attempt is FAILED and counts against retries, and its
+        error names the abandoned thread, which keeps running (a daemon,
+        so it never blocks interpreter exit)."""
         if task.timeout_s is None:
             return task.fn(ctx)
-        from concurrent.futures import ThreadPoolExecutor
-        from concurrent.futures import TimeoutError as FutTimeout
+        out: dict = {}
 
-        pool = ThreadPoolExecutor(
-            max_workers=1, thread_name_prefix=f"task-{task.task_id}"
+        def attempt():
+            try:
+                out["result"] = task.fn(ctx)
+            except BaseException as e:  # re-raised on the caller's thread
+                out["error"] = e
+
+        t = threading.Thread(
+            target=inheritable_thread_target(ctx.ledger.spark)(attempt),
+            name=f"task-{self.dag_id}.{task.task_id}", daemon=True,
         )
-        fut = pool.submit(task.fn, ctx)
-        try:
-            return fut.result(timeout=task.timeout_s)
-        except FutTimeout:
-            fut.cancel()
+        t.start()
+        t.join(task.timeout_s)
+        if t.is_alive():
+            log.warning(
+                "%s.%s exceeded %ss: attempt abandoned, thread %s (ident %d) "
+                "is still running", self.dag_id, task.task_id, task.timeout_s,
+                t.name, t.ident,
+            )
             raise TimeoutError(
-                f"task {task.task_id} exceeded {task.timeout_s}s"
-            ) from None
-        finally:
-            # don't block on a hung attempt — the worker thread is left to
-            # finish in the background (daemon-adjacent, same as Airflow's
-            # abandoned local task)
-            pool.shutdown(wait=False)
+                f"task {task.task_id} exceeded {task.timeout_s}s; attempt "
+                f"abandoned, thread {t.name} (ident {t.ident}) is still running"
+            )
+        if "error" in out:
+            raise out["error"]
+        return out["result"]
 
     def _downstream(self, tid: str) -> list[str]:
         return [t.task_id for t in self.tasks.values() if tid in t.depends_on]

@@ -69,6 +69,40 @@ def test_read_arrow_refuses_a_table_over_the_bound_before_reading(tmp_path, monk
         txn.read_arrow(path)
 
 
+def test_read_arrow_parses_only_files_it_has_not_seen(spark, tmp_path, monkeypatch):
+    """Parsed files are reused across reads: a repeat read parses none, a
+    read after one append parses exactly the new file, and each read still
+    equals the Spark reader through deletes and a fold."""
+    import pyarrow.parquet as pq
+
+    real, parsed = pq.read_table, []
+
+    def counting(*args, **kwargs):
+        parsed.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(pq, "read_table", counting)
+
+    def parses(path):
+        parsed.clear()
+        got = _arrow_rows(txn.read_arrow(path))
+        assert got == _spark_rows(txn.read(spark, path))
+        return len(parsed)
+
+    path = str(tmp_path / "t")
+    txn.append_rows(path, pa.table({"k": [1, 2], "v": ["a", "b"]}))
+    txn.append_rows(path, pa.table({"k": [3], "v": ["c"]}))
+    assert parses(path) == 2
+    assert parses(path) == 0
+    txn.append_rows(path, pa.table({"k": [4], "v": ["d"]}))
+    assert parses(path) == 1
+    txn.delete_keys_rows(path, pa.table({"k": [1]}), ["k"])
+    assert parses(path) == 1                    # the delete file
+    txn.commit_rows(path, txn.read_arrow(path))  # fold to one file
+    assert parses(path) == 1
+    assert parses(path) == 0
+
+
 def test_read_arrow_of_a_missing_table_raises(tmp_path):
     with pytest.raises(FileNotFoundError):
         txn.read_arrow(str(tmp_path / "nope"))

@@ -301,8 +301,9 @@ def test_content_gate_passes_clean_and_catches_value_rot(spark, tmp_path, sf_dir
     no row-grain exchange; a staged partition whose VALUES rot while
     its ROW COUNT stays intact (the failure row-count reconciliation is
     blind to) must surface as a differing bucket. So must a dropped row:
-    run() keeps this as its only post-load gate, so it has to catch what
-    the row-count check_records test catches."""
+    every stage task runs this gate on the partition it wrote, and run()
+    has no other content check, so it has to catch what the row-count
+    check_records test catches."""
     from airflow_etl_spark.sources import txn
 
     src = SourceConfig(name="erp_c", tables=["region"])
@@ -336,10 +337,61 @@ def test_content_gate_passes_clean_and_catches_value_rot(spark, tmp_path, sf_dir
     assert len(bad) >= 1 and all(r.table_name == "erp_c__region" for r in bad)
 
 
+def test_stage_gate_fails_a_partition_that_differs_from_its_source(
+    spark, tmp_path, sf_dir, monkeypatch
+):
+    """The content gate runs inside each stage task: a staged partition
+    that drops a row fails its stage task (after the retry re-stages it),
+    the vault never loads, and the run fails with an ETL_ERROR email naming
+    the stage task."""
+    from airflow_etl_spark.operators.checks import PipelineStateError
+    from airflow_etl_spark.sources import read_table, txn
+
+    real = txn.replace_partitions
+    writes = []
+
+    def lossy(df, path, *args, **kwargs):
+        if path.endswith("__region"):
+            writes.append(path)
+            df = df.filter(F.col("r_regionkey") != 0)
+        return real(df, path, *args, **kwargs)
+
+    monkeypatch.setattr(txn, "replace_partitions", lossy)
+    src = SourceConfig(name="erp_l", tables=["region", "nation"], entities=[
+        EntityConfig("region", "region", ["r_regionkey"], ["r_name"]),
+    ])
+    p = Pipeline(spark, str(tmp_path / "whl"), [src], sf_dir)
+    p.ledger.seed_dates([("2024-07-02", 0, None, 0)])
+
+    stg = p.staging_dag(src)
+    out, ok = p._run_group(
+        "erp_l", {"staging": stg, "vault": p.vault_dag(src)}, "2024-07-02"
+    )
+    assert not ok and len(writes) == 2          # first attempt + its retry
+    assert out["staging"]["stage__region"] == "failed"
+    assert out["staging"]["stage__nation"] == "success"
+    assert out["staging"]["check_drift"] == "upstream_failed"
+    assert out["vault"] == {"__vault__": "upstream_failed"}
+    assert stg.last_context.errors["stage__region"].startswith(
+        "PipelineStateError: staged partition erp_l__region"
+    )
+    assert not p._exists("raw_vault", "hub_region")
+
+    with pytest.raises(PipelineStateError):
+        p.run("2024-07-02")
+    assert not p._exists("raw_vault", "hub_region")
+    mails = read_table(
+        spark, p._tpath("operational_metadata", "email_notification")
+    ).collect()
+    assert [m.event_type for m in mails] == ["ETL_ERROR"]
+    assert "stage__region" in mails[0].email_body
+    assert "stage__nation" not in mails[0].email_body
+
+
 def test_content_gate_trivially_passes_with_zero_sources(spark, tmp_path, sf_dir):
     """Advisor r11 (low): a pipeline with no sources (or no tables) must
-    pass the post-load content gate trivially — diffs[0] on an empty
-    list used to raise IndexError from inside run()'s success path."""
+    pass the content audit trivially — diffs[0] on an empty list used to
+    raise IndexError (then from inside run()'s success path)."""
     p = Pipeline(spark, str(tmp_path / "wh0"), [], sf_dir)
     out = p.check_content("2024-07-01")
     assert out.count() == 0

@@ -1,7 +1,8 @@
 """End-to-end pipeline lifecycle tests (SURVEY.md §7.3 minimum slice):
 ledger date queue → staged source → drift check → hub/satellite load →
 status rows → latest-status dedup → all-success → date marked success.
-Plus workflow-runner semantics: resume-skip, branch, retry, trigger rules."""
+Plus workflow-runner semantics: resume-skip, branch, retry, trigger rules,
+concurrent ready tasks."""
 
 from __future__ import annotations
 
@@ -208,7 +209,8 @@ def test_vault_minimum_slice(spark, ledger, sf_dir):
     assert sat2.count() == sat.count() + 1
 
 
-def test_task_timeout_fails_attempt(ledger):
+def test_task_timeout_fails_attempt(ledger, caplog):
+    import logging
     import time as _time
 
     from airflow_etl_spark.workflow import DagRunner, Task
@@ -224,9 +226,20 @@ def test_task_timeout_fails_attempt(ledger):
         "t__timeout",
         [Task("slow", fn=slow, timeout_s=0.3)],
     )
-    st = dag.run(ledger, "src_t", "2024-01-09")
+    with caplog.at_level(logging.WARNING, logger="airflow_etl_spark.workflow"):
+        st = dag.run(ledger, "src_t", "2024-01-09")
     assert st == {"slow": "failed"}
     assert len(calls) == 1
+    # the abandoned attempt is visible: its error and the warning name the
+    # thread that is still running it
+    err = dag.last_context.errors["slow"]
+    assert err.startswith("TimeoutError: task slow exceeded 0.3s")
+    assert "abandoned" in err and "still running" in err
+    assert "task-t__timeout.slow" in err
+    assert any(
+        "abandoned" in r.getMessage() and "task-t__timeout.slow" in r.getMessage()
+        for r in caplog.records
+    )
 
     # and a fast task under the same timeout succeeds
     dag2 = DagRunner(
@@ -294,6 +307,91 @@ def test_branch_rerun_reapplies_selection(ledger):
     st2 = build().run(ledger, "src_b", "2024-11-05")
     assert st2 == {"pick": "success", "arm": "success"}  # retried, not skipped
     assert len(attempts) == 2
+
+
+def test_independent_tasks_run_concurrently(ledger):
+    """Two tasks with no dependency between them are in flight at once:
+    each waits on a 2-party barrier, which a serial runner would time
+    out."""
+    import threading
+
+    barrier = threading.Barrier(2, timeout=5)
+
+    def meet(ctx):
+        return barrier.wait()
+
+    dag = DagRunner("t__concurrent", [
+        Task("start"),
+        Task("left", fn=meet, depends_on=["start"]),
+        Task("right", fn=meet, depends_on=["start"]),
+        Task("end", depends_on=["left", "right"]),
+    ])
+    st = dag.run(ledger, "src_p", "2024-02-01")
+    assert st == {"start": "success", "left": "success", "right": "success",
+                  "end": "success"}
+    assert sorted(dag.last_context.results[t] for t in ("left", "right")) == [0, 1]
+
+
+def test_no_task_starts_before_its_upstreams_finish(ledger):
+    """Ready-set order: every task starts after all of its upstreams
+    ended, and the ledger gets exactly one status row per task."""
+    import threading
+    import time as _time
+
+    stamps: dict[str, tuple[float, float]] = {}
+    lock = threading.Lock()
+
+    def work(tid, pause):
+        def fn(ctx):
+            t0 = _time.monotonic()
+            _time.sleep(pause)
+            with lock:
+                stamps[tid] = (t0, _time.monotonic())
+        return fn
+
+    deps = {
+        "a": [], "b": ["a"], "c": ["a"], "d": ["b", "c"], "e": ["b"],
+        "f": [], "g": ["f", "e"],
+    }
+    pauses = {"a": 0.05, "b": 0.2, "c": 0.02, "d": 0.01, "e": 0.05,
+              "f": 0.3, "g": 0.01}
+    dag = DagRunner("t__order", [
+        Task(t, fn=work(t, pauses[t]), depends_on=ds) for t, ds in deps.items()
+    ])
+    st = dag.run(ledger, "src_o", "2024-02-02")
+    assert st == dict.fromkeys(deps, "success")
+    for tid, ds in deps.items():
+        for d in ds:
+            assert stamps[tid][0] >= stamps[d][1], (tid, d)
+
+    rows = [r for r in ledger.rows("status_tasks")
+            if r["run_id"] == dag.last_context.run_id]
+    assert sorted(r["task_id"] for r in rows) == sorted(deps)
+    assert all(r["status"] == "success" for r in rows)
+
+
+def test_staging_dag_with_a_missing_table(spark, tmp_path, sf_dir):
+    """Stage tasks are independent: a missing table fails only its own
+    stage task, its siblings still stage, the drift check (which waits on
+    every stage task) is upstream_failed, and run() still fails."""
+    from airflow_etl_spark.operators.checks import PipelineStateError
+    from airflow_etl_spark.pipeline import Pipeline, SourceConfig
+
+    src = SourceConfig(name="erp_m", tables=["region", "nope", "nation"])
+    p = Pipeline(spark, str(tmp_path / "whm"), [src], sf_dir)
+    p.ledger.seed_dates([("2024-02-03", 0, None, 0)])
+    with pytest.raises(PipelineStateError):
+        p.run("2024-02-03")
+    st = {r["task_id"]: r["status"] for r in p.ledger.rows("status_tasks")
+          if r["dag_id"] == "01__erp_m__staging"}
+    assert st == {
+        "start": "success", "stage__region": "success",
+        "stage__nope": "failed", "stage__nation": "success",
+        "check_drift": "upstream_failed", "notify_drift": "upstream_failed",
+        "end": "success",
+    }
+    assert p._exists("staging", "erp_m__region")
+    assert p._exists("staging", "erp_m__nation")
 
 
 def test_claim_next_date_is_exclusive(spark, tmp_path):
