@@ -119,11 +119,13 @@ class Ledger:
         self.spark = spark
         self.dir = warehouse_dir
         os.makedirs(warehouse_dir, exist_ok=True)
-        # Control-table writes serialize twice over: this in-process lock
-        # keeps the per-source thread fan-out (C2) orderly, and txn's
-        # per-table flock serializes ACROSS processes (two drivers on one
-        # warehouse). The reference gets both from Trino/Iceberg
-        # transactions. Data-plane writes never take either.
+        # Control-table writes serialize on txn's per-table flock, which
+        # holds across processes (two drivers on one warehouse) and across
+        # the threads of one (flock is per open file). This in-process
+        # lock additionally wraps the read-modify-writes that span more
+        # than one txn call (the date queue) and the Spark-side writers.
+        # The reference gets both from Trino/Iceberg transactions.
+        # Data-plane writes never take either.
         self._lock = threading.Lock()
 
     # -- storage helpers ---------------------------------------------------
@@ -163,11 +165,12 @@ class Ledger:
         """Driver-side atomic append — no Spark job. The ledger writes a
         handful of 1-row batches per task; through Spark each costs ~2s of
         job latency (measured), through pyarrow + atomic rename it's
-        milliseconds with identical durability. Control tables only."""
+        milliseconds with identical durability. Control tables only.
+        Only the table's own lock is taken, so appends to different
+        tables never queue on each other."""
         from .sources import txn
 
-        with self._lock:
-            txn.append_rows(self._path(table), arrow_table(rows, schema))
+        txn.append_rows(self._path(table), arrow_table(rows, schema))
 
     def overwrite(self, table: str, df: DataFrame) -> None:
         from .sources import txn

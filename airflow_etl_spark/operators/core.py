@@ -168,11 +168,15 @@ def anti_new(
     """Rows in `source` whose key is absent from `target` — the reference's
     `LEFT JOIN … WHERE t.k IS NULL` new-row detection
     (utlis/etl_manager.py:783-786 et al.), as a left-anti join (no NULL
-    post-filter, no wide join output)."""
+    post-filter, no wide join output). Duplicate keys on the right change
+    nothing, so the right side is deduped only to shrink a broadcast:
+    without one, a `distinct` would be an extra aggregation over the whole
+    target (a hub or link) on every load."""
+    right = target.select(*keys)
+    if broadcast_right:
+        right = right.distinct()
     return source.join(
-        _maybe_broadcast(target.select(*keys).distinct(), broadcast_right),
-        on=list(keys),
-        how="left_anti",
+        _maybe_broadcast(right, broadcast_right), on=list(keys), how="left_anti"
     )
 
 

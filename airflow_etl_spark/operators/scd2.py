@@ -84,7 +84,9 @@ def scd2_delta(
     opened row takes the satellite's non-date columns from the snapshot.
     An identical snapshot gives an empty delta. `satellite=None` (first
     load) opens every snapshot row. The join touches the satellite's open
-    rows only (load_end_date IS NULL): one full-outer join at key grain."""
+    rows only (load_end_date IS NULL): one full-outer join at key grain,
+    and each joined row yields its closed and its opened row through one
+    `explode`, so the satellite and the snapshot are scanned once each."""
     keys = list(keys)
     ld = F.lit(load_date)
     snap_h = snapshot.withColumn("__hd", dv_hash_key(*attr_cols))
@@ -92,36 +94,38 @@ def scd2_delta(
         rest = [c for c in snapshot.columns if c not in (*keys, *attr_cols)]
         cols = [*keys, *attr_cols, load_date_col, load_end_date_col, *rest]
         open_end = F.when(F.lit(False), ld)  # NULL typed like load_date
-        changed = snap_h.alias("s")
     else:
         cols = satellite.columns
         open_end = F.lit(None).cast(satellite.schema[load_end_date_col].dataType)
-        cur_h = satellite.filter(F.col(load_end_date_col).isNull()).withColumn(
-            "__hd", dv_hash_key(*attr_cols)
-        )
-        # null-safe key equality: with plain `on=keys` a NULL-key row never
-        # matches its own snapshot counterpart and gets closed + re-opened
-        # every run even when unchanged (same bug class fixed in
-        # merge.upsert)
-        changed = cur_h.alias("c").join(
-            snap_h.alias("s"),
-            on=[F.col(f"c.{k}").eqNullSafe(F.col(f"s.{k}")) for k in keys],
-            how="full_outer",
-        ).filter(~F.col("c.__hd").eqNullSafe(F.col("s.__hd")))
 
-    opened = changed.filter(F.col("s.__hd").isNotNull()).select(*[
+    opened = [
         ld.alias(c) if c == load_date_col
         else open_end.alias(c) if c == load_end_date_col
         else F.col(f"s.{c}")
         for c in cols
-    ])
+    ]
     if satellite is None:
-        return opened
-    closed = changed.filter(F.col("c.__hd").isNotNull()).select(*[
-        ld.alias(c) if c == load_end_date_col else F.col(f"c.{c}")
+        return snap_h.alias("s").select(*opened)
+    cur_h = satellite.filter(F.col(load_end_date_col).isNull()).withColumn(
+        "__hd", dv_hash_key(*attr_cols)
+    )
+    # null-safe key equality: with plain `on=keys` a NULL-key row never
+    # matches its own snapshot counterpart and gets closed + re-opened
+    # every run even when unchanged (same bug class fixed in merge.upsert)
+    changed = cur_h.alias("c").join(
+        snap_h.alias("s"),
+        on=[F.col(f"c.{k}").eqNullSafe(F.col(f"s.{k}")) for k in keys],
+        how="full_outer",
+    ).filter(~F.col("c.__hd").eqNullSafe(F.col("s.__hd")))
+    closed = [
+        ld.alias(c) if c == load_end_date_col else F.col(f"c.{c}").alias(c)
         for c in cols
-    ])
-    return closed.unionByName(opened)
+    ]
+    # __hd is never NULL on a real row, so a NULL side is the outer join's
+    return changed.select(F.explode(F.array(
+        F.when(F.col("c.__hd").isNotNull(), F.struct(*closed)),
+        F.when(F.col("s.__hd").isNotNull(), F.struct(*opened)),
+    )).alias("__row")).filter(F.col("__row").isNotNull()).select("__row.*")
 
 
 def scd2_apply(

@@ -14,7 +14,9 @@ staging DAG (per source):   start → stage__<table> (one independent task
                             per table, each auditing the partition it wrote
                             against its source) → drift check (branch:
                             notify vs continue) → status rows
-vault DAG (per source):     per-domain hub/link/satellite loads with
+vault DAG (per source):     one task per domain, which loads the domain's
+                            hub, link and satellite models concurrently
+                            (the reference's dbt `DBT_THREADS`), with
                             resume-skip (check_conditions semantics)
 
 Ready tasks of a DAG run concurrently (workflow.MAX_ACTIVE_TASKS).
@@ -26,6 +28,7 @@ finished date is a no-op chain of skips (reference C4).
 
 from __future__ import annotations
 
+import functools
 import os
 from dataclasses import dataclass, field
 
@@ -37,7 +40,7 @@ from .ledger import Ledger
 from .operators import drift
 from .operators.checks import PipelineStateError
 from .sources import parquet_table_exists, read_table
-from .workflow import DagRunner, RunContext, Task, all_green
+from .workflow import DagRunner, RunContext, Task, all_green, run_concurrently
 
 
 @dataclass
@@ -91,6 +94,32 @@ class MultiSourceConfig:
     links: list[LinkConfig] = field(default_factory=list)
 
 
+def _check_vault_writers(sources: list[SourceConfig]) -> None:
+    """Raise ValueError when two per-source models write one raw_vault
+    table. A domain's models load concurrently and so do source groups,
+    and a hub/link append pins the existing table before it takes the
+    table lock: two writers of one hub would both append the same new
+    keys, and two satellite loads would close each other's open rows.
+    Multi-source models run alone, after every source, so they may share
+    a per-source model's table."""
+    writers: dict[str, str] = {}
+
+    def claim(table: str, writer: str) -> None:
+        if table in writers:
+            raise ValueError(
+                f"raw_vault table {table} has two writers: "
+                f"{writers[table]} and {writer}"
+            )
+        writers[table] = writer
+
+    for source in sources:
+        for ent in source.entities:
+            for table in (f"hub_{ent.name}", f"satellite_{ent.name}"):
+                claim(table, f"entity {ent.name} of source {source.name}")
+        for lk in source.links:
+            claim(f"link_{lk.name}", f"link {lk.name} of source {source.name}")
+
+
 class Pipeline:
     def __init__(
         self,
@@ -115,6 +144,7 @@ class Pipeline:
         # failed run publishes nothing — the orchestrator-level Nessie
         # pattern the reference's Airflow-on-Nessie stack implies.
         self.catalog = catalog
+        _check_vault_writers(sources)
         self.ledger = Ledger(spark, os.path.join(warehouse_dir, "operational_metadata"))
         os.makedirs(warehouse_dir, exist_ok=True)
         # The schema registry + schemadrift tables are SHARED across sources;
@@ -257,33 +287,41 @@ class Pipeline:
         )
 
     def load_entity(self, source: SourceConfig, ent: EntityConfig, etl_date: str):
-        """Hub append, then the SCD2 satellite load as ONE merge-on-read
-        upsert (txn.upsert_mor) keyed on (hash key, load_date): the delta
-        (vault.satellite_delta) holds the closed copies of changed/retired
-        open rows, which share the identity of the open rows they replace,
-        and the new open rows. The write is O(changed keys) plus one
-        equality-delete file; no untouched row is rewritten (the Iceberg v2
-        row-level MERGE of the reference's dbt satellites), and compaction
-        folds the pending deletes. An identical snapshot publishes nothing;
-        a first load is the same call on a missing table."""
+        """The hub append and the SCD2 satellite load, run concurrently:
+        each reads only the staged partition and its own vault table. The
+        satellite load is ONE merge-on-read upsert (txn.upsert_mor) keyed
+        on (hash key, load_date): the delta (vault.satellite_delta) holds
+        the closed copies of changed/retired open rows, which share the
+        identity of the open rows they replace, and the new open rows. The
+        write is O(changed keys) plus one equality-delete file; no
+        untouched row is rewritten (the Iceberg v2 row-level MERGE of the
+        reference's dbt satellites), and compaction folds the pending
+        deletes. An identical snapshot publishes nothing; a first load is
+        the same call on a missing table."""
         from .sources import txn
 
         staged = self._read("staging", f"{source.name}__{ent.table}").filter(
             F.col("etl_date") == etl_date
         )
-        self._append_new_keys(
-            f"hub_{ent.name}", vault.load_hub, staged, ent.business_keys,
-            ent.name, etl_date, source.name,
-        )
         sat_name = f"satellite_{ent.name}"
-        delta = vault.satellite_delta(
-            self._vault_table(sat_name), staged, ent.business_keys,
-            ent.attr_cols, ent.name, etl_date, source.name,
-        )
-        txn.upsert_mor(
-            delta, self._tpath("raw_vault", sat_name),
-            [f"{ent.name}_hash_key", "load_date"],
-        )
+
+        def hub():
+            self._append_new_keys(
+                f"hub_{ent.name}", vault.load_hub, staged, ent.business_keys,
+                ent.name, etl_date, source.name,
+            )
+
+        def satellite():
+            delta = vault.satellite_delta(
+                self._vault_table(sat_name), staged, ent.business_keys,
+                ent.attr_cols, ent.name, etl_date, source.name,
+            )
+            txn.upsert_mor(
+                delta, self._tpath("raw_vault", sat_name),
+                [f"{ent.name}_hash_key", "load_date"],
+            )
+
+        run_concurrently(self.spark, [hub, satellite])
 
     def load_link(self, source: SourceConfig, lk: LinkConfig, etl_date: str):
         staged = self._read("staging", f"{source.name}__{lk.table}").filter(
@@ -383,8 +421,12 @@ class Pipeline:
 
     def vault_dag(self, source: SourceConfig) -> DagRunner:
         """Per-domain fan-out (C3): entities/links grouped by domain, each
-        domain an independent chain off start, so domains run
-        concurrently."""
+        domain an independent task off start, so domains run concurrently.
+        A domain task loads all of its models at once (dbt's `threads`
+        inside one `dbt run -s path:models/raw_vault/<domain>`) and fails
+        once every model has finished if any one failed; its retry re-runs
+        them all, which adds nothing for a model that already loaded
+        (appends and upserts are idempotent per date)."""
         tasks: list[Task] = [Task("start")]
         domain_tasks = []
         domains: dict[str, list] = {}
@@ -392,22 +434,25 @@ class Pipeline:
             domains.setdefault(ent.domain, []).append(("entity", ent))
         for lk in source.links:
             domains.setdefault(lk.domain, []).append(("link", lk))
+
+        def load_model(ctx: RunContext, kind: str, cfg) -> None:
+            if kind == "entity":
+                self.load_entity(source, cfg, ctx.etl_date)
+                models = [f"hub_{cfg.name}", f"satellite_{cfg.name}"]
+            else:
+                self.load_link(source, cfg, ctx.etl_date)
+                models = [f"link_{cfg.name}"]
+            for model in models:
+                self._checkpoint(
+                    ctx.run_id, model, "raw_vault", source.name, ctx.etl_date
+                )
+
         for domain, items in sorted(domains.items()):
             def run_domain(ctx: RunContext, items=items):
-                for kind, cfg in items:
-                    if kind == "entity":
-                        self.load_entity(source, cfg, ctx.etl_date)
-                        for model in (f"hub_{cfg.name}", f"satellite_{cfg.name}"):
-                            self._checkpoint(
-                                ctx.run_id, model, "raw_vault", source.name,
-                                ctx.etl_date,
-                            )
-                    else:
-                        self.load_link(source, cfg, ctx.etl_date)
-                        self._checkpoint(
-                            ctx.run_id, f"link_{cfg.name}", "raw_vault",
-                            source.name, ctx.etl_date,
-                        )
+                run_concurrently(self.spark, [
+                    functools.partial(load_model, ctx, kind, cfg)
+                    for kind, cfg in items
+                ])
                 return f"{len(items)} loads"
 
             tid = f"domain__{domain}"
@@ -488,12 +533,14 @@ class Pipeline:
         `max_workers` is the source-group fan-out: `> 1` runs that many
         sources' staging → vault chains at once on a driver thread pool
         (the reference runs ~20 source TaskGroups concurrently, C2; Spark's
-        scheduler is thread-safe and interleaves the jobs). Sources are
-        independent by construction — disjoint staging/vault tables — and
-        the shared ledger serializes its own writes. Tasks inside each DAG
-        run concurrently whatever `max_workers` is. The content gate runs
-        in each stage task (stage_table), so a date is green only when
-        every staged partition reconciled with its source."""
+        scheduler is thread-safe and interleaves the jobs), each source
+        thread carrying the caller's job group and scheduler pool. Sources
+        are independent by construction — disjoint staging/vault tables
+        (`_check_vault_writers`) — and each ledger append takes its own
+        table's lock. Tasks inside each DAG run concurrently whatever
+        `max_workers` is. The content gate runs in each stage task
+        (stage_table), so a date is green only when every staged partition
+        reconciled with its source."""
         if etl_date is None:
             # atomic pick+mark: two drivers draining one queue cannot
             # claim the same date (C4 idempotency across processes)
@@ -512,10 +559,9 @@ class Pipeline:
             if max_workers <= 1:
                 outcomes = [run_source(s) for s in self.sources]
             else:
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(max_workers=max_workers) as pool:
-                    outcomes = list(pool.map(run_source, self.sources))
+                outcomes = run_concurrently(self.spark, [
+                    functools.partial(run_source, s) for s in self.sources
+                ], max_workers)
         except Exception:
             # an unexpected failure (ledger IO, a worker raising) must not
             # leave the date stuck at 'running' — the queue only picks

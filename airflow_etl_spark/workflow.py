@@ -22,6 +22,12 @@ MAX_ACTIVE_TASKS threads (the reference's dbt `threads`; Spark's scheduler
 is thread-safe and the session runs FAIR): a task is submitted once every
 upstream has a final status, so tasks that touch one table must declare a
 dependency between them.
+
+`run_concurrently` is the one fan-out helper for work inside a task or a
+run (a vault domain's models, a root run's source groups): it runs a list
+of callables at once, each thread carrying the caller's Spark local
+properties, waits for every one, and then re-raises the first failure in
+submission order, so nothing is still writing when the caller moves on.
 """
 
 from __future__ import annotations
@@ -42,6 +48,19 @@ log = logging.getLogger(__name__)
 #: most tasks of one DAG run at once (Airflow's default
 #: max_active_tasks_per_dag)
 MAX_ACTIVE_TASKS = 16
+
+
+def run_concurrently(spark, fns: Sequence[Callable[[], object]],
+                     max_workers: int = MAX_ACTIVE_TASKS) -> list:
+    """Run every callable in `fns` at once on a pool of
+    min(len(fns), max_workers) threads and return their results in
+    submission order. Each submit captures its own copy of the caller's
+    Spark local properties (job group, scheduler pool). Every callable
+    runs to its end before the first failure, in submission order, is
+    re-raised."""
+    with ThreadPoolExecutor(max(1, min(len(fns), max_workers))) as pool:
+        futs = [pool.submit(inheritable_thread_target(spark)(fn)) for fn in fns]
+    return [fut.result() for fut in futs]  # the pool has joined every one
 
 
 def all_green(statuses: dict[str, str]) -> bool:

@@ -504,3 +504,79 @@ def test_keyset_pages_are_disjoint_and_ordered(spark, sf_dir):
     for p in (1, 2, 3):
         by_page[p].sort()
     assert by_page[1][-1] < by_page[2][0] < by_page[2][-1] < by_page[3][0]
+
+
+SCD2_SAT = (
+    "k string, a string, b int, load_date string, load_end_date string, "
+    "record_source string"
+)
+
+
+def _scd2_inputs(spark):
+    """A satellite and a snapshot covering every SCD2 case: a NULL key
+    (unchanged), a key with two attribute tuples in the snapshot, and
+    changed, new, retired and unchanged keys, plus a history row."""
+    sat = spark.createDataFrame([
+        (None, "x", 1, "2024-01-01", None, "s0"),
+        ("u", "u", 1, "2024-01-01", None, "s0"),
+        ("c", "c", 1, "2024-01-01", None, "s0"),
+        ("r", "r", 1, "2024-01-01", None, "s0"),
+        ("d", "d", 1, "2024-01-01", None, "s0"),
+        ("h", "old", 1, "2023-12-01", "2024-01-01", "s0"),
+        ("h", "h", 1, "2024-01-01", None, "s0"),
+    ], SCD2_SAT)
+    snap = spark.createDataFrame([
+        (None, "x", 1, "s1"),
+        ("u", "u", 1, "s1"),
+        ("c", "c2", 1, "s1"),
+        ("d", "d", 1, "s1"),
+        ("d", "d2", 2, "s1"),
+        ("h", "h", None, "s1"),
+        ("n", "n", 3, "s1"),
+    ], "k string, a string, b int, record_source string")
+    return sat, snap
+
+
+def test_scd2_delta_rows(spark):
+    """The delta's rows and schema for every SCD2 case; an identical
+    snapshot gives an empty delta."""
+    from airflow_etl_spark.operators.scd2 import scd2_delta
+
+    sat, snap = _scd2_inputs(spark)
+    out = scd2_delta(sat, snap, ["k"], ["a", "b"], "2024-01-02")
+    assert out.schema.simpleString() == sat.schema.simpleString()
+    assert sorted(map(tuple, out.collect()), key=str) == [
+        ("c", "c", 1, "2024-01-01", "2024-01-02", "s0"),
+        ("c", "c2", 1, "2024-01-02", None, "s1"),
+        ("d", "d", 1, "2024-01-01", "2024-01-02", "s0"),
+        ("d", "d2", 2, "2024-01-02", None, "s1"),
+        ("h", "h", 1, "2024-01-01", "2024-01-02", "s0"),
+        ("h", "h", None, "2024-01-02", None, "s1"),
+        ("n", "n", 3, "2024-01-02", None, "s1"),
+        ("r", "r", 1, "2024-01-01", "2024-01-02", "s0"),
+    ]
+    same = sat.filter("load_end_date IS NULL").select("k", "a", "b", "record_source")
+    assert scd2_delta(sat, same, ["k"], ["a", "b"], "2024-01-02").count() == 0
+
+
+def test_hub_append_runs_three_jobs(spark, tmp_path, jobs_of):
+    """A hub delta append over an existing hub runs 3 Spark jobs: the
+    left-anti join takes the hub's keys as they are, with no `distinct`
+    aggregation over the whole hub."""
+    from airflow_etl_spark import vault
+    from airflow_etl_spark.sources import read_table, txn
+
+    path = str(tmp_path / "hub_c")
+    src1 = spark.createDataFrame([(k, f"n{k}") for k in range(50)], "k long, n string")
+    src2 = spark.createDataFrame([(k, f"n{k}") for k in range(40, 60)], "k long, n string")
+    txn.append_files(vault.load_hub(None, src1, ["k"], "c", "d1", "s"), path)
+    hub = read_table(spark, path)
+    _, n_jobs = jobs_of(lambda: txn.append_files(
+        vault.load_hub(hub, src2, ["k"], "c", "d2", "s"), path
+    ))
+    assert n_jobs == 3
+    out = read_table(spark, path)
+    assert out.count() == 60
+    assert rows(out.filter(F.col("load_date") == "d2"), "k") == [
+        (k,) for k in range(50, 60)
+    ]

@@ -489,3 +489,157 @@ def test_restage_same_date_replaces_partition(spark, tmp_path):
         for r in staged.groupBy("etl_date").agg(F.count("*").alias("n")).collect()
     }
     assert counts == {"2024-01-01": 2, "2024-01-02": 2}
+
+
+def _sales_domain(spark, tmp_path, sf_dir, name: str):
+    """A pipeline whose one source has a `02_Sales` domain holding one
+    entity (hub + satellite) and one link."""
+    from airflow_etl_spark.pipeline import (
+        EntityConfig, LinkConfig, Pipeline, SourceConfig,
+    )
+
+    src = SourceConfig(name=name, tables=["orders"], entities=[
+        EntityConfig("order", "orders", ["o_orderkey"], ["o_orderstatus"],
+                     domain="02_Sales"),
+    ], links=[
+        LinkConfig("customer_order", "orders", "customer", ["o_custkey"],
+                   "order", ["o_orderkey"], domain="02_Sales"),
+    ])
+    p = Pipeline(spark, str(tmp_path / f"wh_{name}"), [src], sf_dir)
+    p.ledger.seed_dates([("2024-03-01", 0, None, 0)])
+    return p
+
+
+def test_domain_models_load_concurrently(spark, tmp_path, sf_dir, monkeypatch):
+    """A domain task loads its models at once: the hub append, the
+    satellite upsert and the link append each wait on a 3-party barrier,
+    which a serial domain would time out."""
+    import threading
+
+    from airflow_etl_spark.sources import read_table, txn
+
+    p = _sales_domain(spark, tmp_path, sf_dir, "erp_cc")
+    barrier = threading.Barrier(3, timeout=5)
+    met: list[str] = []
+    append, upsert = p._append_new_keys, txn.upsert_mor
+
+    def append_at_barrier(table, *args):
+        met.append(table)
+        barrier.wait()
+        return append(table, *args)
+
+    def upsert_at_barrier(df, path, *args, **kwargs):
+        met.append(path.rsplit("/", 1)[-1])
+        barrier.wait()
+        return upsert(df, path, *args, **kwargs)
+
+    monkeypatch.setattr(p, "_append_new_keys", append_at_barrier)
+    monkeypatch.setattr(txn, "upsert_mor", upsert_at_barrier)
+    out = p.run("2024-03-01")
+    assert out["erp_cc"]["vault"]["domain__02_Sales"] == "success"
+    assert sorted(met) == ["hub_order", "link_customer_order", "satellite_order"]
+    n_orders = spark.read.parquet(f"{sf_dir}/orders.parquet").count()
+    for table in ("hub_order", "satellite_order", "link_customer_order"):
+        assert read_table(spark, p._tpath("raw_vault", table)).count() == n_orders
+    models = sorted(r["name"] for r in p.ledger.rows("checkpoints")
+                    if r["schema_name"] == "raw_vault")
+    assert models == ["hub_order", "link_customer_order", "satellite_order"]
+
+
+def test_failed_model_lets_its_domain_siblings_finish(
+    spark, tmp_path, sf_dir, monkeypatch
+):
+    """A link load that always raises fails its domain task after the
+    retry, but only once every sibling model has finished: the entity,
+    which waits for the link to fail before it loads, still writes its
+    hub, satellite and checkpoint rows. The run fails and the ETL_ERROR
+    email names the domain task."""
+    import threading
+
+    from airflow_etl_spark.operators.checks import PipelineStateError
+    from airflow_etl_spark.sources import read_table
+
+    p = _sales_domain(spark, tmp_path, sf_dir, "erp_lf")
+    link_failed = threading.Event()
+    load_entity = p.load_entity
+
+    def broken_link(*args):
+        link_failed.set()
+        raise RuntimeError("link load broke")
+
+    def entity_after_link_failure(*args):
+        assert link_failed.wait(5), "the link load never ran"
+        return load_entity(*args)
+
+    monkeypatch.setattr(p, "load_link", broken_link)
+    monkeypatch.setattr(p, "load_entity", entity_after_link_failure)
+    with pytest.raises(PipelineStateError):
+        p.run("2024-03-01")
+
+    st = [r["status"] for r in p.ledger.rows("status_tasks")
+          if r["task_id"] == "domain__02_Sales"]
+    assert st == ["failed"]
+    n_orders = spark.read.parquet(f"{sf_dir}/orders.parquet").count()
+    for table in ("hub_order", "satellite_order"):
+        assert read_table(spark, p._tpath("raw_vault", table)).count() == n_orders
+    assert not p._exists("raw_vault", "link_customer_order")
+    models = {r["name"] for r in p.ledger.rows("checkpoints")
+              if r["schema_name"] == "raw_vault"}
+    assert models == {"hub_order", "satellite_order"}
+    mails = read_table(
+        spark, p._tpath("operational_metadata", "email_notification")
+    ).collect()
+    assert [m.event_type for m in mails] == ["ETL_ERROR"]
+    assert "domain__02_Sales" in mails[0].email_body
+
+
+def test_two_writers_of_one_vault_table_are_rejected(spark, tmp_path, sf_dir):
+    """Models of one domain and source groups load concurrently, so two
+    per-source models may not write one raw_vault table; a multi-source
+    model may share a per-source model's table (it runs alone, after every
+    source)."""
+    from airflow_etl_spark.pipeline import (
+        EntityConfig, LinkConfig, MultiSourceConfig, Pipeline, SourceConfig,
+    )
+
+    region = EntityConfig("region", "region", ["r_regionkey"], ["r_name"])
+    link = LinkConfig("region_nation", "nation", "region", ["n_regionkey"],
+                      "nation", ["n_nationkey"])
+    wh = str(tmp_path / "wh2")
+    with pytest.raises(ValueError, match="hub_region has two writers: "
+                       "entity region of source a and entity region of source b"):
+        Pipeline(spark, wh, [SourceConfig("a", ["region"], entities=[region]),
+                             SourceConfig("b", ["region"], entities=[region])],
+                 sf_dir)
+    with pytest.raises(ValueError, match="link_region_nation has two writers"):
+        Pipeline(spark, wh, [SourceConfig("a", ["nation"], links=[link]),
+                             SourceConfig("b", ["nation"], links=[link])],
+                 sf_dir)
+    Pipeline(spark, wh, [SourceConfig("a", ["region"], entities=[region])],
+             sf_dir, multi=MultiSourceConfig(["a"], entities=[region]))
+
+
+def test_control_appends_queue_only_on_their_own_table(ledger):
+    """A ledger append waits for its own table's lock only: while another
+    holder has status_tasks locked, a status append blocks, and a
+    checkpoint append from a third thread completes meanwhile."""
+    import threading
+    import time as _time
+
+    from airflow_etl_spark.sources import txn
+
+    with txn.table_lock(ledger._path("status_tasks")):
+        status = threading.Thread(target=ledger.save_task_status, args=(
+            "r1", "src_l", "dag", "t", "success", "2024-01-03"))
+        status.start()
+        _time.sleep(0.5)  # let it reach the held lock
+        checkpoint = threading.Thread(target=ledger.save_checkpoint, args=(
+            "r1", "m", "raw_vault", "src_l", "success", "2024-01-03"))
+        checkpoint.start()
+        checkpoint.join(10)
+        assert not checkpoint.is_alive()
+        assert status.is_alive()
+    status.join(10)
+    assert not status.is_alive()
+    assert [r["task_id"] for r in ledger.rows("status_tasks")] == ["t"]
+    assert [r["name"] for r in ledger.rows("checkpoints")] == ["m"]

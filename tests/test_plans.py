@@ -1071,3 +1071,22 @@ def test_bcast_dim_respects_budget(spark, sf_dir, monkeypatch):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
         catalog._ROW_COUNTS.clear()
+
+
+def test_scd2_delta_plans_one_join(spark):
+    """The SCD2 delta is one full-outer join of the open rows and the
+    snapshot: the closed and the opened rows come out of the same joined
+    row, not from a second join."""
+    import re
+
+    from airflow_etl_spark.operators.scd2 import scd2_delta
+
+    sat = spark.createDataFrame(
+        [("e1", "A", "d1", None), ("e2", "X", "d1", None)],
+        "k string, attr string, load_date string, load_end_date string",
+    )
+    snap = spark.createDataFrame([("e1", "B"), ("e3", "N")], "k string, attr string")
+    out = scd2_delta(sat, snap, ["k"], ["attr"], "d2")
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert len(re.findall(r"\bJoin \w+", plan)) == 1, plan
+    assert "Join FullOuter" in plan
