@@ -14,19 +14,26 @@ compacted would retain the wrong files.
 Here each DAG is a workflow.DagRunner over the maintenance operators; the
 gate reads the engine's own run ledger (the analog of the reference
 querying its status table by `date_format(created_at,'%Y-%m')` — the P6
-month-bucket predicate).
+month-bucket predicate). Per-table maintenance fans out through
+`workflow.run_concurrently`, `max_workers` tables at a time (default
+`workflow.MAX_ACTIVE_TASKS`; the reference runs 10 concurrent `optimize`
+calls), and the GC and retention plans are driver-side file listings
+that launch no Spark job.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 from collections.abc import Callable
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import SparkSession
 
 from .ledger import Ledger
 from .operators import maintenance
-from .workflow import DagRunner, RunContext, Task
+from .workflow import (
+    MAX_ACTIVE_TASKS, DagRunner, RunContext, Task, run_concurrently,
+)
 
 DATA_DAG_ID = "04__housekeeping__data"
 META_DAG_ID = "05__housekeeping__metadata"
@@ -87,7 +94,7 @@ def data_housekeeping_dag(
     table_paths: list[str],
     target_file_bytes: int = 500 * 1024 * 1024,
     sleep_fn: Callable[[float], None] | None = None,
-    max_workers: int = 1,
+    max_workers: int = MAX_ACTIVE_TASKS,
     catalog=None,
     matview_root: str | None = None,
 ) -> DagRunner:
@@ -96,10 +103,13 @@ def data_housekeeping_dag(
     optimize(file_size_threshold => '500MB')` per table,
     clean_data.py:35-99). Compaction commits through the atomic
     manifest-pointer protocol (sources.txn) — a crash mid-compact leaves
-    every table readable. `max_workers > 1` fans tables out over a driver
-    thread pool (the reference runs 10 concurrent optimize calls,
-    clean_data.py:89-93; Spark's scheduler interleaves the rewrite jobs,
-    and per-table locks keep commits independent).
+    every table readable. Tables compact concurrently, at most
+    `max_workers` at a time (the reference runs 10 concurrent optimize
+    calls, clean_data.py:89-93; Spark's scheduler interleaves the rewrite
+    jobs, and per-table locks keep commits independent). Every table
+    finishes before a failure fails the task; its retry re-runs every
+    table, and one the failed attempt compacted is then usually a no-op
+    (see maintenance.compact's skip rule).
 
     `catalog` (a sources.catalog_txn.WarehouseCatalog, optional): when
     the warehouse has a catalog, a `sync_catalog_pins` task runs BEFORE
@@ -137,17 +147,10 @@ def data_housekeeping_dag(
         return f"pins synced for {len(catalog.pinned_versions())} tables"
 
     def compact_all(ctx: RunContext) -> str:
-        if max_workers <= 1:
-            for p in table_paths:
-                maintenance.compact(spark, p, target_file_bytes)
-        else:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=max_workers) as pool:
-                list(pool.map(
-                    lambda p: maintenance.compact(spark, p, target_file_bytes),
-                    table_paths,
-                ))
+        run_concurrently(spark, [
+            functools.partial(maintenance.compact, spark, p, target_file_bytes)
+            for p in table_paths
+        ], max_workers)
         return f"compacted {len(table_paths)} tables"
 
     # linear chain: start -> [sync_catalog_pins] -> [refresh_matviews]
@@ -196,17 +199,19 @@ def mor_maintenance_dag(
     (metadata-only) and rewrites ONLY tables whose delete pressure
     crossed the threshold, so the steady-state cost is O(busy tables),
     not O(owned tables) — the reference's scheduled `optimize` analog
-    (utlis/clean_data.py:49) specialized to delete-file pressure."""
+    (utlis/clean_data.py:49) specialized to delete-file pressure. Tables
+    are swept concurrently, `workflow.MAX_ACTIVE_TASKS` at a time, like
+    the data DAG's compaction."""
 
     def fold_all(ctx: RunContext) -> str:
-        compacted = [
-            p
-            for p in table_paths
-            if maintenance.compact_if_delete_pressure(
-                spark, p, max_delete_files, max_read_groups, target_file_bytes
+        folded = run_concurrently(spark, [
+            functools.partial(
+                maintenance.compact_if_delete_pressure, spark, p,
+                max_delete_files, max_read_groups, target_file_bytes,
             )
-        ]
-        return f"folded deletes on {len(compacted)}/{len(table_paths)} tables"
+            for p in table_paths
+        ])
+        return f"folded deletes on {sum(folded)}/{len(table_paths)} tables"
 
     tasks = [
         Task("start"),
@@ -239,16 +244,19 @@ def unused_file_dag(
     table created by a concurrent pipeline run after `live_paths` was
     assembled must not be deleted as orphan (ADVICE r2 — the reference's
     age-based `retention_threshold` serves the same purpose)."""
-    from .operators import maintenance
     from .sources.fs import LocalFS
 
     the_fs = fs or LocalFS()
 
+    def orphans() -> list[str]:
+        # a driver-side listing: a DataFrame of it would cost a Spark job
+        # and a Python worker pool to collect
+        return [p for p, _n in maintenance.orphan_rows(
+            root, live_paths, fs=the_fs, min_age_s=grace_s
+        )]
+
     def plan_gc(ctx: RunContext):
-        plan = maintenance.orphan_files(
-            spark, root, live_paths, fs=the_fs, min_age_s=grace_s
-        )
-        paths = [r.path for r in plan.collect()]
+        paths = orphans()
         ctx.results["gc_plan"] = paths
         return f"{len(paths)} orphan files"
 
@@ -258,10 +266,7 @@ def unused_file_dag(
             # plan task resume-skipped on a re-run → recompute (the plan
             # is cheap and idempotent; silently deleting nothing would
             # report success for work never done)
-            plan = maintenance.orphan_files(
-                spark, root, live_paths, fs=the_fs, min_age_s=grace_s
-            )
-            paths = [r.path for r in plan.collect()]
+            paths = orphans()
         if dry_run:
             return f"dry run: would delete {len(paths)} files"
         n = sum(1 for p in paths if the_fs.delete(p))
@@ -304,9 +309,9 @@ def metadata_housekeeping_dag(
         return "end"
 
     def run_retention(ctx: RunContext) -> str:
-        plan = maintenance.retention_plan(spark, root, cutoff_epoch_s)
-        n_delete = plan.filter(F.col("action") == "delete").count()
-        ctx.results["retention_rows"] = plan.count()
+        plan = maintenance.retention_rows(root, cutoff_epoch_s)
+        ctx.results["retention_rows"] = len(plan)
+        n_delete = sum(action == "delete" for _p, action in plan)
         return f"{n_delete} files planned for deletion"
 
     tasks = [

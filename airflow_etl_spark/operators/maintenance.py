@@ -9,12 +9,16 @@ equivalents are:
 
 - `compact`: rewrite a parquet directory into ~target-sized files
   (coalesce to ceil(bytes/target); no shuffle).
-- `orphan_files`: files under a root not referenced by the live table set.
-- `retention_plan`: per-directory keep/delete split by mtime cutoff with
-  the reference's "always keep the latest" guard.
+- `orphan_rows` / `orphan_files`: files under a root not referenced by
+  the live table set.
+- `retention_rows` / `retention_plan`: per-directory keep/delete split by
+  mtime cutoff with the reference's "always keep the latest" guard.
 
-All destructive steps return a *plan* DataFrame; the caller commits it
-(mirrors the reference's generate-then-execute housekeeping style).
+Destructive steps are planned first and committed by the caller (the
+reference's generate-then-execute housekeeping style). A plan is a
+driver-side listing: `orphan_rows` and `retention_rows` return it as a
+Python list, and `orphan_files` / `retention_plan` wrap the same rows in
+a DataFrame for SQL consumers.
 """
 
 from __future__ import annotations
@@ -38,6 +42,14 @@ def compact(
     live, never a missing table. A legacy plain dir is migrated to the
     manifest layout by its first compaction (read it back with
     sources.read_table).
+
+    A versioned table whose rewrite would reproduce its own files is left
+    as it is: no pending deletes, no declared `sort_order`, and one file
+    per partition (or, unpartitioned, one file where one is the target).
+    Nothing is written or published, and the target count is returned —
+    Iceberg's `rewrite_data_files` likewise skips a file group that is
+    already one file with no deletes. A declared order still rewrites a
+    single file, since `rewrite_small_files` can leave it unsorted.
 
     A COW-partitioned table (txn.replace_partitions layout) keeps its
     partitioning: files are re-clustered per partition value via
@@ -65,6 +77,8 @@ def compact(
         )
         n_files = max(1, math.ceil(total / target_file_bytes))
         pcol = m.get("partition_by")
+        if m and _already_compact(m, n_files):
+            return n_files
         if pcol is None:
             df = (
                 txn._read_with_deletes(spark, path, m) if m
@@ -114,6 +128,18 @@ def compact(
             partition_in_data=in_data,
         )
         return n_files
+
+
+def _already_compact(m: dict, n_files: int) -> bool:
+    """`compact`'s skip rule over the live manifest `m`: a rewrite would
+    write back the very files it read."""
+    if m.get("deletes") or m.get("sort_order"):
+        return False
+    files = m["files"]
+    if m.get("partition_by") is None:
+        return len(files) == 1 and n_files == 1
+    parts = [e.get("partition") for e in files]
+    return None not in parts and len(set(parts)) == len(parts)
 
 
 def rewrite_small_files(
@@ -183,10 +209,20 @@ def orphan_files(
     spark: SparkSession, root: str, live_paths: list[str], fs=None,
     min_age_s: float = 0.0,
 ) -> DataFrame:
-    """Files under `root` not contained in any live table path — the
-    unused-file GC input (utlis/clean_metadata.py:498-528). Listing is
-    driver-side (metadata op, not data) through the FS abstraction
-    (sources.fs): LocalFS by default, HadoopFS for object stores.
+    """`orphan_rows` as a (path, n_bytes) DataFrame."""
+    return spark.createDataFrame(
+        orphan_rows(root, live_paths, fs, min_age_s), "path string, n_bytes long"
+    )
+
+
+def orphan_rows(
+    root: str, live_paths: list[str], fs=None, min_age_s: float = 0.0,
+) -> list[tuple[str, int]]:
+    """(path, n_bytes) of every file under `root` not contained in any
+    live table path — the unused-file GC input
+    (utlis/clean_metadata.py:498-528). Listing is driver-side (metadata
+    op, not data) through the FS abstraction (sources.fs): LocalFS by
+    default, HadoopFS for object stores.
 
     `min_age_s` is the retention grace: files younger than it are never
     reported (mirrors the reference's `retention_threshold => '30d'`
@@ -211,16 +247,25 @@ def orphan_files(
         fp = fs.resolve(fp_raw)
         if not any(fp.startswith(lp) for lp in live):
             rows.append((fp, n_bytes))
-    return spark.createDataFrame(rows or [], "path string, n_bytes long")
+    return rows
 
 
 def retention_plan(
     spark: SparkSession, root: str, cutoff_epoch_s: float, fs=None
 ) -> DataFrame:
-    """Keep/delete plan by mtime: delete files older than the cutoff, but
-    always keep the newest file per directory (the reference keeps the
-    latest metadata set even when stale, utlis/clean_metadata.py:326-394).
-    FS-agnostic through sources.fs."""
+    """`retention_rows` as a (path, action) DataFrame."""
+    return spark.createDataFrame(
+        retention_rows(root, cutoff_epoch_s, fs), "path string, action string"
+    )
+
+
+def retention_rows(
+    root: str, cutoff_epoch_s: float, fs=None
+) -> list[tuple[str, str]]:
+    """(path, "keep" | "delete") rows by mtime: delete files older than
+    the cutoff, but always keep the newest file per directory (the
+    reference keeps the latest metadata set even when stale,
+    utlis/clean_metadata.py:326-394). FS-agnostic through sources.fs."""
     from ..sources.fs import LocalFS
 
     by_dir: dict[str, list[tuple[str, float]]] = {}
@@ -233,7 +278,7 @@ def retention_plan(
         for fp, mt in files:
             action = "keep" if (mt >= cutoff_epoch_s or fp == newest) else "delete"
             rows.append((fp, action))
-    return spark.createDataFrame(rows or [], "path string, action string")
+    return rows
 
 
 def expire_snapshots(path: str, keep_versions: int = 2, fs=None) -> dict:

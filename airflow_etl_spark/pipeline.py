@@ -425,8 +425,9 @@ class Pipeline:
         A domain task loads all of its models at once (dbt's `threads`
         inside one `dbt run -s path:models/raw_vault/<domain>`) and fails
         once every model has finished if any one failed; its retry re-runs
-        them all, which adds nothing for a model that already loaded
-        (appends and upserts are idempotent per date)."""
+        only the models that have not loaded in this DAG run (the run
+        context records each loaded one), so no model is loaded or
+        checkpointed twice."""
         tasks: list[Task] = [Task("start")]
         domain_tasks = []
         domains: dict[str, list] = {}
@@ -435,7 +436,7 @@ class Pipeline:
         for lk in source.links:
             domains.setdefault(lk.domain, []).append(("link", lk))
 
-        def load_model(ctx: RunContext, kind: str, cfg) -> None:
+        def load_model(ctx: RunContext, loaded: set, kind: str, cfg) -> None:
             if kind == "entity":
                 self.load_entity(source, cfg, ctx.etl_date)
                 models = [f"hub_{cfg.name}", f"satellite_{cfg.name}"]
@@ -446,16 +447,19 @@ class Pipeline:
                 self._checkpoint(
                     ctx.run_id, model, "raw_vault", source.name, ctx.etl_date
                 )
+            loaded.add((kind, cfg.name))
 
         for domain, items in sorted(domains.items()):
-            def run_domain(ctx: RunContext, items=items):
+            tid = f"domain__{domain}"
+
+            def run_domain(ctx: RunContext, items=items, tid=tid):
+                loaded = ctx.results.setdefault(f"{tid}.loaded", set())
                 run_concurrently(self.spark, [
-                    functools.partial(load_model, ctx, kind, cfg)
-                    for kind, cfg in items
+                    functools.partial(load_model, ctx, loaded, kind, cfg)
+                    for kind, cfg in items if (kind, cfg.name) not in loaded
                 ])
                 return f"{len(items)} loads"
 
-            tid = f"domain__{domain}"
             tasks.append(Task(tid, fn=run_domain, depends_on=["start"], retries=1))
             domain_tasks.append(tid)
         tasks.append(Task("end", depends_on=domain_tasks or ["start"]))

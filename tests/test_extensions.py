@@ -167,6 +167,75 @@ def test_compact_and_orphans(spark, tmp_path):
     assert [r.path for r in orphans.collect()] == [str(tmp_path / "stray.bin")]
 
 
+def _compact_state(path):
+    """What a compaction that changes nothing must leave as it is: the
+    live version, its manifest and the `_data` listing."""
+    import os
+
+    from airflow_etl_spark.sources import txn
+
+    return (
+        txn._read_pointer(path), txn.live_manifest(path),
+        sorted(os.listdir(os.path.join(path, "_data"))),
+    )
+
+
+def test_compact_skips_a_one_file_table(spark, tmp_path, jobs_of):
+    """One file, no pending delete, no declared order: the rewrite would
+    reproduce the file, so compaction writes and publishes nothing."""
+    from airflow_etl_spark.sources import txn
+
+    tbl = str(tmp_path / "one_file")
+    txn.commit(spark.range(50).withColumn("v", F.col("id") * 2).coalesce(1), tbl)
+    before = _compact_state(tbl)
+    assert len(before[1]["files"]) == 1
+    n, jobs = jobs_of(lambda: maintenance.compact(spark, tbl, 10 ** 9))
+    assert (n, jobs) == (1, 0)
+    assert _compact_state(tbl) == before
+
+
+def test_compact_skips_one_file_per_partition(spark, tmp_path, jobs_of):
+    from airflow_etl_spark.sources import txn
+
+    tbl = str(tmp_path / "one_per_part")
+    df = spark.range(60).withColumn("b", F.col("id") % 3)
+    txn.replace_partitions(df.repartition("b"), tbl, "b")
+    before = _compact_state(tbl)
+    assert sorted(e["partition"] for e in before[1]["files"]) == ["0", "1", "2"]
+    _, jobs = jobs_of(lambda: maintenance.compact(spark, tbl, 10 ** 9))
+    assert jobs == 0
+    assert _compact_state(tbl) == before
+
+
+@pytest.mark.parametrize("case", ["pending_delete", "range_order", "legacy_dir"])
+def test_compact_still_rewrites_one_file(spark, tmp_path, case):
+    """A one-file table is rewritten when the rewrite changes something:
+    it folds a pending delete, restores a declared sort order (an
+    incremental rewrite may have left the file unsorted), or migrates a
+    legacy plain dir to the manifest layout."""
+    from airflow_etl_spark.sources import read_table, txn
+
+    tbl = str(tmp_path / case)
+    df = spark.range(50).withColumn("v", F.col("id") * 2).coalesce(1)
+    expect = list(range(50))
+    if case == "legacy_dir":
+        df.write.parquet(tbl)
+    elif case == "range_order":
+        txn.commit(df, tbl, cluster_by="id", cluster_partitions=1)
+    else:
+        txn.commit(df, tbl)
+        txn.delete_keys(spark.createDataFrame([(7,)], "id long"), tbl, ["id"])
+        expect.remove(7)
+    ver = txn._read_pointer(tbl)
+    assert maintenance.compact(spark, tbl, 10 ** 9) == 1
+    m = txn.live_manifest(tbl)
+    assert txn._read_pointer(tbl) != ver
+    assert len(m["files"]) == 1 and not m.get("deletes")
+    if case == "range_order":
+        assert m["sort_order"] == {"kind": "range", "cols": ["id"]}
+    assert sorted(r.id for r in read_table(spark, tbl).collect()) == expect
+
+
 def test_yaml_and_dir_sources(spark, tmp_path):
     d = tmp_path / "models" / "01_Customer_Relationship"
     d.mkdir(parents=True)

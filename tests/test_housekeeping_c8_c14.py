@@ -145,6 +145,121 @@ def test_parallel_compaction_fanout(spark, tmp_path):
         assert got == list(range(i * 100, i * 100 + 200))
 
 
+def _legacy_tables(spark, tmp_path, n):
+    tbls = []
+    for i in range(n):
+        p = str(tmp_path / f"cc_tbl{i}")
+        spark.range(i * 100, i * 100 + 100).repartition(3).write.parquet(p)
+        tbls.append(p)
+    return tbls
+
+
+def test_tables_compact_concurrently(spark, tmp_path, monkeypatch):
+    """The default data DAG compacts its tables at once: two tables'
+    compactions meet on a 2-party barrier, which a serial loop would time
+    out."""
+    import threading
+
+    from airflow_etl_spark.operators import maintenance
+    from airflow_etl_spark.sources import txn
+
+    tbls = _legacy_tables(spark, tmp_path, 2)
+    barrier = threading.Barrier(2, timeout=5)
+    compact = maintenance.compact
+
+    def compact_at_barrier(*args, **kwargs):
+        barrier.wait()
+        return compact(*args, **kwargs)
+
+    monkeypatch.setattr(maintenance, "compact", compact_at_barrier)
+    dag = hk.data_housekeeping_dag(spark, tbls, target_file_bytes=10 ** 9)
+    st = dag.run(Ledger(spark, str(tmp_path / "cc_lg")), "housekeeping", "2024-04-01")
+    assert st[hk.DATA_TASK_ID] == "success"
+    for i, p in enumerate(tbls):
+        assert len(txn.data_files(p)) == 1
+        got = sorted(r.id for r in read_table(spark, p).collect())
+        assert got == list(range(i * 100, i * 100 + 100))
+
+
+def test_failed_table_lets_the_others_compact(spark, tmp_path, monkeypatch):
+    """A table whose compaction raises fails the task after its retry, but
+    every other table is compacted; on the retry those are already compact
+    and publish no second version."""
+    from airflow_etl_spark.operators import maintenance
+    from airflow_etl_spark.sources import txn
+
+    tbls = _legacy_tables(spark, tmp_path, 3)
+    bad = tbls[0]
+    calls: list[str] = []
+    compact = maintenance.compact
+
+    def compact_or_raise(spark_, path, *args, **kwargs):
+        calls.append(path)
+        if path == bad:
+            raise RuntimeError("compaction broke")
+        return compact(spark_, path, *args, **kwargs)
+
+    monkeypatch.setattr(maintenance, "compact", compact_or_raise)
+    dag = hk.data_housekeeping_dag(spark, tbls, target_file_bytes=10 ** 9)
+    st = dag.run(Ledger(spark, str(tmp_path / "cf_lg")), "housekeeping", "2024-04-01")
+    assert st[hk.DATA_TASK_ID] == "failed"
+    assert "compaction broke" in dag.last_context.errors[hk.DATA_TASK_ID]
+    assert sorted(calls) == sorted(tbls * 2)  # each attempt ran every table
+    assert txn._read_pointer(bad) is None  # still the legacy dir
+    for p in tbls[1:]:
+        assert len(txn.data_files(p)) == 1
+        assert len(txn._list_versions(p)) == 1
+
+
+def test_gc_dag_deletes_orphans_without_spark_jobs(spark, tmp_path, jobs_of):
+    """Planning and executing the unused-file GC is a driver-side listing
+    and deletes: 0 Spark jobs, and exactly the orphans are removed."""
+    root = tmp_path / "gc0_root"
+    live = root / "live_tbl"
+    live.mkdir(parents=True)
+    (live / "part-0.parquet").write_bytes(b"L" * 10)
+    orphans = [root / "junk_a.tmp", root / "dead_dir" / "junk_b.parquet"]
+    orphans[1].parent.mkdir()
+    for f in orphans:
+        f.write_bytes(b"J" * 4)
+
+    ledger = Ledger(spark, str(tmp_path / "gc0_lg"))
+    dag = hk.unused_file_dag(
+        spark, str(root), [str(live)], dry_run=False, grace_s=0.0
+    )
+    st, jobs = jobs_of(lambda: dag.run(ledger, "housekeeping", "2024-05-01"))
+    assert jobs == 0
+    assert (st["plan_gc"], st["execute_gc"]) == ("success", "success")
+    assert sorted(dag.last_context.results["gc_plan"]) == sorted(
+        str(f) for f in orphans
+    )
+    assert not any(f.exists() for f in orphans)
+    assert (live / "part-0.parquet").exists()
+
+
+def test_retention_plan_task_runs_without_spark_jobs(spark, tmp_path, jobs_of):
+    """The gated retention task plans off a driver-side listing (0 Spark
+    jobs) and counts the same rows `maintenance.retention_plan` returns."""
+    import time
+
+    from airflow_etl_spark.operators import maintenance
+
+    ledger = Ledger(spark, str(tmp_path / "lg_rt"))
+    tbl = _run_data_dag(spark, ledger, tmp_path)
+    cutoff = time.time() + 3600  # every file is stale; the newest per dir stays
+    meta = hk.metadata_housekeeping_dag(spark, ledger, tbl, cutoff_epoch_s=cutoff)
+    st, jobs = jobs_of(lambda: meta.run(ledger, "housekeeping", "2024-03-15"))
+    assert jobs == 0
+    assert st["retention_plan"] == "success"
+    plan = maintenance.retention_plan(spark, tbl, cutoff).collect()
+    n_delete = sum(r.action == "delete" for r in plan)
+    assert n_delete > 0
+    assert meta.last_context.results["retention_rows"] == len(plan)
+    assert meta.last_context.results["retention_plan"] == (
+        f"{n_delete} files planned for deletion"
+    )
+
+
 def test_unused_file_gc_dag(spark, tmp_path):
     """The third C13 DAG: orphan plan → execute deletes through the FS
     abstraction; dry_run leaves everything, real run removes exactly the

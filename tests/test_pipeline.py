@@ -593,6 +593,48 @@ def test_failed_model_lets_its_domain_siblings_finish(
     assert "domain__02_Sales" in mails[0].email_body
 
 
+def test_domain_retry_reloads_only_unloaded_models(
+    spark, tmp_path, sf_dir, monkeypatch
+):
+    """A link load that raises on its first attempt only: the domain's
+    retry loads the link and leaves the entity, which loaded in the failed
+    attempt, alone. Every model ends with exactly one checkpoint row for
+    the date, so completion roll-ups count each model once."""
+    from collections import Counter
+
+    from airflow_etl_spark.sources import read_table
+
+    p = _sales_domain(spark, tmp_path, sf_dir, "erp_rt")
+    link_calls, entity_calls = [], []
+    load_link, load_entity = p.load_link, p.load_entity
+
+    def link_fails_once(*args):
+        link_calls.append(args)
+        if len(link_calls) == 1:
+            raise RuntimeError("first link load broke")
+        return load_link(*args)
+
+    def counted_entity(*args):
+        entity_calls.append(args)
+        return load_entity(*args)
+
+    monkeypatch.setattr(p, "load_link", link_fails_once)
+    monkeypatch.setattr(p, "load_entity", counted_entity)
+    out = p.run("2024-03-01")
+    assert out["erp_rt"]["vault"]["domain__02_Sales"] == "success"
+    assert (len(link_calls), len(entity_calls)) == (2, 1)
+    n_orders = spark.read.parquet(f"{sf_dir}/orders.parquet").count()
+    for table in ("hub_order", "satellite_order", "link_customer_order"):
+        assert read_table(spark, p._tpath("raw_vault", table)).count() == n_orders
+    counts = Counter(
+        r["name"] for r in p.ledger.rows("checkpoints")
+        if r["schema_name"] == "raw_vault" and r["etl_date"] == "2024-03-01"
+    )
+    assert counts == {
+        "hub_order": 1, "satellite_order": 1, "link_customer_order": 1,
+    }
+
+
 def test_two_writers_of_one_vault_table_are_rejected(spark, tmp_path, sf_dir):
     """Models of one domain and source groups load concurrently, so two
     per-source models may not write one raw_vault table; a multi-source
